@@ -177,8 +177,9 @@ class Graph:
         #: philosophy's answer to storing an assignment column
         self.vector_indexes: list[dict] = []
         #: when set, every committed write persists here (the analog of
-        #: the reference's heap-table durability; WriteRunner calls
-        #: persist() after each commit)
+        #: the reference's heap-table durability): created rows through
+        #: append_rows -> persist_append, SET/DELETE through
+        #: persist_partitions
         self.durable_path: str | None = None
         #: current snapshot subdirectory (``snap-N``) under durable_path;
         #: None = legacy flat layout (tables at durable_path/{vertices,edges})
@@ -440,7 +441,7 @@ class Graph:
         new-vertices/old-edges mix). Superseded snapshot directories are
         garbage-collected after the commit (and opportunistically on the
         next persist if that cleanup itself was interrupted).
-        Incremental commits (the per-statement path) use persist_append /
+        Incremental commits (the per-statement path) use append_rows /
         persist_partitions instead; a lakehouse deployment swaps all of
         this for Delta append/MERGE, which versions instead of swapping.
         Both tables are pinned (localCheckpoint) first — removing files a
@@ -478,8 +479,32 @@ class Graph:
             if os.path.isdir(p) and (stale_snap or legacy):
                 shutil.rmtree(p, ignore_errors=True)
 
+    def append_rows(
+        self, vertices: DataFrame | None = None, edges: DataFrame | None = None
+    ) -> None:
+        """Commit one statement's created rows — the single insert path of
+        CREATE, MERGE and the bulk loader (the reference's per-label heap
+        insert, cypher_create.c:332-540). The unique check runs on BOTH
+        batches before either table changes, so a violation anywhere
+        leaves the graph untouched (PG statement atomicity; allocated
+        sequence values are consumed either way, like nextval under
+        rollback). Each table is then unioned and pinned, and the durable
+        path appends only the new rows. Callers pass rows whose lineage
+        is already pinned, so no step re-runs id allocation."""
+        self.invalidate_prop_types()
+        batches = [(k, r) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None]
+        for kind, rows in batches:
+            self.enforce_unique(kind, rows)
+        for kind, rows in batches:
+            tbl = getattr(self, kind)
+            if "pv" in tbl.columns:
+                rows = rows.withColumn("pv", F.try_parse_json("properties"))
+            setattr(self, kind, tbl.unionByName(rows).localCheckpoint(eager=True))
+        for kind, rows in batches:
+            self.persist_append(kind, rows)
+
     def persist_append(self, kind: str, new_rows: DataFrame) -> None:
-        """Durable CREATE/MERGE commit: append ONLY the new rows into the
+        """Durable half of append_rows: append ONLY the new rows into the
         live snapshot's label partitions — O(new rows) I/O, not an
         O(table) rewrite (round-4 verdict's write-path scale-killer).
         The catalog (which may have interned new labels) is committed

@@ -11,8 +11,9 @@ Spark design: the clause pipeline stays a DataFrame; a write clause
      DataFrame (so later clauses including RETURN see the post-write state),
   2. applies the delta to the graph's backing tables as a distributed
      union / join-update / anti-join (the in-memory analog of Delta
-     append / MERGE INTO / DELETE — swap `_commit_*` for Delta ops in a
-     lakehouse deployment),
+     append / MERGE INTO / DELETE). Created rows — every CREATE, MERGE
+     miss and bulk load (sources/loader.py) — commit through the one
+     Graph.append_rows,
   3. `localCheckpoint`s the pipeline so allocated ids are stable (lineage
      replay must not re-allocate).
 
@@ -118,6 +119,31 @@ def with_rowid(df: DataFrame) -> tuple[DataFrame, int]:
     return df, acc
 
 
+def rowid_graphid(label_id: int, first_entry: int) -> Column:
+    """Graphids for rows numbered by with_rowid: entry ids
+    first_entry + __rn of the range Graph.alloc_entry_ids reserved."""
+    return F.lit(label_id << ENTRY_ID_BITS).cast("long") + F.lit(first_entry) + F.col("__rn")
+
+
+def _entity_struct(col: Column, schema, properties: Column | None = None) -> Column:
+    """An entity struct with exactly the table's fields (drops `pv`),
+    optionally with new properties."""
+    return F.struct(*[
+        (properties if f == "properties" and properties is not None else col[f]).alias(f)
+        for f in schema.fieldNames()
+    ])
+
+
+def _entity_rows(df: DataFrame, structs: list[Column], schema) -> DataFrame | None:
+    """Table rows of the entity structs of each row of df (None when
+    there are none)."""
+    if not structs:
+        return None
+    return df.select(F.explode(F.array(*structs)).alias("__r")).select(
+        *[f"__r.{f}" for f in schema.fieldNames()]
+    )
+
+
 def is_write_clause(c) -> bool:
     return isinstance(c, (A.CreateClause, A.SetClause, A.DeleteClause, A.MergeClause))
 
@@ -161,18 +187,6 @@ class WriteRunner:
         self._anon += 1
         return f"__{prefix}{self._anon}"
 
-    def _alloc_base(self, label: str, n: int, kind: str = "vertex") -> tuple[int, int]:
-        """Reserve n entry ids for label -> (label_id, first_entry_id)
-        (Graph.alloc_entry_ids: per-label sequence with durable
-        high-water-mark recovery; a DDL-declared label kind is
-        enforced)."""
-        return self.graph.alloc_entry_ids(label, n, kind)
-
-    def _with_rowid(self, df: DataFrame | None) -> tuple[DataFrame, int]:
-        if df is None:
-            df = self.spark.range(1).select(F.lit(1).alias("__one"))
-        return with_rowid(df)
-
     def _props_json_col(self, props: A.MapLit | None, df, scope) -> Column:
         if props is None or not props.items:
             return F.lit("{}")
@@ -188,32 +202,18 @@ class WriteRunner:
             )
         return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
 
-    def _commit_vertices(self, new_rows: DataFrame) -> None:
-        g = self.graph
-        g.enforce_unique("vertices", new_rows)
-        if "pv" in g.vertices.columns:
-            new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-        g.vertices = g.vertices.unionByName(new_rows).localCheckpoint(eager=True)
-        # durable path: append only the created rows (O(rows), not
-        # O(table) — the created rows were pinned by do_create's
-        # checkpoint, so this re-reads memory, not the backing files)
-        g.persist_append("vertices", new_rows)
-
-    def _commit_edges(self, new_rows: DataFrame) -> None:
-        g = self.graph
-        g.enforce_unique("edges", new_rows)
-        if "pv" in g.edges.columns:
-            new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-        g.edges = g.edges.unionByName(new_rows).localCheckpoint(eager=True)
-        g.persist_append("edges", new_rows)
-
     # ------------------------------------------------------------- CREATE
 
     def do_create(self, c: A.CreateClause, df, scope: Scope):
         """Row-wise CREATE: every input row creates the pattern's unbound
-        entities (cypher_create.c:332-540 create_vertex_1/create_edge_1)."""
+        entities (cypher_create.c:332-540 create_vertex_1/create_edge_1).
+        A CREATE that opens the statement runs once, on a one-row input.
+        Variables bound by an earlier clause are the same entities here."""
         scope = scope.copy()
-        df, n_rows = self._with_rowid(df)
+        if df is None:  # one row in one partition: no count job to number it
+            df, n_rows = self.spark.range(0, 1, 1, 1).select(F.lit(0).alias("__rn")), 1
+        else:
+            df, n_rows = with_rowid(df)
         created_v: list[str] = []
         created_e: list[str] = []
 
@@ -224,8 +224,7 @@ class WriteRunner:
                     raise CompileError(f"{node.var!r} is not a vertex")
                 return node.var
             label = node.label or DEFAULT_VLABEL
-            lid, base = self._alloc_base(label, n_rows)
-            gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
+            gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_rows, "vertex"))
             var = node.var or self._fresh("cv")
             df = df.withColumn(
                 var,
@@ -251,8 +250,7 @@ class WriteRunner:
                     raise CompileError("CREATE requires a directed relationship")
                 src, dst = (nxt, prev) if rel.direction == "in" else (prev, nxt)
                 label = rel.label or DEFAULT_ELABEL
-                lid, base = self._alloc_base(label, n_rows, kind="edge")
-                gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
+                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_rows, "edge"))
                 evar = rel.var or self._fresh("ce")
                 df = df.withColumn(
                     evar,
@@ -269,29 +267,11 @@ class WriteRunner:
                 prev = nxt
 
         df = df.localCheckpoint(eager=True)  # pin allocated ids
-        if created_v:
-            rows = None
-            for var in created_v:
-                sel = df.select(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["label"].alias("label"),
-                    F.col(var)["properties"].alias("properties"),
-                )
-                rows = sel if rows is None else rows.unionByName(sel)
-            self._commit_vertices(rows)
-        if created_e:
-            rows = None
-            for var in created_e:
-                sel = df.select(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["start_id"].alias("start_id"),
-                    F.col(var)["end_id"].alias("end_id"),
-                    F.col(var)["label"].alias("label"),
-                    F.col(var)["properties"].alias("properties"),
-                )
-                rows = sel if rows is None else rows.unionByName(sel)
-            self._commit_edges(rows)
-        df = df.drop("__rn", "__one")
+        self.graph.append_rows(
+            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_SCHEMA),
+            _entity_rows(df, [F.col(v) for v in created_e], EDGE_SCHEMA),
+        )
+        df = df.drop("__rn")
         # anonymous entities drop out of the visible scope
         for var in created_v + created_e:
             if var.startswith("__"):
@@ -322,29 +302,17 @@ class WriteRunner:
                 touched[var] = _json_merge(props, delta["j"])
             else:
                 raise CompileError("SET target must be var.prop or var += map")
+        tables = {VKIND_VERTEX: ("vertices", VERTEX_SCHEMA), VKIND_EDGE: ("edges", EDGE_SCHEMA)}
         for var, props_col in touched.items():
-            kind = scope.kinds.get(var)
-            if kind == VKIND_VERTEX:
-                new_struct = F.struct(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["label"].alias("label"),
-                    props_col.alias("properties"),
-                )
-            elif kind == VKIND_EDGE:
-                new_struct = F.struct(
-                    F.col(var)["id"].alias("id"),
-                    F.col(var)["start_id"].alias("start_id"),
-                    F.col(var)["end_id"].alias("end_id"),
-                    F.col(var)["label"].alias("label"),
-                    props_col.alias("properties"),
-                )
-            else:
+            if scope.kinds.get(var) not in tables:
                 raise CompileError(f"cannot SET on {var!r}")
-            df = df.withColumn(var, new_struct)
+            schema = tables[scope.kinds[var]][1]
+            df = df.withColumn(var, _entity_struct(F.col(var), schema, props_col))
         df = df.localCheckpoint(eager=True)
 
         g = self.graph
         for var in touched:
+            kind = tables[scope.kinds[var]][0]
             updates = (
                 df.select(F.col(var)["id"].alias("__uid"), F.col(var)["properties"].alias("__uprops"))
                 .groupBy("__uid")
@@ -355,28 +323,16 @@ class WriteRunner:
             upd_labels = [
                 r[0] for r in df.select(F.col(var)["label"]).distinct().collect()
             ]
-            if scope.kinds[var] == VKIND_VERTEX:
-                upd = (
-                    g.vertices.join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                    .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
-                    .drop("__uid", "__uprops")
-                )
-                if "pv" in g.vertices.columns:  # keep the variant in sync
-                    upd = upd.withColumn("pv", F.try_parse_json("properties"))
-                g.enforce_unique_post_update(upd, upd_labels)
-                g.vertices = upd.localCheckpoint(eager=True)
-                g.persist_partitions("vertices", upd_labels)
-            else:
-                upd = (
-                    g.edges.join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                    .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
-                    .drop("__uid", "__uprops")
-                )
-                if "pv" in g.edges.columns:
-                    upd = upd.withColumn("pv", F.try_parse_json("properties"))
-                g.enforce_unique_post_update(upd, upd_labels)
-                g.edges = upd.localCheckpoint(eager=True)
-                g.persist_partitions("edges", upd_labels)
+            upd = (
+                getattr(g, kind).join(updates, F.col("id") == F.col("__uid"), "left_outer")
+                .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
+                .drop("__uid", "__uprops")
+            )
+            if "pv" in upd.columns:  # keep the variant in sync
+                upd = upd.withColumn("pv", F.try_parse_json("properties"))
+            g.enforce_unique_post_update(upd, upd_labels)
+            setattr(g, kind, upd.localCheckpoint(eager=True))
+            g.persist_partitions(kind, upd_labels)
         return df
 
     # ------------------------------------------------------------- DELETE
@@ -576,7 +532,7 @@ class WriteRunner:
             misses = miss_rows.select(F.lit(1).alias("__mk")).distinct()
             key_names = ["__mk"]
             joined = joined.withColumn("__mk", F.lit(1))
-        misses, n_miss = self._with_rowid(misses)
+        misses, n_miss = with_rowid(misses)
 
         created_cols: dict[str, Column] = {}
         if n_miss:
@@ -598,7 +554,6 @@ class WriteRunner:
 
             # vertices first (edges need their ids)
             vid_expr: dict[int, Column] = {}
-            v_rows = None
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
                 if kind != "v":
                     continue
@@ -606,39 +561,21 @@ class WriteRunner:
                     vid_expr[idx] = F.col(f"__bk_{var}")
                     continue
                 label = el.label or DEFAULT_VLABEL
-                lid, base = self._alloc_base(label, n_miss)
-                gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
-                vid_expr[idx] = gid
+                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "vertex"))
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 vid_expr[idx] = F.col(f"__cid_{var}")
-                sel = misses.select(
-                    F.col(f"__cid_{var}").alias("id"),
-                    F.lit(label).alias("label"),
-                    props_json(idx).alias("properties"),
-                )
-                v_rows = sel if v_rows is None else v_rows.unionByName(sel)
                 created_cols[var] = F.struct(
-                    F.col(f"__cid_{var}").alias("id"),
+                    vid_expr[idx].alias("id"),
                     F.lit(label).alias("label"),
                     props_json(idx).alias("properties"),
                 )
-            e_rows = None
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
                 if kind != "e":
                     continue
                 label = el.label or DEFAULT_ELABEL
-                lid, base = self._alloc_base(label, n_miss, kind="edge")
-                gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
+                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "edge"))
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 src_i, dst_i = (idx - 1, idx + 1) if el.direction != "in" else (idx + 1, idx - 1)
-                sel = misses.select(
-                    F.col(f"__cid_{var}").alias("id"),
-                    vid_expr[src_i].alias("start_id"),
-                    vid_expr[dst_i].alias("end_id"),
-                    F.lit(label).alias("label"),
-                    props_json(idx).alias("properties"),
-                )
-                e_rows = sel if e_rows is None else e_rows.unionByName(sel)
                 created_cols[var] = F.struct(
                     F.col(f"__cid_{var}").alias("id"),
                     vid_expr[src_i].alias("start_id"),
@@ -647,30 +584,12 @@ class WriteRunner:
                     props_json(idx).alias("properties"),
                 )
             misses = misses.localCheckpoint(eager=True)  # pin allocated ids
-            if v_rows is not None:
-                self._commit_vertices(
-                    misses.select(
-                        F.explode(
-                            F.array(*[
-                                created_cols[var]
-                                for kind, var, bound, *_r in elems
-                                if kind == "v" and not bound
-                            ])
-                        ).alias("__v")
-                    ).select("__v.id", "__v.label", "__v.properties")
-                )
-            if e_rows is not None:
-                self._commit_edges(
-                    misses.select(
-                        F.explode(
-                            F.array(*[
-                                created_cols[var]
-                                for kind, var, bound, *_r in elems
-                                if kind == "e"
-                            ])
-                        ).alias("__e")
-                    ).select("__e.id", "__e.start_id", "__e.end_id", "__e.label", "__e.properties")
-                )
+            new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
+            new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
+            self.graph.append_rows(
+                _entity_rows(misses, new_v, VERTEX_SCHEMA),
+                _entity_rows(misses, new_e, EDGE_SCHEMA),
+            )
             # join created entities back to ALL rows on the same keys
             cstructs = misses.select(
                 *[F.col(kn) for kn in key_names],
@@ -698,20 +617,12 @@ class WriteRunner:
                 joined = joined.drop(cstructs[kn])
 
         # ---- bind each pattern var: matched struct (pv stripped) else created
-        def strip_pv(col: Column, kind: str) -> Column:
-            if kind == "v":
-                return F.struct(col["id"].alias("id"), col["label"].alias("label"),
-                                col["properties"].alias("properties"))
-            return F.struct(col["id"].alias("id"), col["start_id"].alias("start_id"),
-                            col["end_id"].alias("end_id"), col["label"].alias("label"),
-                            col["properties"].alias("properties"))
-
         out = joined
         for kind, var, bound, el, *_r in elems:
             if bound:
                 out = out.drop(f"__pm_{var}")
                 continue
-            pm = strip_pv(F.col(f"__pm_{var}"), kind)
+            pm = _entity_struct(F.col(f"__pm_{var}"), VERTEX_SCHEMA if kind == "v" else EDGE_SCHEMA)
             if n_miss and f"__cr_{var}" in out.columns:
                 bound_col = F.when(F.col(f"__pm_{var}").isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
             else:

@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: largest default driver heap; SPARK_GRAFT_DRIVER_MEM overrides it
+_HEAP_CAP_MB = 4096
+
+
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, at most _HEAP_CAP_MB: the JVM's
+    heap plus its off-heap and the Python workers then fit on a
+    machine other processes share."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{_HEAP_CAP_MB}m"
+    return f"{min(_HEAP_CAP_MB, total_kb // 1024 // 4)}m"
+
 
 def get_spark(app_name: str = "postgraph_spark", *, cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the singleton SparkSession.
@@ -39,7 +54,7 @@ def get_spark(app_name: str = "postgraph_spark", *, cpus: int | None = None) -> 
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

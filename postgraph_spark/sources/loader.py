@@ -9,8 +9,11 @@ endpoints by those user ids. This is the Spark-native re-design:
   label: each row's columns are packed into the JSON properties
   document, graphids are assigned with the same distributed
   per-partition scheme as CREATE (plans/writes.py with_rowid — no
-  single-partition window, no collect of data), and the rows are
-  appended to the graph (incremental persist_append when durable).
+  single-partition window, no collect of data), and the rows commit
+  through Graph.append_rows, the insert path CREATE and MERGE use: the
+  label's declared kind and unique constraints are enforced, the
+  property-type catalog is invalidated, and a durable graph appends
+  only the new rows.
 - The user id column is kept as the ``__id`` property (AGE convention),
   so edge loads resolve endpoints with two equi-joins on
   ``properties.__id`` — shuffle on the join key, broadcast when a side
@@ -27,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from postgraph_spark.graph import ENTRY_ID_BITS, Graph
-from postgraph_spark.plans.writes import with_rowid
+from postgraph_spark.graph import Graph
+from postgraph_spark.plans.writes import rowid_graphid, with_rowid
 
 
 def _props_json(df: DataFrame, cols: list[str], id_col: str | None) -> F.Column:
@@ -55,18 +58,14 @@ def load_vertices(
     """
     cols = props_cols if props_cols is not None else list(df.columns)
     body, n = with_rowid(df)
-    lid, base = graph.alloc_entry_ids(label, n)
-    gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
+    gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "vertex"))
     new_rows = body.select(
         gid.alias("id"),
         F.lit(label).alias("label"),
         _props_json(body, cols, id_col).alias("properties"),
     )
-    if "pv" in graph.vertices.columns:
-        new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-    new_rows = new_rows.localCheckpoint(eager=True)
-    graph.vertices = graph.vertices.unionByName(new_rows).localCheckpoint(eager=True)
-    graph.persist_append("vertices", new_rows.drop("pv") if "pv" in new_rows.columns else new_rows)
+    # pinned: numbered once, however often the commit reads the rows
+    graph.append_rows(vertices=new_rows.localCheckpoint(eager=True))
     return n
 
 
@@ -108,8 +107,7 @@ def load_edges(
         .join(dst, df[end_id_col].cast("string") == dst["__key"]).drop("__key")
     )
     body, n = with_rowid(resolved)
-    lid, base = graph.alloc_entry_ids(label, n)
-    gid = F.lit(lid << ENTRY_ID_BITS).cast("long") + F.lit(base) + F.col("__rn")
+    gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "edge"))
     new_rows = body.select(
         gid.alias("id"),
         F.col("__src").alias("start_id"),
@@ -117,11 +115,7 @@ def load_edges(
         F.lit(label).alias("label"),
         _props_json(body, cols, None).alias("properties"),
     )
-    if "pv" in graph.edges.columns:
-        new_rows = new_rows.withColumn("pv", F.try_parse_json("properties"))
-    new_rows = new_rows.localCheckpoint(eager=True)
-    graph.edges = graph.edges.unionByName(new_rows).localCheckpoint(eager=True)
-    graph.persist_append("edges", new_rows.drop("pv") if "pv" in new_rows.columns else new_rows)
+    graph.append_rows(edges=new_rows.localCheckpoint(eager=True))
     return n
 
 

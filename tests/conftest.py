@@ -19,7 +19,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 #: the driver-facing `core` gate (round-11 verdict #2; see pytest.ini):
 #: the oracle-parity sweep over EVERY registered query, the plan-shape
-#: pins, the driver schema contract, and the guard-invariant suites.
+#: pins, the driver schema contract, the guard-invariant suites, and the
+#: durable write path with its one commit for created rows.
 #: Everything else is marked `full` (builder's pre-commit gate).
 _CORE_FILES = {
     "test_oracle_parity.py",
@@ -27,6 +28,8 @@ _CORE_FILES = {
     "test_driver_schema_contract.py",
     "test_round11_fixes.py",
     "test_round12_fixes.py",
+    "test_durable_writes.py",
+    "test_write_commit.py",
 }
 
 

@@ -1,6 +1,5 @@
 """Durable write path: a catalog with a root directory persists every
-committed write through Graph.write (label-partitioned parquet +
-catalog.json), and a FRESH catalog over the same root reopens the graph
+committed write (label-partitioned parquet snapshots + catalog.json), and a FRESH catalog over the same root reopens the graph
 with identical contents — the Spark analog of the reference's heap-table
 durability (label_commands.c storage; graph_commands.c catalog)."""
 
@@ -93,8 +92,8 @@ def test_create_appends_only_new_rows(spark, root):
     new_files = after - before
     assert new_files and all("label=tiny" in f for f in new_files)
 
-    # a LITERAL CREATE statement (the engine.py path, not WriteRunner)
-    # must also append only — round-5 verdict item #3
+    # a statement of literal CREATEs (no MATCH/UNWIND feeding it) must
+    # also append only — round-5 verdict item #3
     before = _data_files(vdir)
     eng.execute("CREATE (:solo {i: 1})")
     after = _data_files(vdir)
