@@ -379,9 +379,10 @@ def from_variant(x: Column, bind: bool = False) -> Column:
 
 
 #: property-catalog "atoms" (round-12, guide §2.3 narrower types): the
-#: storage-level scalar classes a property can hold, derived from the
-#: NATIVE column types a graph's property documents were built from
-#: (graph.py Graph.prop_types). Finer than gtype tags — a BIGINT and a
+#: storage-level scalar classes a property can hold (graph.py
+#: Graph.prop_types: from the native column types or python values a
+#: graph was built from, extended by every write with the variant types
+#: it stores). Finer than gtype tags — a BIGINT and a
 #: DOUBLE both map to T_NUMBER but differ in whether the i (integer
 #: identity) field is populated, which the typed constructor preserves.
 ATOM_TAGS = {
@@ -389,6 +390,25 @@ ATOM_TAGS = {
     "bool": T_BOOL, "timestamp": T_TIMESTAMP, "date": T_DATE,
     "array": T_ARRAY, "object": T_OBJECT,
 }
+
+
+#: schema_of_variant text -> atom, read as from_variant dispatches it
+_EXACT_ATOMS = {
+    "BIGINT": "long", "DOUBLE": "double", "FLOAT": "double", "STRING": "string",
+    "BOOLEAN": "bool", "TIMESTAMP": "timestamp", "TIMESTAMP_NTZ": "timestamp",
+    "DATE": "date",
+}
+_PREFIX_ATOMS = (("DECIMAL", "double"), ("ARRAY", "array"), ("OBJECT", "object"), ("STRUCT", "object"))
+
+
+def variant_atom(schema: str) -> str | None:
+    """Catalog atom of a variant value from its schema_of_variant text,
+    exactly as from_variant dispatches it (a JSON decimal is a number
+    with only the double field, like "double"); None for a type
+    from_variant does not dispatch."""
+    if schema in _EXACT_ATOMS:
+        return _EXACT_ATOMS[schema]
+    return next((a for p, a in _PREFIX_ATOMS if schema.startswith(p)), None)
 
 
 def atoms_types(atoms) -> frozenset:
@@ -400,8 +420,8 @@ def atoms_types(atoms) -> frozenset:
 def from_variant_atoms(x: Column, atoms, bind: bool = False) -> Column:
     """VARIANT -> gval when the value's runtime type is STATICALLY known
     to be among `atoms` (or missing / JSON null) — the knowledge comes
-    from a property-type catalog derived from the typed columns the
-    property document was built from, invalidated on every write.
+    from the graph's property-type catalog, a superset of the atoms its
+    stored documents hold.
 
     Produces exactly from_variant()'s result for those runtime types. A
     SINGLE known atom needs no schema_of_variant dispatch at all: the

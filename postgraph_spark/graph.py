@@ -14,8 +14,11 @@ partitions — the columnar analog of inheritance + per-label tables.
 graphid: 64-bit, 16-bit label id (high) + 48-bit entry id (low), exactly
 the reference's packing (src/include/utils/graphid.h:31-64).
 Properties: JSON string column (heterogeneous, schemaless — the gtype
-document model, src/include/utils/gtype.h); parsed to VariantType at query
-time by the expression compiler.
+document model, src/include/utils/gtype.h) plus ``pv``, the same document
+parsed ONCE to a VARIANT when the row is committed and stored beside it —
+the analog of the reference's binary gtype heap column
+(label_commands.c:690-712). Every table, in memory and on disk, has the
+shape (id, label, properties, pv), edges adding start_id/end_id.
 """
 
 from __future__ import annotations
@@ -23,20 +26,31 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from postgraph_spark.functions.gtype import variant_atom
+
 ENTRY_ID_BITS = 48
 ENTRY_ID_MASK = (1 << ENTRY_ID_BITS) - 1
 LABEL_ID_MAX = 0xFFFF
+
+#: the fields of an entity value (a bound vertex or edge): a table row
+#: without its pv
+VERTEX_FIELDS = ("id", "label", "properties")
+EDGE_FIELDS = ("id", "start_id", "end_id", "label", "properties")
+
+_PV_FIELD = T.StructField("pv", T.VariantType(), True)
 
 VERTEX_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
         T.StructField("label", T.StringType(), False),
         T.StructField("properties", T.StringType(), False),
+        _PV_FIELD,
     ]
 )
 
@@ -47,8 +61,16 @@ EDGE_SCHEMA = T.StructType(
         T.StructField("end_id", T.LongType(), False),
         T.StructField("label", T.StringType(), False),
         T.StructField("properties", T.StringType(), False),
+        _PV_FIELD,
     ]
 )
+
+
+def with_pv(rows: DataFrame) -> DataFrame:
+    """Rows to commit, with ``pv`` parsed from their properties text —
+    the one way a committed row gets its variant, so the stored text and
+    the variant always agree."""
+    return rows.withColumn("pv", F.try_parse_json("properties"))
 
 
 def _spark_atom(dt) -> str | None:
@@ -187,36 +209,53 @@ class Graph:
         #: property-type catalog (round-12, guide §2.3 narrower types):
         #: label -> {property -> frozenset of gtype atoms ("long",
         #: "double", "string", "bool", "timestamp", "date", "array",
-        #: "object"; None = present but untyped)}. Populated ONLY by
-        #: builders that know every property's source type (tpch_graph
-        #: from native parquet columns; from_rows from the python
-        #: values); INVALIDATED wholesale by every data write. A label
-        #: in prop_types_complete lists ALL properties that can occur on
-        #: it, so an access to an unlisted property is a constant null.
-        self.prop_types: dict[str, dict[str, frozenset | None]] = {}
-        self.prop_types_complete: set[str] = set()
-
-    def invalidate_prop_types(self) -> None:
-        """Drop the property-type catalog (called by every write path:
-        a SET/CREATE/MERGE can store any type into any property, so the
-        static knowledge dies with the first mutation — narrowing then
-        simply stops firing; correctness never depends on the catalog)."""
-        self.prop_types = {}
-        self.prop_types_complete = set()
+        #: "object"; None = present but untyped)}. A cataloged label
+        #: lists EVERY property its rows can hold, so an unlisted
+        #: property is a constant null. None = nothing known (a graph
+        #: built from bare tables, or a durable graph stored without a
+        #: catalog); a dict also covers labels that do not exist yet.
+        #: Builders that see every row fill it (tpch_graph from the
+        #: native column types, from_rows from the python values);
+        #: every write extends it to a SUPERSET of the stored atoms
+        #: before either table changes (extend_prop_types), so it never
+        #: has to be dropped.
+        self.prop_types: dict[str, dict[str, frozenset | None]] | None = None
 
     def prop_atoms(self, label: str | None, prop: str) -> frozenset | None:
         """Catalog lookup: the atom set property `prop` of label `label`
-        can hold, frozenset() when the label is fully cataloged and the
+        can hold, frozenset() when the label is cataloged and the
         property never occurs, None when unknown (no narrowing)."""
-        if label is None:
-            return None
-        cat = self.prop_types.get(label)
+        cat = self.prop_types.get(label) if self.prop_types is not None else None
         if cat is None:
             return None
-        atoms = cat.get(prop)
-        if atoms is None and prop not in cat:
-            return frozenset() if label in self.prop_types_complete else None
-        return atoms
+        return cat.get(prop, frozenset())
+
+    def extend_prop_types(self, rows: DataFrame) -> list[str]:
+        """Fold the atoms of rows about to be committed — (label, pv)
+        pairs — into the catalog, and return their distinct labels. ONE
+        aggregation job: (label, key) -> the set of schema_of_variant
+        texts over variant_explode_outer(pv). A JSON null adds no atom;
+        a type from_variant does not dispatch pins the key untyped. A
+        label absent from a catalog that covers the whole graph is new
+        and gets cataloged from these rows alone; without a catalog
+        nothing is learned. Deleting rows never calls this: a superset
+        stays sound."""
+        found = (
+            rows.select("label", "pv")
+            .lateralJoin(rows.sparkSession.tvf.variant_explode_outer(F.col("pv").outer()))
+            .groupBy("label", "key")
+            .agg(F.collect_set(F.schema_of_variant("value")).alias("schemas"))
+            .collect()
+        )
+        found = [r for r in found if r["label"] is not None]  # SET on a null entity
+        for r in found:
+            if self.prop_types is None or r["key"] is None:
+                continue
+            cat = self.prop_types.setdefault(r["label"], {})
+            atoms = {variant_atom(sch) for sch in r["schemas"] if sch != "VOID"}
+            cur = cat.get(r["key"], frozenset())
+            cat[r["key"]] = None if cur is None or None in atoms else cur | atoms
+        return sorted({r["label"] for r in found})
 
     def vertices_with_label(self, label: str | None) -> DataFrame:
         """Label scan. With a known label id this is a graphid high-bits
@@ -305,11 +344,11 @@ class Graph:
             eid = next_entry.get(label, 0) + 1
             next_entry[label] = eid
             erows.append((make_graphid(lid, eid), vids[src], vids[dst], label, json.dumps(props)))
-        vertices = spark.createDataFrame(vrows, VERTEX_SCHEMA)
-        edges = spark.createDataFrame(erows if erows else [], EDGE_SCHEMA)
+        vertices = with_pv(spark.createDataFrame(vrows, VERTEX_SCHEMA[:-1]))
+        edges = with_pv(spark.createDataFrame(erows, EDGE_SCHEMA[:-1]))
         g = cls(name, vertices, edges, label_ids)
         # property-type catalog from the python values themselves: every
-        # row was seen, so every label is complete by construction
+        # row was seen, so every label is cataloged completely
         cat: dict[str, dict] = {}
         for label, props in vertex_rows:
             _merge_py_atoms(cat.setdefault(label, {}), props)
@@ -319,7 +358,6 @@ class Graph:
             lbl: {k: (frozenset(v) if v is not None else None) for k, v in d.items()}
             for lbl, d in cat.items()
         }
-        g.prop_types_complete = set(cat)
         return g
 
     @classmethod
@@ -329,7 +367,8 @@ class Graph:
         reader always sees one fully-consistent (vertices, edges) pair —
         a crash mid-persist leaves either the old or the new snapshot,
         never a torn mix. Graphs written by older layouts (tables directly
-        under ``path``) are still readable."""
+        under ``path``, or without the stored ``pv`` column) are still
+        readable."""
         meta_path = os.path.join(path, "catalog.json")
         meta = {}
         if os.path.exists(meta_path):
@@ -352,11 +391,25 @@ class Graph:
 
         vertices = load("vertices", VERTEX_SCHEMA)
         edges = load("edges", EDGE_SCHEMA)
+        stored = meta.get("prop_types")
+        if stored is None:
+            # no stored catalog: a layout from before pv was stored
+            # (maybe appended to since), so files without pv read it as
+            # null — parse those rows' properties instead
+            vertices, edges = (
+                t.withColumn("pv", F.coalesce("pv", F.try_parse_json("properties")))
+                for t in (vertices, edges)
+            )
         g = cls(
             name or os.path.basename(path), vertices, edges,
             meta.get("label_ids", {}), meta.get("label_kinds", {}),
             meta.get("constraints", []),
         )
+        if stored is not None:
+            g.prop_types = {
+                lbl: {k: frozenset(v) if v is not None else None for k, v in cat.items()}
+                for lbl, cat in stored.items()
+            }
         g.vector_indexes = meta.get("vector_indexes", [])
         g._label_id_hwm = max(g._label_id_hwm, meta.get("label_id_hwm", 0))
         g.durable_path = path
@@ -427,6 +480,11 @@ class Graph:
             meta["constraints"] = self.constraints
         if self.vector_indexes:
             meta["vector_indexes"] = self.vector_indexes
+        if self.prop_types is not None:
+            meta["prop_types"] = {
+                lbl: {k: sorted(v) if v is not None else None for k, v in cat.items()}
+                for lbl, cat in self.prop_types.items()
+            }
         if self._snapshot:
             meta["snapshot"] = self._snapshot
         with open(tmp, "w") as f:
@@ -488,17 +546,23 @@ class Graph:
         batches before either table changes, so a violation anywhere
         leaves the graph untouched (PG statement atomicity; allocated
         sequence values are consumed either way, like nextval under
-        rollback). Each table is then unioned and pinned, and the durable
-        path appends only the new rows. Callers pass rows whose lineage
-        is already pinned, so no step re-runs id allocation."""
-        self.invalidate_prop_types()
-        batches = [(k, r) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None]
+        rollback). The property-type catalog is then extended with the
+        atoms of both batches, each table is unioned and pinned, and the
+        durable path appends only the new rows. Callers pass rows (without
+        pv) whose lineage is already pinned, so no step re-runs id
+        allocation."""
+        batches = [
+            (k, with_pv(r)) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None
+        ]
+        if not batches:
+            return
         for kind, rows in batches:
             self.enforce_unique(kind, rows)
+        self.extend_prop_types(
+            reduce(DataFrame.unionByName, [rows.select("label", "pv") for _k, rows in batches])
+        )
         for kind, rows in batches:
             tbl = getattr(self, kind)
-            if "pv" in tbl.columns:
-                rows = rows.withColumn("pv", F.try_parse_json("properties"))
             setattr(self, kind, tbl.unionByName(rows).localCheckpoint(eager=True))
         for kind, rows in batches:
             self.persist_append(kind, rows)
@@ -507,10 +571,11 @@ class Graph:
         """Durable half of append_rows: append ONLY the new rows into the
         live snapshot's label partitions — O(new rows) I/O, not an
         O(table) rewrite (round-4 verdict's write-path scale-killer).
-        The catalog (which may have interned new labels) is committed
-        FIRST: a crash between the two steps then leaves at worst an
-        unused label id, never durable rows under a label missing from
-        the reloaded catalog. Parquet appends are crash-safe at job
+        The catalog (which may have interned new labels and extended the
+        property types) is committed FIRST: a crash between the two steps
+        then leaves at worst an unused label id or a wider type set, never
+        durable rows under a label or a type missing from the reloaded
+        catalog. Parquet appends are crash-safe at job
         granularity: the output committer moves files into place at job
         commit, so an interrupted append leaves only ignorable staging
         trash."""
@@ -530,9 +595,11 @@ class Graph:
         overwrite, so its stale directory is removed explicitly —
         matching on the UNESCAPED partition value, since Spark
         percent-escapes special characters (space, ':', '/') in
-        partition directory names."""
+        partition directory names. The catalog is committed first, as
+        in persist_append: it describes the rewritten rows' types."""
         if not self.durable_path or not labels:
             return
+        self._write_catalog()
         tbl = self.vertices if kind == "vertices" else self.edges
         schema = VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA
         sub = self._table_dir(kind)
@@ -558,7 +625,6 @@ class Graph:
             for entry in os.listdir(sub):
                 if entry.startswith("label=") and unquote(entry[6:]) in gone:
                     shutil.rmtree(os.path.join(sub, entry), ignore_errors=True)
-        self._write_catalog()
 
     # -- label DDL + constraints ----------------------------------------
 
@@ -602,13 +668,15 @@ class Graph:
                 self.persist_partitions(attr, [label])
         del self.label_ids[label]
         self.label_kinds.pop(label, None)
+        if self.prop_types is not None:  # no rows left: a later label of this name is new
+            self.prop_types.pop(label, None)
         self.constraints = [c for c in self.constraints if c["label"] != label]
         if hasattr(self, "_next_entry"):
             self._next_entry.pop(label, None)
         self._write_catalog()
 
     def _unique_key_col(self, prop: str | None) -> F.Column:
-        """Equality key over a `properties` JSON column for unique
+        """Equality key over a table's properties for unique
         enforcement. Whole-document constraints key on the canonical
         object text (sorted keys, numbers through their double image) so
         {a:1,b:2} and {b:2,a:1.0} collide, matching gtype equality of
@@ -619,7 +687,7 @@ class Graph:
 
         if prop is None:
             return G._obj_canon_txt(F.col("properties"))
-        v = F.try_variant_get(F.try_parse_json(F.col("properties")), f"$.{prop}", "variant")
+        v = F.try_variant_get(F.col("pv"), f"$.{prop}", "variant")
         return G.canon_key_text(G.from_variant(v))
 
     def add_unique_constraint(self, label: str, prop: str | None = None) -> None:
@@ -1052,7 +1120,6 @@ def tpch_graph(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> Grap
     prop_types["placed"] = {}
     prop_types["from_nation"] = {}
     g.prop_types = prop_types
-    g.prop_types_complete = set(prop_types)
     if use_cache:
         g.cache()
         _GRAPH_CACHE[key] = g

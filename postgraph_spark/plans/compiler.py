@@ -119,10 +119,6 @@ def _const_int(e) -> int | None:
     return None
 
 
-def _entity_struct_vertex(prefix: str = "") -> list[str]:
-    return ["id", "label", "properties"]
-
-
 def _analyze_full_vars(q) -> tuple[set[str], bool]:
     """Statement-wide use analysis for entity-struct pruning (round-11,
     guide-style project-before-the-exchange): a pattern variable whose
@@ -405,18 +401,12 @@ class Compiler:
 
     # ------------------------------------------------------------- MATCH
     #
-    # Entity structs carry a 4th field ``pv``: the properties document as
-    # a VARIANT, parsed (or built from native columns) ONCE at scan time.
-    # Every n.prop access downstream is a binary variant_get — never a
-    # re-parse of the JSON text. Projections (WITH/RETURN) strip pv so
-    # DISTINCT / set ops / grouping on entities stay comparable; accesses
-    # after a projection barrier fall back to parsing the JSON.
-
-    @staticmethod
-    def _table_pv(t: DataFrame) -> Column:
-        """pv for a graph table scan: the stored variant column when the
-        table has one, else one try_parse_json at scan time."""
-        return F.col("pv") if "pv" in t.columns else F.try_parse_json("properties")
+    # Entity structs carry a 4th field ``pv``: the table's stored
+    # properties VARIANT (parsed ONCE, when the row was committed). Every
+    # n.prop access downstream is a binary variant_get — never a re-parse
+    # of the JSON text. Projections (WITH/RETURN) strip pv so DISTINCT /
+    # set ops / grouping on entities stay comparable; accesses after a
+    # projection barrier fall back to parsing the JSON.
 
     @staticmethod
     def _var_pv(df: DataFrame | None, var: str) -> Column | None:
@@ -466,9 +456,7 @@ class Compiler:
         fields = [F.col("id"), F.col("label")]
         if force_full or self._needs_full(var):
             fields.append(F.col("properties"))
-        return v.select(
-            F.struct(*fields, self._table_pv(v).alias("pv")).alias(var)
-        )
+        return v.select(F.struct(*fields, F.col("pv")).alias(var))
 
     def _oriented_edges(self, rel: A.RelPat, var: str, force_full: bool = False) -> DataFrame:
         """Edge scan -> (var: edge_struct, __src, __dst) honoring direction
@@ -476,7 +464,7 @@ class Compiler:
         undirected = OR of both orientations, expressed here as a union so
         every hop stays an equi-join)."""
         e = self.graph.edges_with_label(rel.label)
-        pv = self._table_pv(e)
+        pv = F.col("pv")
         if rel.props:
             with self._no_lets():
                 for k, vexpr in rel.props.items.items():
@@ -487,7 +475,7 @@ class Compiler:
         fields = [F.col("id"), F.col("start_id"), F.col("end_id"), F.col("label")]
         if force_full or self._needs_full(var):
             fields.append(F.col("properties"))
-        struct = F.struct(*fields, pv.alias("pv")).alias(var)
+        struct = F.struct(*fields, pv).alias(var)
         out_e = e.select(struct, F.col("start_id").alias("__src"), F.col("end_id").alias("__dst"))
         in_e = e.select(struct, F.col("end_id").alias("__src"), F.col("start_id").alias("__dst"))
         if rel.direction == "out":
@@ -1066,7 +1054,7 @@ class Compiler:
             # sf0.1). The equality map is the one static signal of a
             # selective side; the hint is semantics-free.
             df = df.crossJoin(F.broadcast(scan))
-        elif getattr(self, "_df_selective", False):
+        elif self._df_selective:
             # mirror case: the accumulated left side is the filtered
             # one (MATCH (q {k: v}), (n) binds q first)
             df = F.broadcast(df).crossJoin(scan)
@@ -1088,13 +1076,12 @@ class Compiler:
         prop_filter = None
         if rel.props:
             with self._no_lets():  # scan-side predicate, see _no_lets
-                edge_pv = self._table_pv(self.graph.edges)
                 for k, vexpr in rel.props.items.items():
                     # vle applies the filter AFTER its edge-label scan,
                     # so the label's catalog atoms are sound here
                     atoms = self.graph.prop_atoms(rel.label, k)
                     c = self._prop_eq(
-                        G.prop_access_variant(edge_pv, [k], atoms=atoms), vexpr
+                        G.prop_access_variant(F.col("pv"), [k], atoms=atoms), vexpr
                     )
                     prop_filter = c if prop_filter is None else (prop_filter & c)
         # push the already-bound start set into the traversal: the
@@ -1142,6 +1129,7 @@ class Compiler:
     # ------------------------------------------------------------ UNWIND
 
     def compile_unwind(self, u: A.UnwindClause, df, scope):
+        self._df_selective = False  # UNWIND fans the rows out
         if df is None:
             df = self.spark.range(1).select(F.lit(1).alias("__one"))
             base_cols = []
@@ -1220,6 +1208,9 @@ class Compiler:
         return e
 
     def compile_projection(self, clause, df, scope):
+        # a projection boundary (WITH, aggregation) ends the pattern
+        # product the broadcast hint in _bind_node reasons about
+        self._df_selective = False
         items: list[A.ReturnItem] = list(clause.items)
         is_with = isinstance(clause, A.WithClause)
         if df is None:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import ENTRY_ID_BITS, EDGE_SCHEMA, VERTEX_SCHEMA, Graph
+from postgraph_spark.graph import ENTRY_ID_BITS, EDGE_FIELDS, VERTEX_FIELDS, Graph
 from postgraph_spark.plans import ast as A
 from postgraph_spark.plans.compiler import (
     Compiler,
@@ -125,22 +125,22 @@ def rowid_graphid(label_id: int, first_entry: int) -> Column:
     return F.lit(label_id << ENTRY_ID_BITS).cast("long") + F.lit(first_entry) + F.col("__rn")
 
 
-def _entity_struct(col: Column, schema, properties: Column | None = None) -> Column:
-    """An entity struct with exactly the table's fields (drops `pv`),
+def _entity_struct(col: Column, fields, properties: Column | None = None) -> Column:
+    """An entity struct with exactly the entity fields (drops `pv`),
     optionally with new properties."""
     return F.struct(*[
         (properties if f == "properties" and properties is not None else col[f]).alias(f)
-        for f in schema.fieldNames()
+        for f in fields
     ])
 
 
-def _entity_rows(df: DataFrame, structs: list[Column], schema) -> DataFrame | None:
-    """Table rows of the entity structs of each row of df (None when
-    there are none)."""
+def _entity_rows(df: DataFrame, structs: list[Column], fields) -> DataFrame | None:
+    """Table rows (without pv) of the entity structs of each row of df
+    (None when there are none)."""
     if not structs:
         return None
     return df.select(F.explode(F.array(*structs)).alias("__r")).select(
-        *[f"__r.{f}" for f in schema.fieldNames()]
+        *[f"__r.{f}" for f in fields]
     )
 
 
@@ -160,9 +160,6 @@ class WriteRunner:
     # ------------------------------------------------------------- driver
 
     def run(self, q: A.SingleQuery) -> DataFrame | None:
-        # writes can store any type into any property: the static
-        # property-type catalog dies before the first clause compiles
-        self.graph.invalidate_prop_types()
         df: DataFrame | None = None
         scope = Scope()
         result: DataFrame | None = None
@@ -268,8 +265,8 @@ class WriteRunner:
 
         df = df.localCheckpoint(eager=True)  # pin allocated ids
         self.graph.append_rows(
-            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_SCHEMA),
-            _entity_rows(df, [F.col(v) for v in created_e], EDGE_SCHEMA),
+            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_FIELDS),
+            _entity_rows(df, [F.col(v) for v in created_e], EDGE_FIELDS),
         )
         df = df.drop("__rn")
         # anonymous entities drop out of the visible scope
@@ -302,34 +299,39 @@ class WriteRunner:
                 touched[var] = _json_merge(props, delta["j"])
             else:
                 raise CompileError("SET target must be var.prop or var += map")
-        tables = {VKIND_VERTEX: ("vertices", VERTEX_SCHEMA), VKIND_EDGE: ("edges", EDGE_SCHEMA)}
+        tables = {VKIND_VERTEX: ("vertices", VERTEX_FIELDS), VKIND_EDGE: ("edges", EDGE_FIELDS)}
         for var, props_col in touched.items():
             if scope.kinds.get(var) not in tables:
                 raise CompileError(f"cannot SET on {var!r}")
-            schema = tables[scope.kinds[var]][1]
-            df = df.withColumn(var, _entity_struct(F.col(var), schema, props_col))
+            fields = tables[scope.kinds[var]][1]
+            df = df.withColumn(var, _entity_struct(F.col(var), fields, props_col))
         df = df.localCheckpoint(eager=True)
 
         g = self.graph
         for var in touched:
             kind = tables[scope.kinds[var]][0]
-            updates = (
-                df.select(F.col(var)["id"].alias("__uid"), F.col(var)["properties"].alias("__uprops"))
-                .groupBy("__uid")
-                .agg(F.last("__uprops").alias("__uprops"))
+            written = df.select(
+                F.col(var)["id"].alias("__uid"),
+                F.col(var)["label"].alias("label"),
+                F.col(var)["properties"].alias("__uprops"),
             )
-            # touched label partitions for the durable partition-scoped
-            # rewrite (small distinct over the statement's rows)
-            upd_labels = [
-                r[0] for r in df.select(F.col(var)["label"]).distinct().collect()
-            ]
+            # one job: the catalog learns every candidate document's
+            # atoms, and the touched label partitions come back for the
+            # durable partition-scoped rewrite
+            upd_labels = g.extend_prop_types(
+                written.select("label", F.try_parse_json("__uprops").alias("pv"))
+            )
+            updates = (
+                written.groupBy("__uid")
+                .agg(F.last("__uprops").alias("__uprops"))
+                .withColumn("__upv", F.try_parse_json("__uprops"))
+            )
             upd = (
                 getattr(g, kind).join(updates, F.col("id") == F.col("__uid"), "left_outer")
                 .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
-                .drop("__uid", "__uprops")
+                .withColumn("pv", F.coalesce(F.col("__upv"), F.col("pv")))
+                .drop("__uid", "__uprops", "__upv")
             )
-            if "pv" in upd.columns:  # keep the variant in sync
-                upd = upd.withColumn("pv", F.try_parse_json("properties"))
             g.enforce_unique_post_update(upd, upd_labels)
             setattr(g, kind, upd.localCheckpoint(eager=True))
             g.persist_partitions(kind, upd_labels)
@@ -587,8 +589,8 @@ class WriteRunner:
             new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
             new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
             self.graph.append_rows(
-                _entity_rows(misses, new_v, VERTEX_SCHEMA),
-                _entity_rows(misses, new_e, EDGE_SCHEMA),
+                _entity_rows(misses, new_v, VERTEX_FIELDS),
+                _entity_rows(misses, new_e, EDGE_FIELDS),
             )
             # join created entities back to ALL rows on the same keys
             cstructs = misses.select(
@@ -622,7 +624,7 @@ class WriteRunner:
             if bound:
                 out = out.drop(f"__pm_{var}")
                 continue
-            pm = _entity_struct(F.col(f"__pm_{var}"), VERTEX_SCHEMA if kind == "v" else EDGE_SCHEMA)
+            pm = _entity_struct(F.col(f"__pm_{var}"), VERTEX_FIELDS if kind == "v" else EDGE_FIELDS)
             if n_miss and f"__cr_{var}" in out.columns:
                 bound_col = F.when(F.col(f"__pm_{var}").isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
             else:

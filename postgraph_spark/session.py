@@ -63,6 +63,11 @@ def get_spark(app_name: str = "postgraph_spark", *, cpus: int | None = None) -> 
         # events.parquet stores TIMESTAMP(NANOS) which Spark has no native
         # type for; read as long and convert at load (sources.relational)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # durable graph tables store the properties VARIANT (pv) as its
+        # plain (metadata, value) parquet group: Spark reads it back as a
+        # VARIANT through the table schema, and parquet readers that
+        # predate the VARIANT logical type can still open the files
+        .config("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
         # per-Column-op call-site capture (error-message sugar) walks the
         # Python stack on EVERY F.* call — measurable driver overhead for
         # this engine's large generated expression trees

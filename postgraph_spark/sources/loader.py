@@ -12,8 +12,8 @@ endpoints by those user ids. This is the Spark-native re-design:
   single-partition window, no collect of data), and the rows commit
   through Graph.append_rows, the insert path CREATE and MERGE use: the
   label's declared kind and unique constraints are enforced, the
-  property-type catalog is invalidated, and a durable graph appends
-  only the new rows.
+  property-type catalog is extended with the loaded rows' types, and a
+  durable graph appends only the new rows.
 - The user id column is kept as the ``__id`` property (AGE convention),
   so edge loads resolve endpoints with two equi-joins on
   ``properties.__id`` — shuffle on the join key, broadcast when a side

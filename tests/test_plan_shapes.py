@@ -256,3 +256,58 @@ def test_adamic_adar_capped_adjacency_windows_are_keyed(spark, monkeypatch):
     for line in win_lines:
         # every cap window carries a partition key column
         assert ("w#" in line) or ("s#" in line) or ("d#" in line), line
+
+
+# ------------------- durable graphs: stored pv + an extended catalog
+
+
+def test_durable_point_lookup_parses_nothing_and_codegens(spark, tmp_path):
+    """A bulk-loaded durable graph, after one SET, answers a property
+    point lookup from the stored pv VARIANT with typed extraction: no
+    parse_json and no schema_of_variant dispatch in the optimized plan,
+    and the executed plan runs whole-stage codegen'd (with the codegen
+    fallback off, a stage whose generated code fails to compile would
+    raise instead of quietly running interpreted)."""
+    from pyspark.sql import functions as F
+
+    from postgraph_spark.graph import GraphCatalog
+    from postgraph_spark.sources.loader import load_vertices
+
+    eng = CypherEngine(spark, GraphCatalog(spark, root=str(tmp_path)))
+    eng.execute("CREATE GRAPH durable_shapes")
+    eng.execute("USE GRAPH durable_shapes")
+    customers = spark.range(1, 41).select(
+        F.col("id").alias("c_custkey"),
+        F.concat(F.lit("cust-"), F.col("id").cast("string")).alias("c_name"),
+        (F.col("id") * 1.25).alias("c_acctbal"),
+    )
+    load_vertices(eng.graph, "customer", customers, id_col="c_custkey")
+    eng.execute("MATCH (c:customer {c_custkey: 3}) SET c.c_acctbal = 99.5")
+
+    df = eng.execute("MATCH (c:customer {c_custkey: 7}) RETURN c.c_acctbal")
+    # the optimized plan names both as static invokes (parseJson,
+    # schemaOfVariant); the SQL names have underscores
+    opt = df._jdf.queryExecution().optimizedPlan().toString().lower().replace("_", "")
+    assert "parsejson" not in opt, opt
+    assert "schemaofvariant" not in opt, opt
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = df.collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert [r[0]["d"] for r in rows] == [8.75]
+    assert "*(" in _physical(df), _physical(df)  # *(n) marks a codegen stage
+
+
+def test_unwind_ends_selective_broadcast(engine):
+    """The broadcast hint for a property-filtered comma-pattern side only
+    holds while the accumulated rows ARE that filtered scan: after an
+    UNWIND fans them out (and a WITH projects them), a later MATCH must
+    not broadcast the accumulated side."""
+    plan = optimized(
+        engine,
+        "MATCH (q:a {x: 1}) UNWIND range(1, 1000) AS i WITH q, i "
+        "MATCH (n:b) RETURN q.x AS x, i, n.y AS y",
+    )
+    assert "leftHint=(strategy=broadcast)" not in plan, plan

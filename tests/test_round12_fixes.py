@@ -5,7 +5,7 @@
    including missing keys and JSON nulls.
 2. The property-type catalog narrows plans (no schema_of_variant in a
    typed statement's plan; WITH aliases materialize only feasible gval
-   fields) and dies on the first write.
+   fields) and writes extend it with the types they store.
 3. Narrowed group keys keep rollup/grouping-set struct-level nullness
    through the RETURN re-widening.
 """
@@ -105,13 +105,13 @@ def test_catalog_narrowing_group_key(spark):
     assert all(r["z"]["t"] == G.T_NULL for r in df2.collect())
 
 
-def test_write_invalidates_catalog(spark):
+def test_write_extends_catalog(spark):
     eng = CypherEngine(spark)
     g = _typed_graph(spark)
     eng.catalog.register(g)
     assert g.prop_atoms("person", "age") == frozenset({"long"})
     eng.execute("CREATE (:person {name: 'dee', age: 'not-a-number'})")
-    assert g.prop_atoms("person", "age") is None  # catalog dead
+    assert g.prop_atoms("person", "age") == frozenset({"long", "string"})
     # and the mixed-type data now answers correctly (no stale narrowing)
     df = eng.execute("MATCH (p:person) WHERE p.age = 'not-a-number' RETURN p.name AS n")
     assert [r["n"]["s"] for r in df.collect()] == ["dee"]

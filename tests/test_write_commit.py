@@ -1,8 +1,8 @@
 """One commit for created rows: CREATE (literal or row-wise), MERGE and
 the bulk loader all append through Graph.append_rows, so they share its
-guarantees — the property-type catalog is invalidated, unique
-constraints are checked on the vertex AND edge batch before either
-table changes, and a declared label kind is enforced."""
+guarantees — the property-type catalog is extended with the types the
+rows store, unique constraints are checked on the vertex AND edge batch
+before either table changes, and a declared label kind is enforced."""
 
 import pytest
 
@@ -52,9 +52,9 @@ def test_create_clauses_share_variables(spark):
     assert eng.fetch_values("MATCH (a:p {n: 1})-[:r]->(b:q) RETURN count(b)") == [1]
 
 
-def test_load_invalidates_property_types(spark):
+def test_load_extends_property_types(spark):
     """from_rows catalogs every property's type; a load that stores a
-    string where the catalog says long must drop that knowledge."""
+    string where the catalog says long must widen that knowledge."""
     g = Graph.from_rows(spark, "wc_types", [("person", {"name": "ann", "age": 34})], [])
     eng = CypherEngine(spark, GraphCatalog(spark))
     eng.catalog.register(g)
