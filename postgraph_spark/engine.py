@@ -5,6 +5,18 @@ clause IR -> DataFrame compile (plans.compiler) -> Catalyst. Graph and
 label DDL (CREATE/USE/DROP GRAPH — reference graph_commands.c) and plain
 SQL are dispatched before the parser; a statement with any write clause
 (CREATE, SET, DELETE, MERGE) runs through plans.writes.WriteRunner.
+
+Reads go through a plan cache keyed on the graph snapshot (_PLAN_CACHE),
+the analog of Postgres's plancache.c, with two kinds of entry. A text
+seen before on the snapshot reuses its DataFrame. A new text of a known
+statement shape (the same tokens up to its int, float and string
+literals) reuses the shape's generic plan: the parser lifts those
+literals into parameter slots, the compiler builds the plan once with a
+sentinel literal per slot, and each text binds its values into that
+plan with one substitution instead of compiling again. A template is
+trusted only after it reproduced a per-text plan: bound to the first
+text's values, its analyzed plan must sameResult that text's plan;
+otherwise the shape compiles per text (see _Shape).
 """
 
 from __future__ import annotations
@@ -18,7 +30,7 @@ from pyspark.sql import functions as F
 from postgraph_spark.functions import gtype as G
 from postgraph_spark.graph import Graph, GraphCatalog
 from postgraph_spark.plans import ast as A
-from postgraph_spark.plans.compiler import Compiler
+from postgraph_spark.plans.compiler import Compiler, slot_sentinel
 from postgraph_spark.plans.parser import parse
 
 _DDL_RE = re.compile(
@@ -72,9 +84,112 @@ _IVF_INDEX_RE = re.compile(
 )
 
 
-#: read-path compiled-plan cache (see CypherEngine.execute); bounded,
-#: cleared wholesale on overflow — correctness never depends on it
+#: read-path plan cache (CypherEngine._read_plan), the analog of PG's
+#: plancache.c. Every key starts with a graph SNAPSHOT: the session,
+#: the graph and its current vertex/edge table objects. A write replaces
+#: a table, so it invalidates every entry of the old snapshot. Two kinds
+#: of entry per snapshot:
+#:   (*snapshot, text)  -> the DataFrame of that exact text (a hot text);
+#:   (*snapshot, shape) -> the _Shape of a statement shape: its first
+#:                         per-text plan and its verified plan templates.
+#: Each value also holds the keyed objects, so their ids are never
+#: recycled onto a new graph while the entry lives. Bounded: cleared
+#: wholesale past 256 entries, as correctness never depends on it.
 _PLAN_CACHE: dict = {}
+
+
+class _Template:
+    """A generic plan: a statement compiled with each parameter slot as
+    its sentinel (Compiler.compile_template). It serves every text of
+    its shape whose pinned slots hold the values it was compiled with."""
+
+    def __init__(self, spark: SparkSession, df: DataFrame, params: list, pinned: dict):
+        self.spark = spark
+        self.df = df
+        self.pinned = pinned  # {slot: value}
+        self.sentinels = []
+        if not params:
+            return
+        self.plan = df._jdf.queryExecution().analyzed()
+        # JVM entry points looked up once: each package step of a py4j
+        # name lookup is a round trip
+        jvm = spark._jvm
+        # Literal.apply types a python value as F.lit does
+        literal_obj = getattr(jvm.org.apache.spark.sql.catalyst.expressions, "Literal$")
+        self._literal = literal_obj.__getattr__("MODULE$")
+        self._hash_map = jvm.java.util.HashMap
+        self._utils = jvm.org.apache.spark.api.python.PythonUtils
+        self._dataset = jvm.org.apache.spark.sql.classic.Dataset
+        self.sentinels = [self._literal.apply(slot_sentinel(p.kind, p.slot)) for p in params]
+
+    def matches(self, values: list) -> bool:
+        return all(values[slot] == v for slot, v in self.pinned.items())
+
+    def bind(self, values: list) -> DataFrame:
+        """The template with each slot's sentinel literal replaced by its
+        value: one substitution over the analyzed plan (a Scala Map is
+        the PartialFunction transformAllExpressions takes)."""
+        if not self.sentinels:
+            return self.df
+        subst = self._hash_map()
+        for sentinel, v in zip(self.sentinels, values):
+            subst.put(sentinel, self._literal.apply(v))
+        plan = self.plan.transformAllExpressions(self._utils.toScalaMap(subst))
+        return DataFrame(self._dataset.ofRows(self.spark._jsparkSession, plan), self.spark)
+
+
+class _Shape:
+    """Plan-cache state of one statement shape on one snapshot.
+
+    The first text of a shape compiles per text, as any text did before
+    templates: a snapshot that sees a shape once (every read-your-write
+    check) pays nothing extra. The second sighting compiles the shape's
+    template from the first text and verifies it: bound to the first
+    text's values, its analyzed plan must sameResult the first text's
+    plan. A template that fails the check, or whose compile raises (an
+    analyzer rule consumed a sentinel), marks the shape per-text for
+    the snapshot. A text whose pinned values no template holds compiles
+    per text and becomes the reference for the next template."""
+
+    def __init__(self, q, df: DataFrame):
+        self.first = (q, df)
+        self.templates: list[_Template] = []
+        self.per_text = False
+
+    def plan(self, spark: SparkSession, graph: Graph, q) -> DataFrame | None:
+        """q's plan bound from a template, or None to compile q per text."""
+        if self.per_text:
+            return None
+        values = [p.literal for p in q.params]
+        for t in self.templates:
+            if t.matches(values):
+                return t.bind(values)
+        q0, df0 = self.first
+        if any(p.pinned and p.literal != v for p, v in zip(q0.params, values)):
+            return None  # q differs from q0 in a value q0's compile read
+        t = self._verified_template(spark, graph, q0, df0)
+        if t is None:
+            self.per_text = True
+            return None
+        self.templates.append(t)
+        return t.bind(values) if t.matches(values) else None
+
+    @staticmethod
+    def _verified_template(spark, graph, q0, df0) -> _Template | None:
+        if not q0.params:
+            return _Template(spark, df0, [], {})  # the shape is the text
+        try:
+            df, pinned = Compiler(spark, graph).compile_template(q0)
+            t = _Template(spark, df, q0.params, pinned)
+            bound = t.bind([p.literal for p in q0.params])
+            same = bound._jdf.queryExecution().analyzed().sameResult(
+                df0._jdf.queryExecution().analyzed()
+            )
+        except Exception:  # noqa: BLE001
+            # a sentinel the compiler or the analyzer cannot take: the
+            # per-text compile that follows raises if the text is wrong
+            return None
+        return t if same else None
 
 
 class CypherEngine:
@@ -124,30 +239,35 @@ class CypherEngine:
                 if self.graph is None:
                     raise ValueError("no graph selected (USE GRAPH first)")
                 return WriteRunner(self.spark, self.graph).run(q)
-        # READ-path plan cache — the analog of PG's prepared-statement /
-        # plan caching (the reference rides plancache.c): a DataFrame is
-        # an immutable logical plan, so the same query text against the
-        # same graph SNAPSHOT recompiles to an identical plan; driver-side
-        # Catalyst analysis is the dominant repeat cost. Keyed on the
-        # graph's current table objects — any write replaces
-        # vertices/edges, so mutation naturally invalidates.
-        key = None
-        if self.graph is not None:
-            key = (
-                id(self.spark), id(self.graph),
-                id(self.graph.vertices), id(self.graph.edges), text,
-            )
-            hit = _PLAN_CACHE.get(key)
-            if hit is not None:
-                return hit[0]
-        df = Compiler(self.spark, self.graph).compile_query(q)
-        if key is not None:
-            if len(_PLAN_CACHE) > 256:
-                _PLAN_CACHE.clear()
-            # pin the keyed objects: live entries keep their ids from
-            # being recycled by the allocator (a recycled id would
-            # alias a NEW graph onto an old plan)
-            _PLAN_CACHE[key] = (df, self.graph, self.graph.vertices, self.graph.edges)
+        if self.graph is None:
+            return Compiler(self.spark, None).compile_query(q)
+        return self._read_plan(text, q)
+
+    def _read_plan(self, text: str, q) -> DataFrame:
+        """The plan of read statement `q` on the current snapshot (see
+        _PLAN_CACHE): the exact text's cached DataFrame, else a template
+        of its shape bound to its literals, else a per-text compile. A
+        DataFrame is an immutable logical plan, so reuse is safe on one
+        snapshot; Python compile and Catalyst analysis are the repeat
+        costs it saves."""
+        g = self.graph
+        snap = (id(self.spark), id(g), id(g.vertices), id(g.edges))
+        hit = _PLAN_CACHE.get((*snap, text))
+        if hit is not None:
+            return hit[0]
+        if len(_PLAN_CACHE) > 256:
+            _PLAN_CACHE.clear()
+        held = (g, g.vertices, g.edges)
+        entry = _PLAN_CACHE.get((*snap, q.shape))
+        shape = entry[0] if entry is not None else None
+        df = shape.plan(self.spark, g, q) if shape is not None else None
+        if df is None:
+            df = Compiler(self.spark, g).compile_query(q)
+            if shape is None:
+                _PLAN_CACHE[(*snap, q.shape)] = (_Shape(q, df), *held)
+            else:
+                shape.first = (q, df)
+        _PLAN_CACHE[(*snap, text)] = (df, *held)
         return df
 
     def _sync_sql_views(self) -> None:

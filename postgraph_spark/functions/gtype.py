@@ -943,36 +943,53 @@ def cmp_eq(a: Column, b: Column) -> Column:
     gtype_util.c:233-360) via element orderability keys; objects and
     containers nested deeper than one level still compare by JSON text
     (documented residual divergence). The array branch is pruned when
-    either side's static type set excludes arrays."""
-    may_arr = T_ARRAY in gv_types(a) and T_ARRAY in gv_types(b)
-    chain = (
-        F.when((a.t == T_NULL) & (b.t == T_NULL), F.lit(True))
-        .when((a.t == T_NULL) | (b.t == T_NULL), F.lit(False))
-        .when((a.t == T_NUMBER) & (b.t == T_NUMBER), _num_eq(a, b))
+    either side's static type set excludes arrays.
+
+    Every same-type branch is PRUNED by the operands' shared static
+    types, as _ord_cmp prunes its axes: two rows reach the branch of
+    type X only when X is in both type sets. A numeric property
+    compared with an int literal compiles to the null tests and the
+    number branch alone — no string/bool/temporal/JSON comparisons of
+    two null-literal fields (each of which Spark logs as a trivially
+    true equals predicate)."""
+    ta, tb = gv_types(a), gv_types(b)
+    shared = ta & tb
+    ts_or_date = {T_TIMESTAMP, T_DATE}
+    chain = F.when((a.t == T_NULL) & (b.t == T_NULL), F.lit(True)).when(
+        (a.t == T_NULL) | (b.t == T_NULL), F.lit(False)
+    )
+    if T_NUMBER in shared:
+        chain = chain.when((a.t == T_NUMBER) & (b.t == T_NUMBER), _num_eq(a, b))
+    if ta & ts_or_date and tb & ts_or_date:
         # timestamp vs date cross-compare by instant — midnight of a
         # date equals the same timestamp (gtype_util.c:1838-1848)
-        .when(
+        chain = chain.when(
             a.t.isin(T_TIMESTAMP, T_DATE) & b.t.isin(T_TIMESTAMP, T_DATE),
             _temporal_us(a) == _temporal_us(b),
         )
-        .when(a.t != b.t, F.lit(False))
-        .when(a.t == T_STRING, a.s == b.s)
-        .when(a.t == T_BOOL, a.b == b.b)
-        .when(a.t.isin(*_TEMPORAL_TS), a.i == b.i)
-    )
-    if may_arr:
+    chain = chain.when(a.t != b.t, F.lit(False))
+    if T_STRING in shared:
+        chain = chain.when(a.t == T_STRING, a.s == b.s)
+    if T_BOOL in shared:
+        chain = chain.when(a.t == T_BOOL, a.b == b.b)
+    if shared & {T_TIME, T_INTERVAL}:
+        # timestamp/date pairs took the cross-compare branch above
+        chain = chain.when(a.t.isin(*_TEMPORAL_TS), a.i == b.i)
+    if T_ARRAY in shared:
         chain = chain.when(
             (a.t == T_ARRAY) & (b.t == T_ARRAY),
             F.coalesce(_array_keys(a) == _array_keys(b), F.lit(False)),
         )
-    if T_OBJECT in gv_types(a) and T_OBJECT in gv_types(b):
+    if T_OBJECT in shared:
         # objects compare by sorted (key, canonical-value) pairs, so
         # {a: 1} = {a: 1.0} (gtype_util.c:233-360 object walk)
         chain = chain.when(
             (a.t == T_OBJECT) & (b.t == T_OBJECT),
             F.coalesce(_obj_canon_txt(a.j) == _obj_canon_txt(b.j), F.lit(False)),
         )
-    return chain.otherwise(F.coalesce(a.j == b.j, F.lit(False)))
+    # every type has a branch above, so only a pair of some type outside
+    # the static sets could get here
+    return chain.otherwise(F.lit(False))
 
 
 def _cmp3vl(a: Column, b: Column, res: Column) -> Column:

@@ -15,6 +15,71 @@ from typing import Any, Optional
 class Lit:
     value: Any  # None | bool | int | float | str
 
+    @property
+    def literal(self) -> Any:
+        """The value the compiler's literal case puts in the plan."""
+        return self.value
+
+
+#: the lexer's ints are never negative, so each slot kind maps to one
+#: Spark literal type: py4j hands a python int below 2**31 to the JVM as
+#: an Integer, below 2**63 as a Long
+_INT32, _INT64 = 2**31, 2**63
+
+
+def literal_kind(v: Any) -> str | None:
+    """Spark literal type class of a value parse_atom may lift into a
+    parameter slot: "int" (IntegerType), "bigint" (LongType), "double"
+    or "string"; None keeps the literal inline (null, booleans, ints
+    past int64)."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, int):
+        return "int" if v < _INT32 else "bigint" if v < _INT64 else None
+    if isinstance(v, float):
+        return "double"
+    if isinstance(v, str):
+        return "string"
+    return None
+
+
+class Param(Lit):
+    """A literal lifted into a parameter slot of its statement's shape
+    (the analog of a prepared statement's $n). It is a Lit to every
+    consumer, with two differences that make plan templates sound:
+
+    * the compiler's literal case reads ``literal``, which is the slot's
+      sentinel while a template compiles (``sentinel`` is set) and the
+      real value otherwise;
+    * every other read of ``value`` *pins* the slot: the compiler used
+      the value in Python (LIMIT, a const-folded cast, a regex it
+      translated), so a template is valid only for texts with the same
+      value there.
+    """
+
+    def __init__(self, value: Any, kind: str, token: int):
+        self._value = value
+        self.kind = kind  # literal_kind(value)
+        self.token = token  # index of the literal's token in the statement
+        self.slot = -1  # position among the statement's params
+        self.sentinel: Any = None
+        self.pinned = False
+
+    @property
+    def value(self) -> Any:
+        self.pinned = True
+        return self._value
+
+    @property
+    def literal(self) -> Any:
+        return self._value if self.sentinel is None else self.sentinel
+
+    def __eq__(self, other):
+        # equal to a Lit of the same value, as Lit(1) == Lit(1)
+        if not isinstance(other, Lit):
+            return NotImplemented
+        return self.value == other.value
+
 
 @dataclass
 class ListLit:
@@ -279,6 +344,11 @@ class MergeClause:
 @dataclass
 class SingleQuery:
     clauses: list
+    # statement-level, set by parser.parse on the root only: the lifted
+    # literals in slot order, and the shape key (the token stream with
+    # each lifted literal replaced by its slot kind)
+    params: list = field(default_factory=list, compare=False, repr=False)
+    shape: tuple = field(default=(), compare=False, repr=False)
 
 
 @dataclass
@@ -286,3 +356,5 @@ class SetOp:
     op: str  # 'union' | 'union_all' | 'intersect' | 'except'
     left: Any  # SingleQuery | SetOp
     right: Any
+    params: list = field(default_factory=list, compare=False, repr=False)
+    shape: tuple = field(default=(), compare=False, repr=False)

@@ -142,7 +142,7 @@ def _analyze_full_vars(q) -> tuple[set[str], bool]:
 
     def walk(node):
         nonlocal ok
-        if node is None or isinstance(node, (str, int, float, bool, bytes)):
+        if node is None or isinstance(node, (str, int, float, bool, bytes, A.Lit)):
             return
         if isinstance(node, A.Var):
             full.add(node.name)
@@ -241,6 +241,20 @@ def _fold_const_container(e):
     return _NOT_CONST
 
 
+def slot_sentinel(kind: str, slot: int):
+    """The value a parameter slot compiles from inside a plan template:
+    of the slot kind's Spark type, distinct per slot, and negative or
+    NUL-delimited, so neither a statement text (the lexer's numbers are
+    never negative) nor a compiler constant produces it."""
+    if kind == "int":
+        return -2_000_000_000 + slot
+    if kind == "bigint":
+        return -(2**62) - slot
+    if kind == "double":
+        return -1.0e300 - slot * 1.0e286
+    return f"\x00slot{slot}\x00"
+
+
 class Compiler:
     def __init__(self, spark: SparkSession, graph: Graph | None):
         self.spark = spark
@@ -260,6 +274,20 @@ class Compiler:
         self._full_vars: set[str] | None = None
 
     # ------------------------------------------------------------ entry
+
+    def compile_template(self, q) -> tuple[DataFrame, dict]:
+        """Compile statement `q` with each parameter slot as its
+        sentinel (a generic plan). Returns the plan and the slots the
+        compile pinned, {slot: value}: the values it read in Python,
+        which the plan is valid for."""
+        for p in q.params:
+            p.sentinel, p.pinned = slot_sentinel(p.kind, p.slot), False
+        try:
+            df = self.compile_query(q)
+        finally:
+            for p in q.params:
+                p.sentinel = None
+        return df, {p.slot: p.literal for p in q.params if p.pinned}
 
     def compile_query(self, q) -> DataFrame:
         if self._full_vars is None:
@@ -1721,7 +1749,9 @@ class Compiler:
     def compile_expr(self, e, df, scope: Scope | None = None) -> Column:
         scope = scope or Scope()
         if isinstance(e, A.Lit):
-            return G.gv_lit(e.value)
+            # a parameter slot compiles from its sentinel inside a plan
+            # template (see compile_template); reading .literal pins nothing
+            return G.gv_lit(e.literal)
         if isinstance(e, (A.ListLit, A.MapLit)):
             # fully-literal containers constant-fold to ONE json text in
             # python (PG folds Const trees at plan time): without this a

@@ -20,6 +20,8 @@ class Parser:
     def __init__(self, text: str):
         self.toks = tokenize(text)
         self.i = 0
+        #: literals lifted into parameter slots, in token order
+        self.params: list[A.Param] = []
 
     # ------------------------------------------------------------ helpers
 
@@ -30,6 +32,11 @@ class Parser:
     def peek(self, off: int = 1) -> Token:
         j = min(self.i + off, len(self.toks) - 1)
         return self.toks[j]
+
+    def _peek_op(self, op: str) -> bool:
+        # lookahead on the kind too: a string literal '(' is a parameter
+        # slot, and the shape key must decide the parse
+        return self.peek().kind == "op" and self.peek().value == op
 
     def advance(self) -> Token:
         t = self.cur
@@ -275,7 +282,7 @@ class Parser:
         ((a,b),(a),()) | empty grouping () (cypher_gram.y:4441-4490)."""
         out = []
         while True:
-            if self.at_name("rollup", "cube") and self.peek().value == "(":
+            if self.at_name("rollup", "cube") and self._peek_op("("):
                 kind = self.advance().value.lower()
                 self.eat_op("(")
                 exprs = self.parse_expr_list()
@@ -677,12 +684,12 @@ class Parser:
                     break
                 chain.append(A.UnaryOp("NOT", A.BinOp("IN", left, self.parse_bitor())))
                 break
-            elif self.at_name("isnull") and self.peek().value != "(":
+            elif self.at_name("isnull") and not self._peek_op("("):
                 # a_expr ISNULL (g.y:13871)
                 self.advance()
                 chain.append(A.IsNull(left, False))
                 break
-            elif self.at_name("notnull") and self.peek().value != "(":
+            elif self.at_name("notnull") and not self._peek_op("("):
                 # a_expr NOTNULL (g.y:13879)
                 self.advance()
                 chain.append(A.IsNull(left, True))
@@ -889,17 +896,45 @@ class Parser:
                 break
         return e
 
+    def shape(self) -> tuple:
+        """The statement's shape key: its token stream with each lifted
+        literal replaced by its slot kind. Texts of one shape parse to
+        the same tree up to the lifted values."""
+        out = [(t.kind, t.value) for t in self.toks]
+        for p in self.params:
+            out[p.token] = ("$", p.kind)
+        return tuple(out)
+
+    def _lift(self, value):
+        """A literal of parse_atom -> a parameter slot (A.Param), or an
+        inline A.Lit when its Spark type depends on more than its kind."""
+        kind = A.literal_kind(value)
+        if kind is None:
+            return A.Lit(value)
+        p = A.Param(value, kind, self.i - 1)
+        self.params.append(p)
+        return p
+
+    def _inline_if_literal(self, e, first_param: int):
+        """A fully literal list/map container stays inline: the compiler
+        folds it to one JSON text in Python, so its literals are part of
+        the shape rather than slots."""
+        if not _all_literal(e):
+            return e
+        del self.params[first_param:]
+        return _inline(e)
+
     def parse_atom(self):
         t = self.cur
         if t.kind == "int":
             self.advance()
-            return A.Lit(int(t.value))
+            return self._lift(int(t.value))
         if t.kind == "float":
             self.advance()
-            return A.Lit(float(t.value))
+            return self._lift(float(t.value))
         if t.kind == "string":
             self.advance()
-            return A.Lit(t.value)
+            return self._lift(t.value)
         if t.kind == "kw":
             if t.value == "null":
                 self.advance()
@@ -1000,13 +1035,15 @@ class Parser:
             return e
         if t.kind == "op" and t.value == "[":
             self.advance()
+            first = len(self.params)
             items = []
             if not self.at_op("]"):
                 items = self.parse_expr_list()
             self.eat_op("]")
-            return A.ListLit(items)
+            return self._inline_if_literal(A.ListLit(items), first)
         if t.kind == "op" and t.value == "{":
-            return self.parse_map_literal()
+            first = len(self.params)
+            return self._inline_if_literal(self.parse_map_literal(), first)
         raise ParseError(f"unexpected token {t.value!r} at {t.pos}")
 
     def _func_decorations(self, fc: A.FuncCall) -> A.FuncCall:
@@ -1051,5 +1088,36 @@ class Parser:
         return A.CaseExpr(operand, whens, default)
 
 
+def _all_literal(e) -> bool:
+    if isinstance(e, A.Lit):
+        return True
+    if isinstance(e, A.ListLit):
+        return all(_all_literal(x) for x in e.items)
+    if isinstance(e, A.MapLit):
+        return all(_all_literal(x) for x in e.items.values())
+    return isinstance(e, A.UnaryOp) and e.op == "-" and _all_literal(e.operand)
+
+
+def _inline(e):
+    """Copy of a fully literal container with its params as plain Lits."""
+    if isinstance(e, A.Param):
+        return A.Lit(e.literal)
+    if isinstance(e, A.ListLit):
+        return A.ListLit([_inline(x) for x in e.items])
+    if isinstance(e, A.MapLit):
+        return A.MapLit({k: _inline(v) for k, v in e.items.items()})
+    if isinstance(e, A.UnaryOp):
+        return A.UnaryOp(e.op, _inline(e.operand))
+    return e
+
+
 def parse(text: str):
-    return Parser(text).parse()
+    """Parse one statement. Its int, float and string literals become
+    parameter slots (A.Param); the root carries them in slot order as
+    ``params``, and the shape key as ``shape``."""
+    p = Parser(text)
+    q = p.parse()
+    for slot, param in enumerate(p.params):
+        param.slot = slot
+    q.params, q.shape = p.params, p.shape()
+    return q
