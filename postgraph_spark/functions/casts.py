@@ -1,7 +1,7 @@
 """Extended typecast kit — the `to*` families beyond the core scalars
 (reference gtype_typecasting.c, 2,409 LoC / 112 fns; Cypher-callable
 names are the no-underscore set: tobytea, toinet/tocidr, tomacaddr[8],
-totsvector/totsquery, to*range, ...).
+to*range, ...; totsvector/totsquery live in the tsearch kit).
 
 Engine convention: exotic scalar types travel as their CANONICAL TEXT
 form in a string gval (SURVEY §1.3 maps inet/macaddr/tsvector/range to
@@ -132,28 +132,6 @@ def cast_inet(gv: Column) -> Column:
 
 def cast_cidr(gv: Column) -> Column:
     return G.gv_str(_inet_udf("cidr")(_str_in(gv)))
-
-
-# ------------------------------------------------------------------ tsearch
-
-def cast_tsvector(gv: Column) -> Column:
-    """totsvector (gtype_tsearch.c tsvector_in semantics): whitespace-
-    separated lexemes, deduplicated, sorted, quoted. No normalization —
-    that is to_tsvector(config, text)'s job, not the cast's."""
-    s = _str_in(gv)
-    lex = F.array_distinct(F.filter(F.split(s, r"\s+"), lambda x: x != ""))
-    quoted = F.transform(F.array_sort(lex), lambda x: F.concat(F.lit("'"), x, F.lit("'")))
-    return G.gv_str(F.when(s.isNotNull(), F.array_join(quoted, " ")))
-
-
-def cast_tsquery(gv: Column) -> Column:
-    """totsquery (tsquery_in): lexemes become quoted, operators & | ! ( )
-    <-> keep their structure with canonical single spacing."""
-    s = _str_in(gv)
-    quoted = F.regexp_replace(s, r"([A-Za-z0-9_]+)", "'$1'")
-    spaced = F.regexp_replace(quoted, r"\s*(&|\||<->)\s*", " $1 ")
-    tight = F.trim(F.regexp_replace(spaced, r"!\s+", "!"))
-    return G.gv_str(F.when(s.isNotNull(), tight))
 
 
 # ------------------------------------------------------------------- ranges

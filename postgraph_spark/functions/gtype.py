@@ -288,16 +288,6 @@ def interval_parts(gv: Column) -> Column:
     )
 
 
-def ts_col(gv: Column) -> Column:
-    """timestamp gval -> Spark TimestampType column (others -> null)."""
-    return F.timestamp_micros(F.when(gv.t == T_TIMESTAMP, gv.i))
-
-
-def date_col(gv: Column) -> Column:
-    """date gval -> Spark DateType column."""
-    return F.date_from_unix_date(F.when(gv.t == T_DATE, gv.i).cast("int"))
-
-
 def gv_array_json(c: Column) -> Column:
     return _tag_types(_mk(_t_or_null(c, T_ARRAY), j=c), T_ARRAY)
 
@@ -409,12 +399,6 @@ def variant_atom(schema: str) -> str | None:
     if schema in _EXACT_ATOMS:
         return _EXACT_ATOMS[schema]
     return next((a for p, a in _PREFIX_ATOMS if schema.startswith(p)), None)
-
-
-def atoms_types(atoms) -> frozenset:
-    """Catalog atom set -> statically-possible gtype tag set. T_NULL is
-    always possible: a property can be absent (or JSON null) per row."""
-    return frozenset(ATOM_TAGS[a] for a in atoms if a in ATOM_TAGS) | {T_NULL}
 
 
 def from_variant_atoms(x: Column, atoms, bind: bool = False) -> Column:
@@ -1110,10 +1094,6 @@ def _cal_add(ts_us: Column, parts: Column, sign: int = 1) -> Column:
     days0 = ((ts_us - tod).cast("decimal(28,0)") / F.lit(US_PER_DAY)).cast("long")
     d2 = F.date_add(F.add_months(F.date_from_unix_date(days0.cast("int")), m), d)
     return F.unix_date(d2).cast("long") * US_PER_DAY + tod + u
-
-
-def _iv_total_us(parts: Column) -> Column:
-    return parts["months"] * US_PER_MONTH + parts["days"] * US_PER_DAY + parts["us"]
 
 
 def _iv_json(m: Column, d: Column, u: Column) -> Column:

@@ -25,10 +25,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are known stopwords — the core signal of
     the stopword-based language-ID heuristic."""
@@ -43,12 +39,6 @@ def lang_id(text: Column | str, threshold: float = 0.05) -> Column:
     (A real deployment would add per-language char-n-gram profiles; the
     Spark shape — pure expression, no shuffle — is the point.)"""
     return F.when(stopword_ratio(text) >= threshold, F.lit("en")).otherwise(F.lit("unk"))
-
-
-def avg_token_len(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total.cast("double") / F.greatest(F.size(toks), F.lit(1))
 
 
 def quality_score(text: Column | str) -> Column:

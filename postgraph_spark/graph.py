@@ -142,11 +142,6 @@ def make_graphid(label_id: int, entry_id: int) -> int:
     return (label_id << ENTRY_ID_BITS) | entry_id
 
 
-def graphid_label_id(col: F.Column) -> F.Column:
-    """GET_LABEL_ID: high 16 bits (graphid.h:49)."""
-    return F.shiftrightunsigned(col, ENTRY_ID_BITS)
-
-
 def graphid_entry_id(col: F.Column) -> F.Column:
     """GET_ENTRY_ID: low 48 bits (graphid.h:52)."""
     return col.bitwiseAND(F.lit(ENTRY_ID_MASK))
@@ -203,8 +198,7 @@ class Graph:
         #: append_rows -> persist_append, SET/DELETE through
         #: persist_partitions
         self.durable_path: str | None = None
-        #: current snapshot subdirectory (``snap-N``) under durable_path;
-        #: None = legacy flat layout (tables at durable_path/{vertices,edges})
+        #: current snapshot subdirectory (``snap-N``) under durable_path
         self._snapshot: str | None = None
         #: property-type catalog (round-12, guide §2.3 narrower types):
         #: label -> {property -> frozenset of gtype atoms ("long",
@@ -366,31 +360,16 @@ class Graph:
         its ``snapshot`` field names the live ``snap-N`` directory, so a
         reader always sees one fully-consistent (vertices, edges) pair —
         a crash mid-persist leaves either the old or the new snapshot,
-        never a torn mix. Graphs written by older layouts (tables directly
-        under ``path``, or without the stored ``pv`` column) are still
-        readable."""
-        meta_path = os.path.join(path, "catalog.json")
-        meta = {}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-        snapshot = meta.get("snapshot")
-        base = os.path.join(path, snapshot) if snapshot else path
-
-        def load(sub: str, schema) -> DataFrame:
-            p = os.path.join(base, sub)
-            # legacy-layout crash recovery (pre-snapshot per-table swap):
-            # if the live dir vanished mid-swap, the .old sibling IS the
-            # previous committed table — restore it
-            if snapshot is None and not os.path.isdir(p) and os.path.isdir(p + ".old"):
-                os.rename(p + ".old", p)
-            try:
-                return spark.read.schema(schema).parquet(p)
-            except Exception:  # empty/new graph: no files yet
-                return spark.createDataFrame([], schema)
-
-        vertices = load("vertices", VERTEX_SCHEMA)
-        edges = load("edges", EDGE_SCHEMA)
+        never a torn mix. Graphs stored without the ``pv`` column are still
+        readable. A missing table directory fails the open: an empty table
+        is an empty directory, never an absent one."""
+        with open(os.path.join(path, "catalog.json")) as f:
+            meta = json.load(f)
+        snapshot = meta["snapshot"]
+        vertices, edges = (
+            spark.read.schema(schema).parquet(os.path.join(path, snapshot, sub))
+            for sub, schema in (("vertices", VERTEX_SCHEMA), ("edges", EDGE_SCHEMA))
+        )
         stored = meta.get("prop_types")
         if stored is None:
             # no stored catalog: a layout from before pv was stored
@@ -417,14 +396,8 @@ class Graph:
         return g
 
     def _table_dir(self, kind: str) -> str:
-        """Resolved on-disk directory for a table under the live snapshot
-        (or the legacy flat layout when no snapshot pointer exists)."""
-        base = (
-            os.path.join(self.durable_path, self._snapshot)
-            if self._snapshot
-            else self.durable_path
-        )
-        return os.path.join(base, kind)
+        """On-disk directory of a table under the live snapshot."""
+        return os.path.join(self.durable_path, self._snapshot, kind)
 
     @staticmethod
     def _table_writer(df: DataFrame, schema):
@@ -442,25 +415,6 @@ class Graph:
             .write.option("parquet.bloom.filter.enabled#id", "true")
             .option("parquet.bloom.filter.expected.ndv#id", "10000000")
         )
-
-    def write(self, path: str, mode: str = "overwrite") -> None:
-        """Export a flat-layout copy (tables directly under `path`),
-        partitioned by label → labeled scans prune partitions. NOT the
-        durable-commit path — that is persist()/persist_append with the
-        snap-N pointer scheme; exporting onto the live durable path
-        would write a snapshot-less catalog.json beside snapshot tables
-        and orphan them, so it is refused."""
-        if self.durable_path and os.path.abspath(path) == os.path.abspath(self.durable_path):
-            raise ValueError("use persist() for the durable path, write() only exports")
-        os.makedirs(path, exist_ok=True)
-        self._table_writer(self.vertices, VERTEX_SCHEMA).mode(mode).partitionBy(
-            "label"
-        ).parquet(os.path.join(path, "vertices"))
-        self._table_writer(self.edges, EDGE_SCHEMA).mode(mode).partitionBy(
-            "label"
-        ).parquet(os.path.join(path, "edges"))
-        with open(os.path.join(path, "catalog.json"), "w") as f:
-            json.dump({"name": self.name, "label_ids": self.label_ids}, f)
 
     def _write_catalog(self) -> None:
         """Atomic catalog.json update (temp file + rename). Carries the
@@ -527,14 +481,10 @@ class Graph:
             os.makedirs(os.path.join(new_dir, kind), exist_ok=True)
         self._snapshot = new_rel
         self._write_catalog()  # <- the atomic commit of both tables
-        # GC: superseded snapshots and any legacy flat-layout tables
+        # GC: superseded snapshots
         for entry in os.listdir(self.durable_path):
             p = os.path.join(self.durable_path, entry)
-            stale_snap = entry.startswith("snap-") and entry != new_rel
-            legacy = prev is None and entry in (
-                "vertices", "edges", "vertices.old", "edges.old"
-            )
-            if os.path.isdir(p) and (stale_snap or legacy):
+            if entry.startswith("snap-") and entry != new_rel and os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
 
     def append_rows(
@@ -549,8 +499,8 @@ class Graph:
         rollback). The property-type catalog is then extended with the
         atoms of both batches, each table is unioned and pinned, and the
         durable path appends only the new rows. Callers pass rows (without
-        pv) whose lineage is already pinned, so no step re-runs id
-        allocation."""
+        pv) derived from a pinned input (plans.writes.with_rowid), so no
+        step re-runs id allocation."""
         batches = [
             (k, with_pv(r)) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None
         ]
@@ -603,9 +553,6 @@ class Graph:
         tbl = self.vertices if kind == "vertices" else self.edges
         schema = VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA
         sub = self._table_dir(kind)
-        if not os.path.isdir(sub):  # never snapshotted yet: full write
-            self.persist()
-            return
         remaining = tbl.filter(F.col("label").isin(labels))
         (
             self._table_writer(remaining, schema)

@@ -33,13 +33,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep the min-id representative per exact fingerprint."""
-    fp = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("fp"))
-    keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return keep.select(id_col)
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Widen under-partitioned input to the cluster's parallelism before
     CPU-heavy per-row work (tokenize/shingle/hash). A single small parquet

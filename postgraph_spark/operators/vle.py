@@ -218,11 +218,3 @@ def _vle_reachability(oriented, zero, lo, hi, max_hops_cap):
         "hops",
     )
 
-
-def match_vle_counts(graph: Graph, begin_label: str, end_label: str, **kw) -> int:
-    """Count paths between two vertex-label endpoint sets (the shape of
-    the reference's golden VLE assertions, regress/sql/cypher_vle.sql)."""
-    starts = graph.vertices_with_label(begin_label).select("id")
-    paths = vle(graph, start_ids=starts, **kw)
-    ends = graph.vertices_with_label(end_label).select(F.col("id").alias("end_id"))
-    return paths.join(ends, "end_id").count()

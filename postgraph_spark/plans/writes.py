@@ -14,12 +14,12 @@ Spark design: the clause pipeline stays a DataFrame; a write clause
      append / MERGE INTO / DELETE). Created rows — every CREATE, MERGE
      miss and bulk load (sources/loader.py) — commit through the one
      Graph.append_rows,
-  3. `localCheckpoint`s the pipeline so allocated ids are stable (lineage
-     replay must not re-allocate).
+  3. numbers the rows it creates from a pinned copy of its input
+     (with_rowid), so lineage replay never re-allocates an id.
 
 Id allocation mirrors the per-label sequences (label_commands.c:563-583):
 a base entry-id is reserved per statement and per-row ids are
-`base + row_number` — one narrow window over the statement's rows, not a
+`base + row number` — partition offsets over the pinned rows, not a
 driver-side loop.
 """
 
@@ -27,9 +27,8 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from postgraph_spark.functions import gtype as G
 from postgraph_spark.graph import ENTRY_ID_BITS, EDGE_FIELDS, VERTEX_FIELDS, Graph
@@ -44,6 +43,10 @@ from postgraph_spark.plans.compiler import (
 
 DEFAULT_VLABEL = "_ag_label_vertex"
 DEFAULT_ELABEL = "_ag_label_edge"
+
+#: monotonically_increasing_id keeps the row within its partition in
+#: the low 33 bits, the partition index above them
+_MID_ROW_BITS = 33
 
 
 def _json_set(props: Column, key: str, value_json: Column) -> Column:
@@ -87,36 +90,45 @@ def _json_merge(props: Column, delta_json: Column) -> Column:
 
 
 def with_rowid(df: DataFrame) -> tuple[DataFrame, int]:
-    """0..n-1 row ids WITHOUT a global single-partition window: one
-    count-per-partition job computes offsets, then ids are
-    per-partition `offset + local row_number` — a CREATE or bulk load
-    fed by a huge scan keeps all partitions working. Returns
-    (df, n_rows); the count job replaces the df.count() the id
-    sequences needed anyway (label_commands.c:563-583 sequence
-    reservation). Shared by WriteRunner (CREATE/MERGE) and the bulk
-    loader (sources/loader.py)."""
-    if "__rn" in df.columns:
-        df = df.drop("__rn")
-    df = df.withColumn("__pid", F.spark_partition_id())
-    counts = {r["__pid"]: r["count"] for r in df.groupBy("__pid").count().collect()}
-    off, acc = {}, 0
-    for pid in sorted(counts):
-        off[pid] = acc
-        acc += counts[pid]
-    if off:
-        mapping = F.create_map(*[F.lit(x) for kv in sorted(off.items()) for x in kv])
-        base = mapping[F.col("__pid")]
-        # if the plan re-executes with different partitioning (AQE
-        # coalescing, nondeterministic upstream), a pid missing from
-        # the map must FAIL the statement, not commit null ids:
-        # assert_true returns NULL when the check passes, raises when
-        # it does not, so the coalesce is a pass-through guard
+    """0..n-1 row ids (``__rn``) over df's rows, which are evaluated
+    ONCE: the rows are pinned (localCheckpoint) beside
+    monotonically_increasing_id (partition << 33 | row within it), so
+    counting and numbering read the same rows however the input would
+    re-plan. An id is then `offset(partition) + row within it` — no
+    global single-partition window, so a CREATE or bulk load fed by a
+    huge scan keeps all partitions working. The pin's own job reports
+    the row count and the id range; only rows spread over several
+    partitions need one more, in-memory, count-per-partition job.
+    Returns (pinned df, n_rows); n sizes the id-sequence reservation
+    (label_commands.c:563-583). Shared by WriteRunner (CREATE/MERGE)
+    and the bulk loader (sources/loader.py), which derive ids and
+    properties from the pinned rows without pinning again."""
+    obs, mid = Observation(), F.col("__mid")
+    df = (
+        df.drop("__rn")
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .observe(obs, F.count(F.lit(1)).alias("n"), F.min(mid).alias("lo"), F.max(mid).alias("hi"))
+        .localCheckpoint(eager=True)
+    )
+    m = obs.get
+    n, lo, hi = m["n"], m["lo"], m["hi"]
+    pid = F.shiftright(mid, _MID_ROW_BITS)
+    if n == 0 or lo >> _MID_ROW_BITS == hi >> _MID_ROW_BITS:  # one partition
+        rn, parts = mid - F.lit(lo or 0), 1
+    else:
+        off, acc = {}, 0
+        for r in sorted(df.groupBy(pid.alias("p")).count().collect()):
+            off[r["p"]], acc = acc, acc + r["count"]
+        base = F.create_map(*[F.lit(x) for kv in off.items() for x in kv])[pid]
+        # a partition missing from the map must FAIL the statement, not
+        # commit null ids: assert_true returns NULL when the check
+        # passes, raises when it does not, so the coalesce passes through
         base = F.coalesce(F.assert_true(base.isNotNull()).cast("long"), base)
-    else:  # zero input rows: type-stable placeholder, no rows to number
-        base = F.lit(0)
-    w = Window.partitionBy("__pid").orderBy(F.monotonically_increasing_id())
-    df = df.withColumn("__rn", base + F.row_number().over(w) - 1).drop("__pid")
-    return df, acc
+        rn, parts = base + mid.bitwiseAND(F.lit((1 << _MID_ROW_BITS) - 1)), len(off)
+    # the pinned rows keep the input's partitions, mostly empty when the
+    # input is a label scan of a wide table: merge them (no shuffle) so
+    # an appended batch does not widen its table by that many partitions
+    return df.coalesce(parts).withColumn("__rn", rn).drop("__mid"), n
 
 
 def rowid_graphid(label_id: int, first_entry: int) -> Column:
@@ -207,7 +219,8 @@ class WriteRunner:
         A CREATE that opens the statement runs once, on a one-row input.
         Variables bound by an earlier clause are the same entities here."""
         scope = scope.copy()
-        if df is None:  # one row in one partition: no count job to number it
+        opens = df is None
+        if opens:  # one row in one partition: numbered by a literal
             df, n_rows = self.spark.range(0, 1, 1, 1).select(F.lit(0).alias("__rn")), 1
         else:
             df, n_rows = with_rowid(df)
@@ -263,7 +276,11 @@ class WriteRunner:
                 created_e.append(evar)
                 prev = nxt
 
-        df = df.localCheckpoint(eager=True)  # pin allocated ids
+        if opens:
+            # no input was pinned: pin the created rows, so each job of
+            # the commit reads them instead of re-optimizing their
+            # property expressions
+            df = df.localCheckpoint(eager=True)
         self.graph.append_rows(
             _entity_rows(df, [F.col(v) for v in created_v], VERTEX_FIELDS),
             _entity_rows(df, [F.col(v) for v in created_e], EDGE_FIELDS),
@@ -585,7 +602,6 @@ class WriteRunner:
                     F.lit(label).alias("label"),
                     props_json(idx).alias("properties"),
                 )
-            misses = misses.localCheckpoint(eager=True)  # pin allocated ids
             new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
             new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
             self.graph.append_rows(

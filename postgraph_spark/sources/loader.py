@@ -19,10 +19,11 @@ endpoints by those user ids. This is the Spark-native re-design:
   ``properties.__id`` — shuffle on the join key, broadcast when a side
   is small, never a driver-side lookup table.
 
-At 100 TB the load is: scan (parallel) -> one count-per-partition job
--> map-side id packing -> append. Edge loads add two shuffles (endpoint
-resolution) that AQE sizes; a skewed hub vertex id is handled by the
-skew-join config already on in the session defaults.
+At 100 TB the load is: scan (parallel) -> one pinning job (and one
+count-per-partition job over the pinned rows) -> map-side id packing ->
+append. Edge loads add two shuffles (endpoint resolution) that AQE
+sizes; a skewed hub vertex id is handled by the skew-join config
+already on in the session defaults.
 """
 
 from __future__ import annotations
@@ -64,8 +65,7 @@ def load_vertices(
         F.lit(label).alias("label"),
         _props_json(body, cols, id_col).alias("properties"),
     )
-    # pinned: numbered once, however often the commit reads the rows
-    graph.append_rows(vertices=new_rows.localCheckpoint(eager=True))
+    graph.append_rows(vertices=new_rows)
     return n
 
 
@@ -115,7 +115,7 @@ def load_edges(
         F.lit(label).alias("label"),
         _props_json(body, cols, None).alias("properties"),
     )
-    graph.append_rows(edges=new_rows.localCheckpoint(eager=True))
+    graph.append_rows(edges=new_rows)
     return n
 
 

@@ -4,6 +4,7 @@ with identical contents — the Spark analog of the reference's heap-table
 durability (label_commands.c storage; graph_commands.c catalog)."""
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from postgraph_spark.engine import CypherEngine
 from postgraph_spark.graph import GraphCatalog
@@ -172,3 +173,24 @@ def test_durable_tables_are_id_clustered_with_bloom(spark, root):
         # within-file ordering: ids ascending (clustered)
         ids = pq.read_table(f, columns=["id"])["id"].to_pylist()
         assert ids == sorted(ids)
+
+
+def test_reopen_fails_on_missing_table_dir(spark, root):
+    """A snapshot whose edges directory is gone must fail the reopen, not
+    come back as a graph without edges. An empty table is an empty
+    directory, which reopens as 0 rows."""
+    import os
+    import shutil
+
+    eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+    for name in ("torn", "noedges"):
+        eng.execute(f"CREATE GRAPH {name}")
+        eng.execute(f"USE GRAPH {name}")
+        eng.execute("CREATE (:p)-[:r]->(:p)" if name == "torn" else "CREATE (:p)")
+    shutil.rmtree(_table_dir(os.path.join(root, "torn"), "edges"))
+
+    reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
+    reopened.execute("USE GRAPH noedges")
+    assert reopened.fetch_values("MATCH ()-[r]->() RETURN count(r)") == [0]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        reopened.execute("USE GRAPH torn")

@@ -311,3 +311,20 @@ def test_unwind_ends_selective_broadcast(engine):
         "MATCH (n:b) RETURN q.x AS x, i, n.y AS y",
     )
     assert "leftHint=(strategy=broadcast)" not in plan, plan
+
+
+def test_vector_ops_topk_broadcasts_query_vector(spark):
+    """round-12 verdict: MATCH (q:emb {vec_id: 0}), (n:emb) must never
+    plan as a CartesianProduct; the one-row q side is broadcast into a
+    nested-loop join with the N-row scan."""
+    from postgraph_spark.queries.reference_funcs import vector_ops_topk
+    from tests.conftest import SF_DIR
+
+    df = vector_ops_topk(spark, SF_DIR)
+    df.collect()  # the executed plan after AQE's re-planning
+    plan = _physical(df)
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    # the broadcast side is the projection that binds q
+    bound = re.findall(r"BroadcastExchange .*\n.*Project \[.* AS (\w+)#", plan)
+    assert bound and set(bound) == {"q"}, plan

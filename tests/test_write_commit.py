@@ -5,9 +5,11 @@ rows store, unique constraints are checked on the vertex AND edge batch
 before either table changes, and a declared label kind is enforced."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from postgraph_spark.engine import CypherEngine
 from postgraph_spark.graph import Graph, GraphCatalog
+from postgraph_spark.plans.writes import with_rowid
 from postgraph_spark.sources import loader as L
 
 
@@ -87,3 +89,56 @@ def test_load_enforces_label_kind(spark):
     with pytest.raises(ValueError, match="is a edge label"):
         L.load_vertices(eng.graph, "knows", spark.createDataFrame([("ann",)], "name string"))
     assert eng.fetch_values("MATCH (x) RETURN count(x)") == [0]
+
+
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_with_rowid_evaluates_input_once(spark, partitions):
+    """Row numbering pins its input: counting and numbering read the same
+    rows, so an input that re-plans or re-evaluates differently can never
+    lose or repeat an id. A UDF-filtered input is evaluated once, however
+    often the numbered rows are read, and the ids are 0..n-1."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(i):
+        calls.add(1)
+        return i % 3 != 0
+
+    rows, n = with_rowid(spark.range(0, 1000, 1, partitions).filter(keep("id")))
+    ids = [r["__rn"] for r in rows.select("__rn").collect()]
+    assert rows.count() == n == 666
+    assert sorted(ids) == list(range(n))
+    assert calls.value == 1000
+
+
+def test_created_random_properties_match_stored_rows(spark, tmp_path):
+    """Rows created from an input are derived from its pinned copy and
+    are not pinned again, so every read of them (the commit, the durable
+    append, RETURN) must compute the same seeded rand() values."""
+    root = str(tmp_path / "graphs")
+    eng = _engine(spark, root)
+    eng.execute("UNWIND range(1, 20) AS i CREATE (:y {i: i})")
+    for stmt, label in (
+        ("CREATE (n:x {r: rand()}) RETURN n.r", "x"),
+        ("MATCH (m:y) CREATE (n:z {r: rand(), i: m.i}) RETURN n.r", "z"),
+    ):
+        returned = sorted(eng.fetch_values(stmt))
+        reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
+        reopened.execute("USE GRAPH wc")
+        for e in (eng, reopened):
+            assert sorted(e.fetch_values(f"MATCH (n:{label}) RETURN n.r")) == returned, stmt
+
+
+def test_created_batch_does_not_widen_table(spark):
+    """Rows created from a label scan are numbered from a pinned copy of
+    the scan, which keeps the scan's partitions, most of them empty. The
+    batch must still append as few partitions as hold rows, or every
+    such write would double the table's partitions."""
+    eng = _engine(spark)
+    eng.execute("UNWIND range(1, 40) AS i CREATE (:y {i: i})")
+    g = eng.graph
+    g.vertices = g.vertices.repartition(8).localCheckpoint()
+    for i in range(1, 4):
+        eng.execute(f"MATCH (m:y {{i: {i}}}) CREATE (m)-[:r]->(:z {{i: {i}}})")
+    assert g.vertices.rdd.getNumPartitions() <= 8 + 3
+    assert eng.fetch_values("MATCH (:y)-[:r]->(z:z) RETURN count(z)") == [3]
