@@ -519,24 +519,30 @@ def temporal_text(gv: Column) -> Column:
 
 
 def to_json_text(gv: Column) -> Column:
-    """gval -> its JSON text (the reference's gtype_out shape)."""
-    # JSON-escape a bare string by serializing a 1-element array and
-    # stripping the brackets (keeps escaping JVM-side and exact)
-    arr_txt = F.to_json(F.array(gv.s))
-    quoted = arr_txt.substr(F.lit(2), F.length(arr_txt) - 2)
-    return (
-        F.when(gv.isNull() | (gv.t == T_NULL), F.lit(None).cast("string"))
-        .when(gv.t == T_STRING, quoted)
-        .when(gv.t == T_BOOL, F.when(gv.b, F.lit("true")).otherwise(F.lit("false")))
-        .when((gv.t == T_NUMBER) & gv.i.isNotNull(), gv.i.cast("string"))
-        .when(gv.t == T_NUMBER, gv.d.cast("string"))
-        .when(gv.t == T_INTERVAL, gv.j)
-        .when(
+    """gval -> its JSON text (the reference's gtype_out shape). Branches
+    of types the value cannot have (gv_types) are pruned, as in cmp_eq:
+    an int literal renders through the null and number branches alone,
+    not the ~300-node temporal rendering."""
+    ts = gv_types(gv)
+    chain = F.when(gv.isNull() | (gv.t == T_NULL), F.lit(None).cast("string"))
+    if T_STRING in ts:
+        # JSON-escape a bare string by serializing a 1-element array and
+        # stripping the brackets (keeps escaping JVM-side and exact)
+        arr_txt = F.to_json(F.array(gv.s))
+        chain = chain.when(gv.t == T_STRING, arr_txt.substr(F.lit(2), F.length(arr_txt) - 2))
+    if T_BOOL in ts:
+        chain = chain.when(gv.t == T_BOOL, F.when(gv.b, F.lit("true")).otherwise(F.lit("false")))
+    if T_NUMBER in ts:
+        chain = chain.when((gv.t == T_NUMBER) & gv.i.isNotNull(), gv.i.cast("string")).when(
+            gv.t == T_NUMBER, gv.d.cast("string")
+        )
+    if ts & {T_TIMESTAMP, T_DATE, T_TIME}:
+        chain = chain.when(
             gv.t.isin(T_TIMESTAMP, T_DATE, T_TIME),
             F.concat(F.lit('"'), temporal_text(gv), F.lit('"')),
         )
-        .otherwise(gv.j)
-    )
+    # intervals, containers and entities render as their JSON payload
+    return chain.otherwise(gv.j)
 
 
 #: reserved prefix for a probe-side null key; real canon texts always

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgraph_spark.functions import gtype as G
@@ -94,41 +94,35 @@ def with_rowid(df: DataFrame) -> tuple[DataFrame, int]:
     ONCE: the rows are pinned (localCheckpoint) beside
     monotonically_increasing_id (partition << 33 | row within it), so
     counting and numbering read the same rows however the input would
-    re-plan. An id is then `offset(partition) + row within it` — no
-    global single-partition window, so a CREATE or bulk load fed by a
-    huge scan keeps all partitions working. The pin's own job reports
-    the row count and the id range; only rows spread over several
-    partitions need one more, in-memory, count-per-partition job.
-    Returns (pinned df, n_rows); n sizes the id-sequence reservation
+    re-plan. One count-per-partition job over the pinned rows gives n
+    and each partition's offset; an id is then `offset(partition) + row
+    within it` — no global single-partition window, so a CREATE or bulk
+    load fed by a huge scan keeps all partitions working. Returns
+    (pinned df, n_rows); n sizes the id-sequence reservation
     (label_commands.c:563-583). Shared by WriteRunner (CREATE/MERGE)
-    and the bulk loader (sources/loader.py), which derive ids and
-    properties from the pinned rows without pinning again."""
-    obs, mid = Observation(), F.col("__mid")
-    df = (
-        df.drop("__rn")
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .observe(obs, F.count(F.lit(1)).alias("n"), F.min(mid).alias("lo"), F.max(mid).alias("hi"))
-        .localCheckpoint(eager=True)
-    )
-    m = obs.get
-    n, lo, hi = m["n"], m["lo"], m["hi"]
+    and the bulk loader (sources/loader.py), which add every created
+    column (properties included) to df BEFORE numbering it, so this one
+    pin fixes their values: a nondeterministic expression (now(), rand())
+    is not re-run by each job of the commit."""
+    mid = F.col("__mid")
     pid = F.shiftright(mid, _MID_ROW_BITS)
-    if n == 0 or lo >> _MID_ROW_BITS == hi >> _MID_ROW_BITS:  # one partition
-        rn, parts = mid - F.lit(lo or 0), 1
-    else:
-        off, acc = {}, 0
-        for r in sorted(df.groupBy(pid.alias("p")).count().collect()):
-            off[r["p"]], acc = acc, acc + r["count"]
-        base = F.create_map(*[F.lit(x) for kv in off.items() for x in kv])[pid]
-        # a partition missing from the map must FAIL the statement, not
-        # commit null ids: assert_true returns NULL when the check
-        # passes, raises when it does not, so the coalesce passes through
-        base = F.coalesce(F.assert_true(base.isNotNull()).cast("long"), base)
-        rn, parts = base + mid.bitwiseAND(F.lit((1 << _MID_ROW_BITS) - 1)), len(off)
+    df = df.drop("__rn").withColumn("__mid", F.monotonically_increasing_id()).localCheckpoint(
+        eager=True
+    )
+    off, n = {}, 0
+    for r in sorted(df.groupBy(pid.alias("p")).count().collect()):
+        off[r["p"]], n = n, n + r["count"]
+    # no rows: a type-stable map nothing reads
+    base = F.create_map(*[F.lit(x) for kv in (off or {0: 0}).items() for x in kv])[pid]
+    # a partition missing from the map must FAIL the statement, not
+    # commit null ids: assert_true returns NULL when the check passes,
+    # raises when it does not, so the coalesce passes through
+    base = F.coalesce(F.assert_true(base.isNotNull()).cast("long"), base)
+    rn = base + mid.bitwiseAND(F.lit((1 << _MID_ROW_BITS) - 1))
     # the pinned rows keep the input's partitions, mostly empty when the
     # input is a label scan of a wide table: merge them (no shuffle) so
     # an appended batch does not widen its table by that many partitions
-    return df.coalesce(parts).withColumn("__rn", rn).drop("__mid"), n
+    return df.coalesce(max(len(off), 1)).withColumn("__rn", rn).drop("__mid"), n
 
 
 def rowid_graphid(label_id: int, first_entry: int) -> Column:
@@ -154,6 +148,25 @@ def _entity_rows(df: DataFrame, structs: list[Column], fields) -> DataFrame | No
     return df.select(F.explode(F.array(*structs)).alias("__r")).select(
         *[f"__r.{f}" for f in fields]
     )
+
+
+def _free_vars(e, out: set) -> set:
+    """The variables an expression reads (adds them to out)."""
+    if isinstance(e, A.Var):
+        out.add(e.name)
+    elif isinstance(e, A.Prop):
+        _free_vars(e.base, out)
+    elif isinstance(e, (A.BinOp, A.DistinctFrom)):
+        _free_vars(e.left, out)
+        _free_vars(e.right, out)
+    elif isinstance(e, (A.UnaryOp, A.IsNull, A.BoolTest, A.Cast)):
+        _free_vars(e.operand, out)
+    elif isinstance(e, A.FuncCall):
+        for a in e.args:
+            _free_vars(a, out)
+    elif isinstance(e, (A.Index, A.Slice)):
+        _free_vars(e.base, out)
+    return out
 
 
 def is_write_clause(c) -> bool:
@@ -217,13 +230,33 @@ class WriteRunner:
         """Row-wise CREATE: every input row creates the pattern's unbound
         entities (cypher_create.c:332-540 create_vertex_1/create_edge_1).
         A CREATE that opens the statement runs once, on a one-row input.
-        Variables bound by an earlier clause are the same entities here."""
+        Variables bound by an earlier clause are the same entities here.
+        Property maps are evaluated over the clause's input, before the
+        rows are numbered and pinned, so RETURN, the in-memory table and
+        the durable append all read one value of each: a property may
+        not reference an entity this clause creates (Neo4j's rule)."""
         scope = scope.copy()
         opens = df is None
-        if opens:  # one row in one partition: numbered by a literal
-            df, n_rows = self.spark.range(0, 1, 1, 1).select(F.lit(0).alias("__rn")), 1
-        else:
-            df, n_rows = with_rowid(df)
+        if opens:
+            df = self.spark.range(0, 1, 1, 1).select(F.lit(0).alias("__rn"))
+        props: dict[int, str] = {}  # id(pattern element) -> its JSON column
+        created: set[str] = set()
+        for path in c.paths:
+            for i, el in enumerate(path.elements):
+                if i % 2 == 0 and (el.var in scope.kinds or el.var in created):
+                    continue
+                for vexpr in (el.props.items.values() if el.props else ()):
+                    if ref := _free_vars(vexpr, set()) & created:
+                        raise CompileError(
+                            f"a property cannot reference {ref.pop()!r}, created by the same CREATE"
+                        )
+                if el.var:
+                    created.add(el.var)
+                props[id(el)] = self._fresh("cp")
+                df = df.withColumn(props[id(el)], self._props_json_col(el.props, df, scope))
+        # one pin of the rows with their properties; an opening CREATE's
+        # one row in one partition is already numbered by a literal
+        df, n_rows = (df.localCheckpoint(eager=True), 1) if opens else with_rowid(df)
         created_v: list[str] = []
         created_e: list[str] = []
 
@@ -241,7 +274,7 @@ class WriteRunner:
                 F.struct(
                     gid.alias("id"),
                     F.lit(label).alias("label"),
-                    self._props_json_col(node.props, df, scope).alias("properties"),
+                    F.col(props[id(node)]).alias("properties"),
                 ),
             )
             scope.kinds[var] = VKIND_VERTEX
@@ -269,23 +302,18 @@ class WriteRunner:
                         F.col(src)["id"].alias("start_id"),
                         F.col(dst)["id"].alias("end_id"),
                         F.lit(label).alias("label"),
-                        self._props_json_col(rel.props, df, scope).alias("properties"),
+                        F.col(props[id(rel)]).alias("properties"),
                     ),
                 )
                 scope.kinds[evar] = VKIND_EDGE
                 created_e.append(evar)
                 prev = nxt
 
-        if opens:
-            # no input was pinned: pin the created rows, so each job of
-            # the commit reads them instead of re-optimizing their
-            # property expressions
-            df = df.localCheckpoint(eager=True)
         self.graph.append_rows(
             _entity_rows(df, [F.col(v) for v in created_v], VERTEX_FIELDS),
             _entity_rows(df, [F.col(v) for v in created_e], EDGE_FIELDS),
         )
-        df = df.drop("__rn")
+        df = df.drop("__rn", *props.values())
         # anonymous entities drop out of the visible scope
         for var in created_v + created_e:
             if var.startswith("__"):
@@ -439,28 +467,6 @@ class WriteRunner:
         if df is None:
             df = self.spark.range(1).select(F.lit(1).alias("__one"))
 
-        def free_vars(e, out):
-            if isinstance(e, A.Var):
-                out.add(e.name)
-            elif isinstance(e, A.Prop):
-                free_vars(e.base, out)
-            elif isinstance(e, A.BinOp):
-                free_vars(e.left, out)
-                free_vars(e.right, out)
-            elif isinstance(e, (A.UnaryOp, A.IsNull, A.BoolTest)):
-                free_vars(e.operand, out)
-            elif isinstance(e, A.DistinctFrom):
-                free_vars(e.left, out)
-                free_vars(e.right, out)
-            elif isinstance(e, A.Cast):
-                free_vars(e.operand, out)
-            elif isinstance(e, A.FuncCall):
-                for a in e.args:
-                    free_vars(a, out)
-            elif isinstance(e, (A.Index, A.Slice)):
-                free_vars(e.base, out)
-            return out
-
         # ---- classify elements; split props into pattern-const vs
         # correlated-with-outer-scope
         elems = []  # (kind, var, bound, el, const_props, corr_items)
@@ -480,7 +486,7 @@ class WriteRunner:
             const_items, corr_items = {}, []
             if el.props:
                 for k, vexpr in el.props.items.items():
-                    fv = free_vars(vexpr, set())
+                    fv = _free_vars(vexpr, set())
                     if any(v in scope.kinds for v in fv):
                         corr_items.append((k, vexpr))
                     else:
@@ -551,26 +557,31 @@ class WriteRunner:
             misses = miss_rows.select(F.lit(1).alias("__mk")).distinct()
             key_names = ["__mk"]
             joined = joined.withColumn("__mk", F.lit(1))
+        def props_json(idx) -> Column:
+            _k, _v, _b, el, const_items, corr_items = elems[idx]
+            parts = []
+            for k, vexpr in const_items.items():
+                val = self.comp.compile_expr(vexpr, None, Scope())
+                parts.append(
+                    F.concat(F.lit(json.dumps(k)), F.lit(":"),
+                             F.coalesce(G.to_json_text(val), F.lit("null")))
+                )
+            for k, vexpr in corr_items:
+                tag = f"{idx}_{k}"
+                parts.append(F.concat(F.lit(json.dumps(k)), F.lit(":"), F.col(f"__oj_{tag}")))
+            if not parts:
+                return F.lit("{}")
+            return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
+
+        # properties of the entities a miss creates are evaluated before
+        # the misses are numbered and pinned, so every read sees one value
+        misses = misses.withColumns(
+            {f"__cp_{var}": props_json(idx) for idx, (_k, var, b, *_r) in enumerate(elems) if not b}
+        )
         misses, n_miss = with_rowid(misses)
 
         created_cols: dict[str, Column] = {}
         if n_miss:
-            def props_json(idx) -> Column:
-                _k, _v, _b, el, const_items, corr_items = elems[idx]
-                parts = []
-                for k, vexpr in const_items.items():
-                    val = self.comp.compile_expr(vexpr, None, Scope())
-                    parts.append(
-                        F.concat(F.lit(json.dumps(k)), F.lit(":"),
-                                 F.coalesce(G.to_json_text(val), F.lit("null")))
-                    )
-                for k, vexpr in corr_items:
-                    tag = f"{idx}_{k}"
-                    parts.append(F.concat(F.lit(json.dumps(k)), F.lit(":"), F.col(f"__oj_{tag}")))
-                if not parts:
-                    return F.lit("{}")
-                return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
-
             # vertices first (edges need their ids)
             vid_expr: dict[int, Column] = {}
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
@@ -586,7 +597,7 @@ class WriteRunner:
                 created_cols[var] = F.struct(
                     vid_expr[idx].alias("id"),
                     F.lit(label).alias("label"),
-                    props_json(idx).alias("properties"),
+                    F.col(f"__cp_{var}").alias("properties"),
                 )
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
                 if kind != "e":
@@ -600,7 +611,7 @@ class WriteRunner:
                     vid_expr[src_i].alias("start_id"),
                     vid_expr[dst_i].alias("end_id"),
                     F.lit(label).alias("label"),
-                    props_json(idx).alias("properties"),
+                    F.col(f"__cp_{var}").alias("properties"),
                 )
             new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
             new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]

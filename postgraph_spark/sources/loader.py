@@ -19,11 +19,11 @@ endpoints by those user ids. This is the Spark-native re-design:
   ``properties.__id`` — shuffle on the join key, broadcast when a side
   is small, never a driver-side lookup table.
 
-At 100 TB the load is: scan (parallel) -> one pinning job (and one
-count-per-partition job over the pinned rows) -> map-side id packing ->
-append. Edge loads add two shuffles (endpoint resolution) that AQE
-sizes; a skewed hub vertex id is handled by the skew-join config
-already on in the session defaults.
+At 100 TB the load is: scan (parallel) -> one pinning job (properties
+built, rows pinned) -> one count-per-partition job over the pinned rows
+-> map-side id packing -> append. Edge loads add two shuffles (endpoint
+resolution) that AQE sizes; a skewed hub vertex id is handled by the
+skew-join config already on in the session defaults.
 """
 
 from __future__ import annotations
@@ -58,13 +58,9 @@ def load_vertices(
     props_cols: which columns become properties (default: all).
     """
     cols = props_cols if props_cols is not None else list(df.columns)
-    body, n = with_rowid(df)
+    body, n = with_rowid(df.select(_props_json(df, cols, id_col).alias("properties")))
     gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "vertex"))
-    new_rows = body.select(
-        gid.alias("id"),
-        F.lit(label).alias("label"),
-        _props_json(body, cols, id_col).alias("properties"),
-    )
+    new_rows = body.select(gid.alias("id"), F.lit(label).alias("label"), "properties")
     graph.append_rows(vertices=new_rows)
     return n
 
@@ -106,14 +102,16 @@ def load_edges(
         df.join(src, df[start_id_col].cast("string") == src["__key"]).drop("__key")
         .join(dst, df[end_id_col].cast("string") == dst["__key"]).drop("__key")
     )
-    body, n = with_rowid(resolved)
+    body, n = with_rowid(
+        resolved.select(
+            F.col("__src").alias("start_id"),
+            F.col("__dst").alias("end_id"),
+            _props_json(resolved, cols, None).alias("properties"),
+        )
+    )
     gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "edge"))
     new_rows = body.select(
-        gid.alias("id"),
-        F.col("__src").alias("start_id"),
-        F.col("__dst").alias("end_id"),
-        F.lit(label).alias("label"),
-        _props_json(body, cols, None).alias("properties"),
+        gid.alias("id"), "start_id", "end_id", F.lit(label).alias("label"), "properties"
     )
     graph.append_rows(edges=new_rows)
     return n

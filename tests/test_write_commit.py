@@ -111,22 +111,35 @@ def test_with_rowid_evaluates_input_once(spark, partitions):
     assert calls.value == 1000
 
 
-def test_created_random_properties_match_stored_rows(spark, tmp_path):
-    """Rows created from an input are derived from its pinned copy and
-    are not pinned again, so every read of them (the commit, the durable
-    append, RETURN) must compute the same seeded rand() values."""
+@pytest.mark.parametrize("expr", ["rand()", "now()"])
+def test_created_properties_read_one_value(spark, tmp_path, expr):
+    """Created properties are evaluated once, before the created rows are
+    numbered and pinned: RETURN, the in-memory table and a reopen of the
+    durable graph read one value each, even of a nondeterministic
+    expression whose value changes with every Spark job (now())."""
     root = str(tmp_path / "graphs")
     eng = _engine(spark, root)
     eng.execute("UNWIND range(1, 20) AS i CREATE (:y {i: i})")
     for stmt, label in (
-        ("CREATE (n:x {r: rand()}) RETURN n.r", "x"),
-        ("MATCH (m:y) CREATE (n:z {r: rand(), i: m.i}) RETURN n.r", "z"),
+        (f"CREATE (n:x {{r: {expr}}}) RETURN n.r", "x"),
+        (f"MATCH (m:y) CREATE (n:z {{r: {expr}, i: m.i}}) RETURN n.r", "z"),
+        (f"MATCH (m:y) MERGE (m)-[:e]->(n:w {{r: {expr}}}) RETURN n.r", "w"),
     ):
         returned = sorted(eng.fetch_values(stmt))
         reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
         reopened.execute("USE GRAPH wc")
         for e in (eng, reopened):
             assert sorted(e.fetch_values(f"MATCH (n:{label}) RETURN n.r")) == returned, stmt
+
+
+def test_create_property_cannot_reference_created_entity(spark):
+    """Properties are evaluated over the clause's input, so they may only
+    reference entities bound by earlier clauses."""
+    eng = _engine(spark)
+    with pytest.raises(Exception, match="cannot reference 'a'"):
+        eng.execute("CREATE (a:p {x: 1})-[:r {y: a.x}]->(:q)")
+    eng.execute("CREATE (a:p {x: 1}) CREATE (a)-[:r {y: a.x}]->(:q)")
+    assert eng.fetch_values("MATCH (:p)-[r:r]->(:q) RETURN r.y") == [1]
 
 
 def test_created_batch_does_not_widen_table(spark):
