@@ -2,10 +2,11 @@
 data-processing capabilities of PostGraphDB/postgraph.
 
 Architecture (see SURVEY.md):
-- Property-graph data model on Parquet: ``vertices(id, label, properties,
-  pv)`` and ``edges(id, start_id, end_id, label, properties, pv)`` per
-  graph (``pv`` = the properties parsed to a VARIANT once, at commit),
-  partitioned by label (reference: per-label heap tables with inheritance,
+- Property-graph data model on Parquet: ``vertices(id, label, pv)`` and
+  ``edges(id, start_id, end_id, label, pv)`` per graph (``pv`` = the
+  properties document, one VARIANT object built from typed values; its
+  JSON text is rendered on read, never stored), partitioned by label
+  (reference: per-label heap tables with inheritance,
   src/backend/commands/label_commands.c:651-712).
 - Cypher text -> hand-written parser -> clause IR -> DataFrame compiler
   (reference compiles clauses to nested SQL subqueries,

@@ -449,9 +449,9 @@ def from_variant_atoms(x: Column, atoms, bind: bool = False) -> Column:
 
 
 def prop_access_variant(pv: Column, path: list[str], atoms=None) -> Column:
-    """parsed-properties VARIANT -> gval at $.a.b... — the fast path: the
-    JSON text was parsed ONCE (at scan/materialization), every key access
-    is a binary variant_get instead of a re-parse. ``atoms`` (a catalog
+    """properties VARIANT -> gval at $.a.b... — the fast path: every key
+    access is a binary variant_get instead of a parse of the rendered
+    text. ``atoms`` (a catalog
     atom set, see from_variant_atoms) skips the runtime type dispatch."""
     p = "$." + ".".join(path)
     v = F.try_variant_get(pv, p, "variant")
@@ -545,6 +545,35 @@ def to_json_text(gv: Column) -> Column:
     return chain.otherwise(gv.j)
 
 
+def to_variant(gv: Column) -> Column:
+    """gval -> VARIANT from the typed payload: an int is a BIGINT, a float
+    a DOUBLE (1.0 stays 1.0), a temporal its display text (a string, as
+    to_json_text quotes it). Containers, intervals and entities parse
+    their JSON payload, so a float nested in a list or map is a DECIMAL.
+    A gtype null is a SQL null. Impossible branches are pruned (gv_types)."""
+    ts = gv_types(gv)
+    chain = F.when(gv.isNull() | (gv.t == T_NULL), F.lit(None).cast("variant"))
+    if T_STRING in ts:
+        chain = chain.when(gv.t == T_STRING, gv.s.cast("variant"))
+    if T_BOOL in ts:
+        chain = chain.when(gv.t == T_BOOL, gv.b.cast("variant"))
+    if T_NUMBER in ts:
+        chain = chain.when(gv.t == T_NUMBER, F.coalesce(gv.i.cast("variant"), gv.d.cast("variant")))
+    if ts & {T_TIMESTAMP, T_DATE, T_TIME}:
+        chain = chain.when(gv.t.isin(T_TIMESTAMP, T_DATE, T_TIME), temporal_text(gv).cast("variant"))
+    return chain.otherwise(F.try_parse_json(gv.j))
+
+
+def variant_object(values: dict[str, Column]) -> Column:
+    """{key: VARIANT column} -> one VARIANT object (its keys sorted): the
+    one builder of a property map from typed values."""
+    if not values:
+        return F.parse_json(F.lit("{}"))
+    return F.to_variant_object(
+        F.create_map(*[c for k, v in values.items() for c in (F.lit(k), v)])
+    )
+
+
 #: reserved prefix for a probe-side null key; real canon texts always
 #: start with a digit type rank, so the sentinel can never collide
 NULL_KEY_SENTINEL = "\x00"
@@ -589,7 +618,8 @@ def canon_key_text(gv: Column, null_as_sentinel: bool = False) -> Column:
     if T_OBJECT in gv_types(gv):
         # objects key on sorted (key, canonical-value) pairs so {a: 1}
         # and {a: 1.0} share one key under DISTINCT / equi-joins
-        chain = chain.when(gv.t == T_OBJECT, F.concat(F.lit("0:"), _obj_canon_txt(gv.j)))
+        obj_txt = obj_canon_txt(F.from_json(gv.j, _VMAP))
+        chain = chain.when(gv.t == T_OBJECT, F.concat(F.lit("0:"), obj_txt))
     return chain.otherwise(
         F.concat(gv.t.cast("string"), F.lit(":"), F.coalesce(to_json_text(gv), F.lit("")))
     )
@@ -605,6 +635,7 @@ def _temporal_us(gv: Column) -> Column:
 
 
 _ELEM_KEY_T = "array<struct<e0:int,e1:double,e2:string,e3:int,e4:string>>"
+_VMAP = "map<string, variant>"
 
 
 def _scalar_canon_txt(e: Column) -> Column:
@@ -622,12 +653,12 @@ def _scalar_canon_txt(e: Column) -> Column:
     )
 
 
-def _obj_canon_txt(j: Column) -> Column:
-    """JSON object text -> canonical key text: entries sorted by key,
-    values through the depth-2 scalar canonicalization — so {a: 1} and
-    {a: 1.0} share a key (compare_gtype_containers_orderability's
-    object walk, gtype_util.c:233-360)."""
-    entries = F.map_entries(F.from_json(j, "map<string, variant>"))
+def obj_canon_txt(m: Column) -> Column:
+    """An object (map<string, variant>) -> canonical key text: entries
+    sorted by key, values through the depth-2 scalar canonicalization —
+    so {a: 1} and {a: 1.0} share a key (compare_gtype_containers_
+    orderability's object walk, gtype_util.c:233-360)."""
+    entries = F.map_entries(m)
     parts = F.transform(
         entries,
         lambda kv: F.concat(
@@ -654,7 +685,7 @@ def _nested_canon_txt(e: Column) -> Column:
     )
     return (
         F.when(ev.t == T_ARRAY, arr_txt)
-        .when(ev.t == T_OBJECT, F.concat(F.lit("0:"), _obj_canon_txt(ev.j)))
+        .when(ev.t == T_OBJECT, F.concat(F.lit("0:"), obj_canon_txt(F.from_json(ev.j, _VMAP))))
         .otherwise(ev.j)
     )
 
@@ -773,6 +804,29 @@ _FIELD_TYPES = {
     "t": "int", "b": "boolean", "i": "long",
     "d": "double", "s": "string", "j": "string",
 }
+
+
+#: DDL of a whole gval struct
+GVAL_DDL = "struct<" + ",".join(f"{f}:{_FIELD_TYPES[f]}" for f in GVAL_FIELDS) + ">"
+
+
+def py_gval(v: Any) -> tuple:
+    """JSON-typed python value -> gval payload (GVAL_FIELDS order), to
+    build rows of typed values on the driver. An int outside int64 is a
+    float; lists and dicts carry their JSON text."""
+    if v is None:
+        return (T_NULL, None, None, None, None, None)
+    if isinstance(v, bool):
+        return (T_BOOL, v, None, None, None, None)
+    if isinstance(v, int) and -(1 << 63) <= v < (1 << 63):
+        return (T_NUMBER, None, v, float(v), None, None)
+    if isinstance(v, (int, float)):
+        return (T_NUMBER, None, None, float(v), None, None)
+    if isinstance(v, str):
+        return (T_STRING, None, None, None, v, None)
+    if isinstance(v, (list, dict)):
+        return (T_ARRAY if isinstance(v, list) else T_OBJECT, None, None, None, None, json.dumps(v))
+    raise TypeError(f"unsupported property value: {v!r}")
 
 
 def feasible_fields(types: frozenset | None) -> tuple[str, ...]:
@@ -975,7 +1029,10 @@ def cmp_eq(a: Column, b: Column) -> Column:
         # {a: 1} = {a: 1.0} (gtype_util.c:233-360 object walk)
         chain = chain.when(
             (a.t == T_OBJECT) & (b.t == T_OBJECT),
-            F.coalesce(_obj_canon_txt(a.j) == _obj_canon_txt(b.j), F.lit(False)),
+            F.coalesce(
+                obj_canon_txt(F.from_json(a.j, _VMAP)) == obj_canon_txt(F.from_json(b.j, _VMAP)),
+                F.lit(False),
+            ),
         )
     # every type has a branch above, so only a pair of some type outside
     # the static sets could get here

@@ -13,12 +13,17 @@ partitions — the columnar analog of inheritance + per-label tables.
 
 graphid: 64-bit, 16-bit label id (high) + 48-bit entry id (low), exactly
 the reference's packing (src/include/utils/graphid.h:31-64).
-Properties: JSON string column (heterogeneous, schemaless — the gtype
-document model, src/include/utils/gtype.h) plus ``pv``, the same document
-parsed ONCE to a VARIANT when the row is committed and stored beside it —
-the analog of the reference's binary gtype heap column
-(label_commands.c:690-712). Every table, in memory and on disk, has the
-shape (id, label, properties, pv), edges adding start_id/end_id.
+Properties: ONE stored document per row, ``pv``, a VARIANT object (the
+gtype document model, src/include/utils/gtype.h; the analog of the
+reference's binary ``properties gtype`` heap column,
+label_commands.c:690-712). It is built from typed values — never parsed
+from text — so a float stays a DOUBLE, and like gtype it keeps object keys
+sorted. Stored tables, in memory and on disk, have the shape (id, label,
+pv), edges adding start_id/end_id. ``Graph.vertices``/``Graph.edges``
+expose each table with ``properties``, the document's JSON text, rendered
+in one place (``rendered``, as ``to_json(pv)``); it is never stored.
+catalog.json names the storage ``layout``; a directory in another layout
+fails the open.
 """
 
 from __future__ import annotations
@@ -32,24 +37,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from postgraph_spark.functions.gtype import variant_atom
+from postgraph_spark.functions import gtype as G
 
 ENTRY_ID_BITS = 48
 ENTRY_ID_MASK = (1 << ENTRY_ID_BITS) - 1
 LABEL_ID_MAX = 0xFFFF
 
 #: the fields of an entity value (a bound vertex or edge): a table row
-#: without its pv
+#: with its rendered properties, without its pv
 VERTEX_FIELDS = ("id", "label", "properties")
 EDGE_FIELDS = ("id", "start_id", "end_id", "label", "properties")
 
 _PV_FIELD = T.StructField("pv", T.VariantType(), True)
 
+#: the stored columns of each table
 VERTEX_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
         T.StructField("label", T.StringType(), False),
-        T.StructField("properties", T.StringType(), False),
         _PV_FIELD,
     ]
 )
@@ -60,17 +65,26 @@ EDGE_SCHEMA = T.StructType(
         T.StructField("start_id", T.LongType(), False),
         T.StructField("end_id", T.LongType(), False),
         T.StructField("label", T.StringType(), False),
-        T.StructField("properties", T.StringType(), False),
         _PV_FIELD,
     ]
 )
 
+#: catalog.json's storage-layout marker: tables hold (id, label, pv) and
+#: (id, start_id, end_id, label, pv). Directories without it store a
+#: properties JSON text column and cannot be opened.
+LAYOUT = "pv-variant"
 
-def with_pv(rows: DataFrame) -> DataFrame:
-    """Rows to commit, with ``pv`` parsed from their properties text —
-    the one way a committed row gets its variant, so the stored text and
-    the variant always agree."""
-    return rows.withColumn("pv", F.try_parse_json("properties"))
+
+def rendered(rows: DataFrame) -> DataFrame:
+    """Stored rows as a Graph exposes them: with ``properties``, the
+    document's JSON text — the one place that text is made. Keys come
+    out sorted (a VARIANT object's order, as in gtype)."""
+    return rows.withColumn("properties", F.to_json("pv"))
+
+
+def stored(rows: DataFrame, kind: str) -> DataFrame:
+    """The stored columns of a table's rows (drops the rendering)."""
+    return rows.select(*(VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA).fieldNames())
 
 
 def _spark_atom(dt) -> str | None:
@@ -92,45 +106,6 @@ def _spark_atom(dt) -> str | None:
     if isinstance(dt, (T.StructType, T.MapType)):
         return "object"
     return None
-
-
-_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
-
-
-def _py_atom(v) -> str | None:
-    """Python property value -> catalog atom. bool before int (bool is an
-    int subclass); out-of-int64 ints parse to DECIMAL variants, so they
-    are deliberately untyped (None disables narrowing for the prop)."""
-    if isinstance(v, bool):
-        return "bool"
-    if isinstance(v, int):
-        return "long" if _I64_MIN <= v <= _I64_MAX else None
-    if isinstance(v, float):
-        return "double"
-    if isinstance(v, str):
-        return "string"
-    if isinstance(v, list):
-        return "array"
-    if isinstance(v, dict):
-        return "object"
-    return None
-
-
-def _merge_py_atoms(cat: dict, props: dict) -> None:
-    """Fold one row's property dict into a label's atom catalog. A None
-    (JSON null) value adds no atom (runtime nulls are always allowed);
-    an untypable value or a key already marked untyped pins None."""
-    for k, v in props.items():
-        if v is None:
-            cat.setdefault(k, set())
-            continue
-        a = _py_atom(v)
-        cur = cat.get(k, set())
-        if a is None or cur is None:
-            cat[k] = None
-        else:
-            cur.add(a)
-            cat[k] = cur
 
 
 def make_graphid(label_id: int, entry_id: int) -> int:
@@ -164,8 +139,8 @@ class Graph:
         constraints: list[dict] | None = None,
     ):
         self.name = name
-        self.vertices = vertices
-        self.edges = edges
+        self.vertices = rendered(vertices)
+        self.edges = rendered(edges)
         self.label_ids = dict(label_ids or {})
         #: label-id high-water mark: ids are NEVER reused after DROP
         #: LABEL (graphids pack label_id<<48 | entry_id and each new
@@ -209,7 +184,7 @@ class Graph:
         #: built from bare tables, or a durable graph stored without a
         #: catalog); a dict also covers labels that do not exist yet.
         #: Builders that see every row fill it (tpch_graph from the
-        #: native column types, from_rows from the python values);
+        #: native column types, from_rows from its documents);
         #: every write extends it to a SUPERSET of the stored atoms
         #: before either table changes (extend_prop_types), so it never
         #: has to be dropped.
@@ -243,10 +218,12 @@ class Graph:
         )
         found = [r for r in found if r["label"] is not None]  # SET on a null entity
         for r in found:
-            if self.prop_types is None or r["key"] is None:
+            if self.prop_types is None:
                 continue
             cat = self.prop_types.setdefault(r["label"], {})
-            atoms = {variant_atom(sch) for sch in r["schemas"] if sch != "VOID"}
+            if r["key"] is None:  # an empty document
+                continue
+            atoms = {G.variant_atom(sch) for sch in r["schemas"] if sch != "VOID"}
             cur = cat.get(r["key"], frozenset())
             cat[r["key"]] = None if cur is None or None in atoms else cur | atoms
         return sorted({r["label"] for r in found})
@@ -276,7 +253,7 @@ class Graph:
         thousands of files is already wide -> no-op."""
         par = self.vertices.sparkSession.sparkContext.defaultParallelism
         for attr in ("vertices", "edges"):
-            df = getattr(self, attr)
+            df = stored(getattr(self, attr), attr)
             try:
                 nfiles = len(df.inputFiles())
             except Exception:
@@ -294,8 +271,14 @@ class Graph:
                 # and id-predicate scans get min/max pruning for free —
                 # the id-cluster layout philosophy applied to the cache.
                 df = df.repartitionByRange(par, F.col("label"), F.col("id"))
-            setattr(self, attr, df.cache())
+            setattr(self, attr, rendered(df.cache()))
         return self
+
+    def pin(self, kind: str, rows: DataFrame) -> None:
+        """Make `rows` the `kind` table: its stored columns are pinned
+        (localCheckpoint), so later jobs never re-run the plan that made
+        them, and the properties text is rendered on top."""
+        setattr(self, kind, rendered(stored(rows, kind).localCheckpoint(eager=True)))
 
     # -- construction helpers -------------------------------------------
 
@@ -331,27 +314,32 @@ class Graph:
             next_entry[label] = eid
             gid = make_graphid(lid, eid)
             vids.append(gid)
-            vrows.append((gid, label, json.dumps(props)))
+            vrows.append((gid, label, {k: G.py_gval(v) for k, v in props.items()}))
         erows = []
         for label, src, dst, props in edge_rows:
             lid = intern(label)
             eid = next_entry.get(label, 0) + 1
             next_entry[label] = eid
-            erows.append((make_graphid(lid, eid), vids[src], vids[dst], label, json.dumps(props)))
-        vertices = with_pv(spark.createDataFrame(vrows, VERTEX_SCHEMA[:-1]))
-        edges = with_pv(spark.createDataFrame(erows, EDGE_SCHEMA[:-1]))
-        g = cls(name, vertices, edges, label_ids)
-        # property-type catalog from the python values themselves: every
-        # row was seen, so every label is cataloged completely
-        cat: dict[str, dict] = {}
-        for label, props in vertex_rows:
-            _merge_py_atoms(cat.setdefault(label, {}), props)
-        for label, _s, _d, props in edge_rows:
-            _merge_py_atoms(cat.setdefault(label, {}), props)
-        g.prop_types = {
-            lbl: {k: (frozenset(v) if v is not None else None) for k, v in d.items()}
-            for lbl, d in cat.items()
-        }
+            doc = {k: G.py_gval(v) for k, v in props.items()}
+            erows.append((make_graphid(lid, eid), vids[src], vids[dst], label, doc))
+
+        def table(rows, schema: T.StructType) -> DataFrame:
+            if not rows:
+                return spark.createDataFrame([], schema)
+            # each document is a map of gvals, made a variant on the JVM
+            cols = [f"{f.name} {f.dataType.simpleString()}" for f in schema.fields[:-1]]
+            df = spark.createDataFrame(rows, ", ".join([*cols, f"doc map<string,{G.GVAL_DDL}>"]))
+            pv = F.to_variant_object(
+                F.transform_values("doc", lambda _k, v: G.to_variant(G.gv_ref(v)))
+            )
+            return df.select(*schema.fieldNames()[:-1], pv.alias("pv"))
+
+        g = cls(name, table(vrows, VERTEX_SCHEMA), table(erows, EDGE_SCHEMA), label_ids)
+        # every row is seen, so every label is cataloged completely
+        g.prop_types = {}
+        if vrows or erows:
+            docs = [t.select("label", "pv") for t in (g.vertices, g.edges)]
+            g.extend_prop_types(docs[0].unionByName(docs[1]))
         return g
 
     @classmethod
@@ -360,34 +348,31 @@ class Graph:
         its ``snapshot`` field names the live ``snap-N`` directory, so a
         reader always sees one fully-consistent (vertices, edges) pair —
         a crash mid-persist leaves either the old or the new snapshot,
-        never a torn mix. Graphs stored without the ``pv`` column are still
-        readable. A missing table directory fails the open: an empty table
-        is an empty directory, never an absent one."""
+        never a torn mix. A directory in another storage layout (one with
+        a properties JSON text column) fails the open, as does a missing
+        table directory: an empty table is an empty directory, never an
+        absent one."""
         with open(os.path.join(path, "catalog.json")) as f:
             meta = json.load(f)
+        if meta.get("layout") != LAYOUT:
+            raise ValueError(
+                f"{path}: stored in the {meta.get('layout', 'properties-text')!r} layout;"
+                f" only the {LAYOUT!r} layout (id, label, pv) can be opened: rebuild the graph"
+            )
         snapshot = meta["snapshot"]
         vertices, edges = (
             spark.read.schema(schema).parquet(os.path.join(path, snapshot, sub))
             for sub, schema in (("vertices", VERTEX_SCHEMA), ("edges", EDGE_SCHEMA))
         )
-        stored = meta.get("prop_types")
-        if stored is None:
-            # no stored catalog: a layout from before pv was stored
-            # (maybe appended to since), so files without pv read it as
-            # null — parse those rows' properties instead
-            vertices, edges = (
-                t.withColumn("pv", F.coalesce("pv", F.try_parse_json("properties")))
-                for t in (vertices, edges)
-            )
         g = cls(
             name or os.path.basename(path), vertices, edges,
             meta.get("label_ids", {}), meta.get("label_kinds", {}),
             meta.get("constraints", []),
         )
-        if stored is not None:
+        if meta.get("prop_types") is not None:
             g.prop_types = {
                 lbl: {k: frozenset(v) if v is not None else None for k, v in cat.items()}
-                for lbl, cat in stored.items()
+                for lbl, cat in meta["prop_types"].items()
             }
         g.vector_indexes = meta.get("vector_indexes", [])
         g._label_id_hwm = max(g._label_id_hwm, meta.get("label_id_hwm", 0))
@@ -400,20 +385,22 @@ class Graph:
         return os.path.join(self.durable_path, self._snapshot, kind)
 
     @staticmethod
-    def _table_writer(df: DataFrame, schema):
+    def _table_writer(df: DataFrame, kind: str):
         """Writer with the btree-index analogs applied (ag_label btree
         indexes on id, label_commands.c): rows CLUSTERED by graphid
         within each label partition (tight row-group min/max id stats →
         a point/range lookup on id prunes row groups, the columnar
         B-tree) plus a parquet BLOOM FILTER on id for point probes that
-        fall inside a row group's range. Both are scan-side free: no
-        extra files, no shuffle (sortWithinPartitions is partition-local).
+        fall inside a row group's range, sized to the ids each file holds
+        (adaptive: a fixed 10M-id size put ~1 MB of filter in every
+        file). Both are scan-side free: no extra files, no shuffle
+        (sortWithinPartitions is partition-local).
         """
         return (
-            df.select(*schema.fieldNames())
+            stored(df, kind)
             .sortWithinPartitions("id")
             .write.option("parquet.bloom.filter.enabled#id", "true")
-            .option("parquet.bloom.filter.expected.ndv#id", "10000000")
+            .option("parquet.bloom.filter.adaptive.enabled", "true")
         )
 
     def _write_catalog(self) -> None:
@@ -424,7 +411,7 @@ class Graph:
             return
         os.makedirs(self.durable_path, exist_ok=True)
         tmp = os.path.join(self.durable_path, ".catalog.json.tmp")
-        meta = {"name": self.name, "label_ids": self.label_ids}
+        meta = {"name": self.name, "layout": LAYOUT, "label_ids": self.label_ids}
         hwm = max(self._label_id_hwm, max(self.label_ids.values(), default=0))
         if hwm:
             meta["label_id_hwm"] = hwm
@@ -461,19 +448,16 @@ class Graph:
         (classic parquet overwrite-while-reading hazard)."""
         if not self.durable_path:
             return
-        self.vertices = self.vertices.localCheckpoint(eager=True)
-        self.edges = self.edges.localCheckpoint(eager=True)
+        self.pin("vertices", self.vertices)
+        self.pin("edges", self.edges)
         os.makedirs(self.durable_path, exist_ok=True)
         prev = self._snapshot
         epoch = int(prev.rsplit("-", 1)[1]) + 1 if prev else 1
         new_rel = f"snap-{epoch}"
         new_dir = os.path.join(self.durable_path, new_rel)
         shutil.rmtree(new_dir, ignore_errors=True)
-        for kind, tbl, schema in (
-            ("vertices", self.vertices, VERTEX_SCHEMA),
-            ("edges", self.edges, EDGE_SCHEMA),
-        ):
-            self._table_writer(tbl, schema).mode("overwrite").partitionBy(
+        for kind in ("vertices", "edges"):
+            self._table_writer(getattr(self, kind), kind).mode("overwrite").partitionBy(
                 "label"
             ).parquet(os.path.join(new_dir, kind))
             # an empty table writes no directory at all — materialize it
@@ -498,12 +482,10 @@ class Graph:
         sequence values are consumed either way, like nextval under
         rollback). The property-type catalog is then extended with the
         atoms of both batches, each table is unioned and pinned, and the
-        durable path appends only the new rows. Callers pass rows (without
-        pv) derived from a pinned input (plans.writes.with_rowid), so no
-        step re-runs id allocation."""
-        batches = [
-            (k, with_pv(r)) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None
-        ]
+        durable path appends only the new rows. Callers pass stored rows
+        derived from a pinned input (plans.writes.with_rowid), so no step
+        re-runs id allocation."""
+        batches = [(k, r) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None]
         if not batches:
             return
         for kind, rows in batches:
@@ -512,8 +494,7 @@ class Graph:
             reduce(DataFrame.unionByName, [rows.select("label", "pv") for _k, rows in batches])
         )
         for kind, rows in batches:
-            tbl = getattr(self, kind)
-            setattr(self, kind, tbl.unionByName(rows).localCheckpoint(eager=True))
+            self.pin(kind, stored(getattr(self, kind), kind).unionByName(rows))
         for kind, rows in batches:
             self.persist_append(kind, rows)
 
@@ -532,8 +513,7 @@ class Graph:
         if not self.durable_path:
             return
         self._write_catalog()
-        schema = VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA
-        self._table_writer(new_rows, schema).mode("append").partitionBy(
+        self._table_writer(new_rows, kind).mode("append").partitionBy(
             "label"
         ).parquet(self._table_dir(kind))
 
@@ -550,12 +530,10 @@ class Graph:
         if not self.durable_path or not labels:
             return
         self._write_catalog()
-        tbl = self.vertices if kind == "vertices" else self.edges
-        schema = VERTEX_SCHEMA if kind == "vertices" else EDGE_SCHEMA
         sub = self._table_dir(kind)
-        remaining = tbl.filter(F.col("label").isin(labels))
+        remaining = getattr(self, kind).filter(F.col("label").isin(labels))
         (
-            self._table_writer(remaining, schema)
+            self._table_writer(remaining, kind)
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("label")
@@ -608,11 +586,12 @@ class Graph:
             ("vertices",) if kind == "vertex" else ("edges",)
         )
         for attr in tables:
-            tbl = getattr(self, attr)
-            setattr(self, attr, tbl.filter(F.col("label") != label))
+            kept = getattr(self, attr).filter(F.col("label") != label)
             if self.durable_path:
-                setattr(self, attr, getattr(self, attr).localCheckpoint(eager=True))
+                self.pin(attr, kept)
                 self.persist_partitions(attr, [label])
+            else:
+                setattr(self, attr, kept)
         del self.label_ids[label]
         self.label_kinds.pop(label, None)
         if self.prop_types is not None:  # no rows left: a later label of this name is new
@@ -624,16 +603,14 @@ class Graph:
 
     def _unique_key_col(self, prop: str | None) -> F.Column:
         """Equality key over a table's properties for unique
-        enforcement. Whole-document constraints key on the canonical
-        object text (sorted keys, numbers through their double image) so
+        enforcement. Whole-document constraints key on the document's
+        canonical text (sorted keys, numbers through their double image) so
         {a:1,b:2} and {b:2,a:1.0} collide, matching gtype equality of
         the properties value; a named property keys on its canonical
         scalar text (null property -> SQL null, which unique ignores —
         PG btree semantics)."""
-        from postgraph_spark.functions import gtype as G
-
         if prop is None:
-            return G._obj_canon_txt(F.col("properties"))
+            return G.obj_canon_txt(F.variant_get(F.col("pv"), "$", "map<string,variant>"))
         v = F.try_variant_get(F.col("pv"), f"$.{prop}", "variant")
         return G.canon_key_text(G.from_variant(v))
 
@@ -716,8 +693,8 @@ class Graph:
                 raise ValueError(f"duplicate key value violates unique constraint on {what}")
 
     def _vector_prop_col(self, prop: str) -> F.Column:
-        """A vector property (JSON number array) as array<double>."""
-        return F.from_json(F.get_json_object(F.col("properties"), f"$.{prop}"), "array<double>")
+        """A vector property (a number array) as array<double>."""
+        return F.try_variant_get(F.col("pv"), f"$.{prop}", "array<double>")
 
     def create_ivfflat_index(
         self, label: str, prop: str, metric: str = "l2", lists: int = 8, iters: int = 3
@@ -958,38 +935,38 @@ def tpch_graph(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> Grap
     All built declaratively — at 100 TB this is a column-pruned scan plus
     a narrow projection, no shuffle.
 
-    Each table carries BOTH a ``properties`` JSON string (the schemaless
-    document, for output parity) and a ``pv`` VARIANT column built
-    directly from the native columns with to_variant_object — the
-    document is never parsed from text, and every property access
-    downstream is a binary variant_get. The graph is memoized per
-    (session, sf_dir) and cached: the reference stores its graph in heap
-    tables; the Spark analog of "the graph exists" is a materialized
-    (cached / parquet-backed) projection, not a rebuild per query.
+    Each row's ``pv`` VARIANT document is built directly from the native
+    columns with to_variant_object — never parsed from text — and every
+    property access downstream is a binary variant_get. The graph is
+    memoized per (session, sf_dir) and cached: the reference stores its
+    graph in heap tables; the Spark analog of "the graph exists" is a
+    materialized (cached / parquet-backed) projection, not a rebuild per
+    query.
     """
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     if use_cache and key in _GRAPH_CACHE:
         return _GRAPH_CACHE[key]
 
-    prop_types: dict[str, dict[str, frozenset | None]] = {}
+    # placed / from_nation carry an empty properties document
+    prop_types: dict[str, dict[str, frozenset | None]] = {"placed": {}, "from_nation": {}}
 
-    def _record_types(label: str, df: DataFrame, cols: list[str]) -> None:
+    def doc(label: str, df: DataFrame, ps: F.Column) -> F.Column:
+        """The document of struct ps over df; the catalog learns each
+        field's atom from its Spark type."""
+        fields = df.select(ps.alias("p")).schema["p"].dataType.fields
         prop_types[label] = {
-            f.name: (frozenset({a}) if (a := _spark_atom(f.dataType)) else None)
-            for f in df.schema.fields
-            if f.name in cols
+            f.name: (frozenset({a}) if (a := _spark_atom(f.dataType)) else None) for f in fields
         }
+        return F.to_variant_object(ps)
 
     def vtab(name: str, key: str, cols: list[str]) -> DataFrame:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        _record_types(name, df, cols)
         lid = TPCH_VLABELS[name]
         ps = F.struct(*[F.col(c) for c in cols])
         return df.select(
             (F.lit(lid).cast("long") * F.lit(1 << ENTRY_ID_BITS) + F.col(key).cast("long")).alias("id"),
             F.lit(name).alias("label"),
-            F.to_json(ps).alias("properties"),
-            F.to_variant_object(ps).alias("pv"),
+            doc(name, df, ps).alias("pv"),
         )
 
     vertices = (
@@ -1011,13 +988,12 @@ def tpch_graph(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> Grap
     def eid(label: str, seq: F.Column) -> F.Column:
         return F.lit(TPCH_ELABELS[label]).cast("long") * F.lit(1 << ENTRY_ID_BITS) + seq
 
-    empty_pv = F.try_parse_json(F.lit("{}"))  # constant-folded
+    empty_pv = G.variant_object({})  # constant-folded
     placed = orders.select(
         eid("placed", F.col("o_orderkey").cast("long")).alias("id"),
         gid("customer", F.col("o_custkey")).alias("start_id"),
         gid("orders", F.col("o_orderkey")).alias("end_id"),
         F.lit("placed").alias("label"),
-        F.lit("{}").alias("properties"),
         empty_pv.alias("pv"),
     )
     li_props = F.struct(
@@ -1030,15 +1006,13 @@ def tpch_graph(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> Grap
         gid("orders", F.col("l_orderkey")).alias("start_id"),
         gid("part", F.col("l_partkey")).alias("end_id"),
         F.lit("contains").alias("label"),
-        F.to_json(li_props).alias("properties"),
-        F.to_variant_object(li_props).alias("pv"),
+        doc("contains", lineitem, li_props).alias("pv"),
     )
     cust_nation = customer.select(
         eid("from_nation", F.col("c_custkey").cast("long")).alias("id"),
         gid("customer", F.col("c_custkey")).alias("start_id"),
         gid("nation", F.col("c_nationkey")).alias("end_id"),
         F.lit("from_nation").alias("label"),
-        F.lit("{}").alias("properties"),
         empty_pv.alias("pv"),
     )
     supp_nation = supplier.select(
@@ -1046,26 +1020,12 @@ def tpch_graph(spark: SparkSession, sf_dir: str, use_cache: bool = True) -> Grap
         gid("supplier", F.col("s_suppkey")).alias("start_id"),
         gid("nation", F.col("s_nationkey")).alias("end_id"),
         F.lit("from_nation").alias("label"),
-        F.lit("{}").alias("properties"),
         empty_pv.alias("pv"),
     )
     edges = placed.unionByName(contains).unionByName(cust_nation).unionByName(supp_nation)
     label_ids = dict(TPCH_VLABELS)
     label_ids.update(TPCH_ELABELS)
     g = Graph("tpch", vertices, edges, label_ids)
-    # the contains edge renames lineitem columns in li_props
-    li_types = {
-        f.name: (frozenset({a}) if (a := _spark_atom(f.dataType)) else None)
-        for f in lineitem.schema.fields
-    }
-    prop_types["contains"] = {
-        "quantity": li_types.get("l_quantity"),
-        "extendedprice": li_types.get("l_extendedprice"),
-        "discount": li_types.get("l_discount"),
-    }
-    # placed / from_nation carry an empty properties document
-    prop_types["placed"] = {}
-    prop_types["from_nation"] = {}
     g.prop_types = prop_types
     if use_cache:
         g.cache()

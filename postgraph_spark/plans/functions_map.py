@@ -52,7 +52,7 @@ class _Ctx:
 
     def prop_variant(self, i: int) -> Column | None:
         """When arg i is a direct property access on an entity carrying
-        a parsed-variant pv, return the raw VARIANT at that path —
+        a pv VARIANT, return the raw VARIANT at that path —
         temporal casts then read the native type in one variant_get
         instead of the full gval dispatch (a cast referenced k times
         after projection collapse would otherwise re-run the

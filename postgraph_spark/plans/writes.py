@@ -25,13 +25,13 @@ driver-side loop.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import ENTRY_ID_BITS, EDGE_FIELDS, VERTEX_FIELDS, Graph
+from postgraph_spark.graph import (
+    EDGE_FIELDS, EDGE_SCHEMA, ENTRY_ID_BITS, VERTEX_FIELDS, VERTEX_SCHEMA, Graph, stored
+)
 from postgraph_spark.plans import ast as A
 from postgraph_spark.plans.compiler import (
     Compiler,
@@ -47,46 +47,6 @@ DEFAULT_ELABEL = "_ag_label_edge"
 #: monotonically_increasing_id keeps the row within its partition in
 #: the low 33 bits, the partition index above them
 _MID_ROW_BITS = 33
-
-
-def _json_set(props: Column, key: str, value_json: Column) -> Column:
-    """props JSON with key set — pure JVM map<string,variant> surgery
-    (SET to NULL removes the key, cypher_set.c tuple update semantics).
-    An existing key is replaced in place (order preserved); a new key
-    appends — exactly the dict-update order the reference's tuple
-    rewrite produces."""
-    m = F.from_json(F.coalesce(props, F.lit("{}")), "map<string,variant>")
-    k = F.lit(key)
-    has = F.array_contains(F.map_keys(m), k)
-    newv = F.try_parse_json(value_json)
-    replaced = F.transform_values(
-        m, lambda k0, v: F.when((k0 == k) & value_json.isNotNull(), newv).otherwise(v)
-    )
-    removed = F.map_filter(replaced, lambda k0, v: (k0 != k) | value_json.isNotNull())
-    appended = F.when(
-        ~has & value_json.isNotNull(), F.map_concat(removed, F.create_map(k, newv))
-    ).otherwise(removed)
-    return F.to_json(appended)
-
-
-def _json_merge(props: Column, delta_json: Column) -> Column:
-    """`SET n += map`: key-wise merge, null values remove (gtype object
-    concat semantics, last-wins de-dup, gtype.h:247-263) — JVM-side."""
-    m = F.from_json(F.coalesce(props, F.lit("{}")), "map<string,variant>")
-    dm = F.from_json(F.coalesce(delta_json, F.lit("{}")), "map<string,variant>")
-    null_keys = F.map_keys(F.map_filter(dm, lambda k, v: F.is_variant_null(v)))
-    set_m = F.map_filter(dm, lambda k, v: ~F.is_variant_null(v))
-    # replace in place, drop delta-null keys, append delta-new keys
-    replaced = F.transform_values(m, lambda k, v: F.coalesce(F.element_at(set_m, k), v))
-    removed = F.map_filter(replaced, lambda k, v: ~F.array_contains(null_keys, k))
-    new_keys = F.filter(
-        F.map_keys(set_m), lambda k: ~F.array_contains(F.map_keys(m), k)
-    )
-    appended = F.map_concat(
-        removed,
-        F.map_from_arrays(new_keys, F.transform(new_keys, lambda k: F.element_at(set_m, k))),
-    )
-    return F.to_json(appended)
 
 
 def with_rowid(df: DataFrame) -> tuple[DataFrame, int]:
@@ -131,23 +91,32 @@ def rowid_graphid(label_id: int, first_entry: int) -> Column:
     return F.lit(label_id << ENTRY_ID_BITS).cast("long") + F.lit(first_entry) + F.col("__rn")
 
 
-def _entity_struct(col: Column, fields, properties: Column | None = None) -> Column:
-    """An entity struct with exactly the entity fields (drops `pv`),
-    optionally with new properties."""
-    return F.struct(*[
-        (properties if f == "properties" and properties is not None else col[f]).alias(f)
-        for f in fields
-    ])
+def _entity_struct(fields, pv: Column, base: Column | None = None, **given: Column) -> Column:
+    """An entity value as a scan binds it: the entity `fields` from
+    `given` or else the entity struct `base`, ``properties`` rendered
+    from `pv` as Graph.vertices renders it, and `pv` itself, which
+    property reads use."""
+    vals = {**given, "properties": F.to_json(pv)}
+    return F.struct(
+        *[(vals[f] if f in vals else base[f]).alias(f) for f in fields], pv.alias("pv")
+    )
 
 
-def _entity_rows(df: DataFrame, structs: list[Column], fields) -> DataFrame | None:
-    """Table rows (without pv) of the entity structs of each row of df
-    (None when there are none)."""
+def _entity_rows(df: DataFrame, structs: list[Column], schema) -> DataFrame | None:
+    """Stored table rows of the entity structs of each row of df (None
+    when there are none)."""
     if not structs:
         return None
     return df.select(F.explode(F.array(*structs)).alias("__r")).select(
-        *[f"__r.{f}" for f in fields]
+        *[f"__r.{f}" for f in schema.fieldNames()]
     )
+
+
+def _doc_map(doc: Column) -> Column:
+    """A document as map<string, variant>, for editing inside the
+    variant; a null or non-object value is an empty map."""
+    empty = F.variant_get(G.variant_object({}), "$", "map<string,variant>")
+    return F.coalesce(F.try_variant_get(doc, "$", "map<string,variant>"), empty)
 
 
 def _free_vars(e, out: set) -> set:
@@ -209,20 +178,16 @@ class WriteRunner:
         self._anon += 1
         return f"__{prefix}{self._anon}"
 
-    def _props_json_col(self, props: A.MapLit | None, df, scope) -> Column:
-        if props is None or not props.items:
-            return F.lit("{}")
-        parts = []
-        for k, vexpr in props.items.items():
-            val = self.comp.compile_expr(vexpr, df, scope)
-            parts.append(
-                F.concat(
-                    F.lit(json.dumps(k)),
-                    F.lit(":"),
-                    F.coalesce(G.to_json_text(val), F.lit("null")),
-                )
-            )
-        return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
+    def _props_variant(self, props: A.MapLit | None, df, scope, given=None) -> Column:
+        """A property map -> its VARIANT document, each value a typed
+        variant (G.to_variant) — the one builder of the documents CREATE,
+        MERGE and `SET +=` write. `given` adds keys whose variants are
+        already built (MERGE's correlated values)."""
+        values = {
+            k: G.to_variant(self.comp.compile_expr(vexpr, df, scope))
+            for k, vexpr in (props.items.items() if props else ())
+        }
+        return G.variant_object({**values, **(given or {})})
 
     # ------------------------------------------------------------- CREATE
 
@@ -239,7 +204,7 @@ class WriteRunner:
         opens = df is None
         if opens:
             df = self.spark.range(0, 1, 1, 1).select(F.lit(0).alias("__rn"))
-        props: dict[int, str] = {}  # id(pattern element) -> its JSON column
+        props: dict[int, str] = {}  # id(pattern element) -> its document column
         created: set[str] = set()
         for path in c.paths:
             for i, el in enumerate(path.elements):
@@ -253,7 +218,7 @@ class WriteRunner:
                 if el.var:
                     created.add(el.var)
                 props[id(el)] = self._fresh("cp")
-                df = df.withColumn(props[id(el)], self._props_json_col(el.props, df, scope))
+                df = df.withColumn(props[id(el)], self._props_variant(el.props, df, scope))
         # one pin of the rows with their properties; an opening CREATE's
         # one row in one partition is already numbered by a literal
         df, n_rows = (df.localCheckpoint(eager=True), 1) if opens else with_rowid(df)
@@ -271,11 +236,7 @@ class WriteRunner:
             var = node.var or self._fresh("cv")
             df = df.withColumn(
                 var,
-                F.struct(
-                    gid.alias("id"),
-                    F.lit(label).alias("label"),
-                    F.col(props[id(node)]).alias("properties"),
-                ),
+                _entity_struct(VERTEX_FIELDS, F.col(props[id(node)]), id=gid, label=F.lit(label)),
             )
             scope.kinds[var] = VKIND_VERTEX
             created_v.append(var)
@@ -297,12 +258,9 @@ class WriteRunner:
                 evar = rel.var or self._fresh("ce")
                 df = df.withColumn(
                     evar,
-                    F.struct(
-                        gid.alias("id"),
-                        F.col(src)["id"].alias("start_id"),
-                        F.col(dst)["id"].alias("end_id"),
-                        F.lit(label).alias("label"),
-                        F.col(props[id(rel)]).alias("properties"),
+                    _entity_struct(
+                        EDGE_FIELDS, F.col(props[id(rel)]), id=gid, start_id=F.col(src)["id"],
+                        end_id=F.col(dst)["id"], label=F.lit(label),
                     ),
                 )
                 scope.kinds[evar] = VKIND_EDGE
@@ -310,8 +268,8 @@ class WriteRunner:
                 prev = nxt
 
         self.graph.append_rows(
-            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_FIELDS),
-            _entity_rows(df, [F.col(v) for v in created_e], EDGE_FIELDS),
+            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_SCHEMA),
+            _entity_rows(df, [F.col(v) for v in created_e], EDGE_SCHEMA),
         )
         df = df.drop("__rn", *props.values())
         # anonymous entities drop out of the visible scope
@@ -324,32 +282,49 @@ class WriteRunner:
     # ---------------------------------------------------------------- SET
 
     def do_set(self, c: A.SetClause, df, scope: Scope) -> DataFrame:
+        """SET n.k = v / SET n += map: each item edits the entity's
+        document inside the variant (map<string, variant> surgery, then
+        to_variant_object), so untouched values keep their types. A null
+        value removes its key (cypher_set.c tuple update semantics)."""
         if df is None:
             raise CompileError("SET requires a preceding MATCH/CREATE")
-        touched: dict[str, Column] = {}
+        tables = {VKIND_VERTEX: ("vertices", VERTEX_FIELDS), VKIND_EDGE: ("edges", EDGE_FIELDS)}
+        touched: dict[str, Column] = {}  # var -> its new document
         for item in c.items:
             tgt = item.target
             if isinstance(tgt, A.Prop) and isinstance(tgt.base, A.Var) and len(tgt.path) == 1:
                 var, key = tgt.base.name, tgt.path[0]
-                props = touched.get(var, F.col(var)["properties"])
-                val = self.comp.compile_expr(item.expr, df, scope)
-                vtext = F.when(val["t"] == G.T_NULL, F.lit(None).cast("string")).otherwise(
-                    G.to_json_text(val)
-                )
-                touched[var] = _json_set(props, key, vtext)
             elif isinstance(tgt, A.Var) and item.is_add:
-                var = tgt.name
-                props = touched.get(var, F.col(var)["properties"])
-                delta = self.comp.compile_expr(item.expr, df, scope)
-                touched[var] = _json_merge(props, delta["j"])
+                var, key = tgt.name, None
             else:
                 raise CompileError("SET target must be var.prop or var += map")
-        tables = {VKIND_VERTEX: ("vertices", VERTEX_FIELDS), VKIND_EDGE: ("edges", EDGE_FIELDS)}
-        for var, props_col in touched.items():
             if scope.kinds.get(var) not in tables:
                 raise CompileError(f"cannot SET on {var!r}")
+            if var not in touched:
+                touched[var] = self.comp._var_pv(df, var)
+            if touched[var] is None:  # a projected entity: its stored row's document
+                tbl = getattr(self.graph, tables[scope.kinds[var]][0])
+                tbl = tbl.select(F.col("id").alias(f"__sid_{var}"), F.col("pv").alias(f"__spv_{var}"))
+                df = df.join(tbl, F.col(var)["id"] == F.col(f"__sid_{var}"), "left_outer")
+                touched[var] = F.col(f"__spv_{var}")
+            # the delta: n.k = v is n += {k: v}; a non-map delta is empty
+            if key is not None:
+                v = G.to_variant(self.comp.compile_expr(item.expr, df, scope))
+                d = F.create_map(F.lit(key), v)
+            elif isinstance(item.expr, A.MapLit):
+                d = _doc_map(self._props_variant(item.expr, df, scope))
+            else:
+                d = _doc_map(G.to_variant(self.comp.compile_expr(item.expr, df, scope)))
+            # its keys replace the document's; a null value removes its key
+            kept = F.map_filter(
+                _doc_map(touched[var]), lambda k, _v: ~F.array_contains(F.map_keys(d), k)
+            )
+            new = F.map_filter(d, lambda _k, v: v.isNotNull() & ~F.is_variant_null(v))
+            touched[var] = F.to_variant_object(F.map_concat(kept, new))
+        for var, pv in touched.items():
             fields = tables[scope.kinds[var]][1]
-            df = df.withColumn(var, _entity_struct(F.col(var), fields, props_col))
+            df = df.withColumn(var, _entity_struct(fields, pv, F.col(var)))
+        df = df.drop(*[f"__{c}_{v}" for v in touched for c in ("sid", "spv")])
         df = df.localCheckpoint(eager=True)
 
         g = self.graph
@@ -358,27 +333,21 @@ class WriteRunner:
             written = df.select(
                 F.col(var)["id"].alias("__uid"),
                 F.col(var)["label"].alias("label"),
-                F.col(var)["properties"].alias("__uprops"),
+                F.col(var)["pv"].alias("pv"),
             )
             # one job: the catalog learns every candidate document's
             # atoms, and the touched label partitions come back for the
             # durable partition-scoped rewrite
-            upd_labels = g.extend_prop_types(
-                written.select("label", F.try_parse_json("__uprops").alias("pv"))
-            )
-            updates = (
-                written.groupBy("__uid")
-                .agg(F.last("__uprops").alias("__uprops"))
-                .withColumn("__upv", F.try_parse_json("__uprops"))
-            )
+            upd_labels = g.extend_prop_types(written)
+            updates = written.groupBy("__uid").agg(F.last("pv").alias("__upv"))
             upd = (
-                getattr(g, kind).join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                .withColumn("properties", F.coalesce(F.col("__uprops"), F.col("properties")))
+                stored(getattr(g, kind), kind)
+                .join(updates, F.col("id") == F.col("__uid"), "left_outer")
                 .withColumn("pv", F.coalesce(F.col("__upv"), F.col("pv")))
-                .drop("__uid", "__uprops", "__upv")
+                .drop("__uid", "__upv")
             )
             g.enforce_unique_post_update(upd, upd_labels)
-            setattr(g, kind, upd.localCheckpoint(eager=True))
+            g.pin(kind, upd)
             g.persist_partitions(kind, upd_labels)
         return df
 
@@ -440,10 +409,8 @@ class WriteRunner:
                         v_ids, g.vertices["id"] == v_ids["id"], "left_semi"
                     ).select("label").distinct().collect()
                 ]
-            g.vertices = g.vertices.join(v_ids, g.vertices["id"] == v_ids["id"], "left_anti").localCheckpoint(
-                eager=True
-            )
-        g.edges = edges.localCheckpoint(eager=True)
+            g.pin("vertices", g.vertices.join(v_ids, g.vertices["id"] == v_ids["id"], "left_anti"))
+        g.pin("edges", edges)
         if g.durable_path:
             e_labels: set[str] = set()
             for ldf in e_label_dfs:
@@ -520,13 +487,13 @@ class WriteRunner:
             pdf = pdf.withColumn(
                 f"__pc_{tag}", G.canon_key_text(G.from_variant(F.try_variant_get(ppv, f"$.{k}", "variant")))
             )
-        oc_cols, oj_cols = [], []
+        oc_cols, ov_cols = [], []
         for tag, idx, k, vexpr in corr_list:
             val = self.comp.compile_expr(vexpr, df, scope)
             df = df.withColumn(f"__oc_{tag}", G.canon_key_text(val, null_as_sentinel=True))
-            df = df.withColumn(f"__oj_{tag}", F.coalesce(G.to_json_text(val), F.lit("null")))
+            df = df.withColumn(f"__ov_{tag}", G.to_variant(val))
             oc_cols.append(f"__oc_{tag}")
-            oj_cols.append(f"__oj_{tag}")
+            ov_cols.append(f"__ov_{tag}")
 
         # ---- probe join: bound ids + correlated prop keys (pure equi)
         bound_vars = [var for kind, var, bound, *_ in elems if bound]
@@ -547,37 +514,28 @@ class WriteRunner:
         miss_rows = joined.filter(~matched)
         if key_cols or oc_cols:
             misses = (
-                miss_rows.select(*key_cols, *oc_cols, *oj_cols)
+                miss_rows.select(*key_cols, *oc_cols, *ov_cols)
                 .groupBy(*key_names)
-                .agg(*[F.first(cjs).alias(cjs) for cjs in oj_cols])
-                if oj_cols
+                .agg(*[F.first(cv).alias(cv) for cv in ov_cols])
+                if ov_cols
                 else miss_rows.select(*key_cols, *oc_cols).distinct()
             )
         else:
             misses = miss_rows.select(F.lit(1).alias("__mk")).distinct()
             key_names = ["__mk"]
             joined = joined.withColumn("__mk", F.lit(1))
-        def props_json(idx) -> Column:
-            _k, _v, _b, el, const_items, corr_items = elems[idx]
-            parts = []
-            for k, vexpr in const_items.items():
-                val = self.comp.compile_expr(vexpr, None, Scope())
-                parts.append(
-                    F.concat(F.lit(json.dumps(k)), F.lit(":"),
-                             F.coalesce(G.to_json_text(val), F.lit("null")))
-                )
-            for k, vexpr in corr_items:
-                tag = f"{idx}_{k}"
-                parts.append(F.concat(F.lit(json.dumps(k)), F.lit(":"), F.col(f"__oj_{tag}")))
-            if not parts:
-                return F.lit("{}")
-            return F.concat(F.lit("{"), F.concat_ws(",", *parts), F.lit("}"))
+        def props_variant(idx) -> Column:
+            _k, _v, _b, _el, const_items, corr_items = elems[idx]
+            return self._props_variant(
+                A.MapLit(const_items), None, Scope(),
+                given={k: F.col(f"__ov_{idx}_{k}") for k, _e in corr_items},
+            )
 
         # properties of the entities a miss creates are evaluated before
         # the misses are numbered and pinned, so every read sees one value
-        misses = misses.withColumns(
-            {f"__cp_{var}": props_json(idx) for idx, (_k, var, b, *_r) in enumerate(elems) if not b}
-        )
+        misses = misses.withColumns({
+            f"__cp_{var}": props_variant(idx) for idx, (_k, var, b, *_r) in enumerate(elems) if not b
+        })
         misses, n_miss = with_rowid(misses)
 
         created_cols: dict[str, Column] = {}
@@ -594,10 +552,8 @@ class WriteRunner:
                 gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "vertex"))
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 vid_expr[idx] = F.col(f"__cid_{var}")
-                created_cols[var] = F.struct(
-                    vid_expr[idx].alias("id"),
-                    F.lit(label).alias("label"),
-                    F.col(f"__cp_{var}").alias("properties"),
+                created_cols[var] = _entity_struct(
+                    VERTEX_FIELDS, F.col(f"__cp_{var}"), id=vid_expr[idx], label=F.lit(label)
                 )
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
                 if kind != "e":
@@ -606,18 +562,15 @@ class WriteRunner:
                 gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "edge"))
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 src_i, dst_i = (idx - 1, idx + 1) if el.direction != "in" else (idx + 1, idx - 1)
-                created_cols[var] = F.struct(
-                    F.col(f"__cid_{var}").alias("id"),
-                    vid_expr[src_i].alias("start_id"),
-                    vid_expr[dst_i].alias("end_id"),
-                    F.lit(label).alias("label"),
-                    F.col(f"__cp_{var}").alias("properties"),
+                created_cols[var] = _entity_struct(
+                    EDGE_FIELDS, F.col(f"__cp_{var}"), id=F.col(f"__cid_{var}"),
+                    start_id=vid_expr[src_i], end_id=vid_expr[dst_i], label=F.lit(label),
                 )
             new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
             new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
             self.graph.append_rows(
-                _entity_rows(misses, new_v, VERTEX_FIELDS),
-                _entity_rows(misses, new_e, EDGE_FIELDS),
+                _entity_rows(misses, new_v, VERTEX_SCHEMA),
+                _entity_rows(misses, new_e, EDGE_SCHEMA),
             )
             # join created entities back to ALL rows on the same keys
             cstructs = misses.select(
@@ -645,13 +598,14 @@ class WriteRunner:
             for kn in key_names:
                 joined = joined.drop(cstructs[kn])
 
-        # ---- bind each pattern var: matched struct (pv stripped) else created
+        # ---- bind each pattern var: matched struct else created
         out = joined
         for kind, var, bound, el, *_r in elems:
             if bound:
                 out = out.drop(f"__pm_{var}")
                 continue
-            pm = _entity_struct(F.col(f"__pm_{var}"), VERTEX_FIELDS if kind == "v" else EDGE_FIELDS)
+            pmc = F.col(f"__pm_{var}")
+            pm = _entity_struct(VERTEX_FIELDS if kind == "v" else EDGE_FIELDS, pmc["pv"], pmc)
             if n_miss and f"__cr_{var}" in out.columns:
                 bound_col = F.when(F.col(f"__pm_{var}").isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
             else:
@@ -662,7 +616,7 @@ class WriteRunner:
                 out = out.drop(var)
             else:
                 scope.kinds[var] = VKIND_VERTEX if kind == "v" else VKIND_EDGE
-        drops = [c0 for c0 in out.columns if c0.startswith("__oc_") or c0.startswith("__oj_")
+        drops = [c0 for c0 in out.columns if c0.startswith("__oc_") or c0.startswith("__ov_")
                  or c0 == "__mk" or c0 == "__one" or c0.startswith("__rn")]
         out = out.drop(*drops)
         # pin the pipeline only when this MERGE created entities: the

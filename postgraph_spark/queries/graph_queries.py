@@ -39,8 +39,8 @@ def graph_match_1hop(spark, sf_dir):
     c = g.vertices_with_label("customer").alias("c")
     o = g.vertices_with_label("orders").alias("o")
     e = g.edges_with_label("placed").alias("e")
-    # property reads go through the pv VARIANT (parsed once at graph
-    # build) — variant_get, never a get_json_object text re-parse
+    # property reads go through the pv VARIANT (built once at graph
+    # build) — variant_get, never a parse of the rendered text
     return (
         c.join(e, F.col("c.id") == F.col("e.start_id"))
         .join(o, F.col("e.end_id") == F.col("o.id"))

@@ -625,7 +625,7 @@ _EMB_GRAPH_CACHE: dict = {}
 
 def _emb_graph(spark, sf_dir):
     """Embeddings projected as `emb` vertices ({vec_id, embedding}).
-    float32 embeddings are widened to double BEFORE the JSON/VARIANT
+    float32 embeddings are widened to double BEFORE the VARIANT
     projection: shortest-repr doubles round-trip exactly, so the Cypher
     path sees bit-identical values to DuckDB's CAST(embedding AS
     DOUBLE[]) (a float32's shortest repr parsed as double does NOT equal
@@ -644,7 +644,6 @@ def _emb_graph(spark, sf_dir):
         verts = df.select(
             (F.lit(1 << ENTRY_ID_BITS).cast("long") + F.col("vec_id").cast("long")).alias("id"),
             F.lit("emb").alias("label"),
-            F.to_json(ps).alias("properties"),
             F.to_variant_object(ps).alias("pv"),
         )
         edges = spark.createDataFrame([], EDGE_SCHEMA)

@@ -6,7 +6,7 @@ a file whose rows carry a user id column; edge files then reference
 endpoints by those user ids. This is the Spark-native re-design:
 
 - Any DataFrame (or file readable by ``spark.read``) becomes a vertex
-  label: each row's columns are packed into the JSON properties
+  label: each row's columns are packed into its VARIANT properties
   document, graphids are assigned with the same distributed
   per-partition scheme as CREATE (plans/writes.py with_rowid — no
   single-partition window, no collect of data), and the rows commit
@@ -16,7 +16,7 @@ endpoints by those user ids. This is the Spark-native re-design:
   durable graph appends only the new rows.
 - The user id column is kept as the ``__id`` property (AGE convention),
   so edge loads resolve endpoints with two equi-joins on
-  ``properties.__id`` — shuffle on the join key, broadcast when a side
+  ``pv.__id`` — shuffle on the join key, broadcast when a side
   is small, never a driver-side lookup table.
 
 At 100 TB the load is: scan (parallel) -> one pinning job (properties
@@ -30,19 +30,43 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from postgraph_spark.functions.gtype import variant_object
 from postgraph_spark.graph import Graph
 from postgraph_spark.plans.writes import rowid_graphid, with_rowid
 
 
-def _props_json(df: DataFrame, cols: list[str], id_col: str | None) -> F.Column:
-    """Pack the given columns into the JSON properties text. The user
-    id column (when present) is duplicated as ``__id`` — the AGE loader
-    keeps it queryable and the edge loader joins on it."""
-    struct_cols = [F.col(c).alias(c) for c in cols]
+#: date_format patterns of the JSON text temporal columns load as
+_TEXT_FORMATS = {
+    T.DateType: "yyyy-MM-dd",
+    T.TimestampType: "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
+    T.TimestampNTZType: "yyyy-MM-dd'T'HH:mm:ss.SSS",
+}
+
+
+def _as_loaded(df: DataFrame, c: str) -> F.Column:
+    """A source column as its property value: the value itself, except
+    that a date or timestamp loads as its JSON text (a string property)
+    and a float as the double of its shortest decimal text."""
+    dt = type(df.schema[c].dataType)
+    if dt in _TEXT_FORMATS:
+        return F.date_format(c, _TEXT_FORMATS[dt])
+    return F.col(c).cast("string").cast("double") if dt is T.FloatType else F.col(c)
+
+
+def _props_pv(df: DataFrame, cols: list[str], id_col: str | None) -> F.Column:
+    """Pack the given columns into the VARIANT properties document; a
+    null value stores no key. The user id column (when present) is
+    duplicated as ``__id`` — the AGE loader keeps it queryable and the
+    edge loader joins on it."""
+    struct_cols = [_as_loaded(df, c).alias(c) for c in cols]
     if id_col is not None:
-        struct_cols.append(F.col(id_col).alias("__id"))
-    return F.to_json(F.struct(*struct_cols))
+        struct_cols.append(_as_loaded(df, id_col).alias("__id"))
+    if not struct_cols:
+        return variant_object({})
+    doc = F.variant_get(F.to_variant_object(F.struct(*struct_cols)), "$", "map<string,variant>")
+    return F.to_variant_object(F.map_filter(doc, lambda _k, v: ~F.is_variant_null(v)))
 
 
 def load_vertices(
@@ -58,9 +82,9 @@ def load_vertices(
     props_cols: which columns become properties (default: all).
     """
     cols = props_cols if props_cols is not None else list(df.columns)
-    body, n = with_rowid(df.select(_props_json(df, cols, id_col).alias("properties")))
+    body, n = with_rowid(df.select(_props_pv(df, cols, id_col).alias("pv")))
     gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "vertex"))
-    new_rows = body.select(gid.alias("id"), F.lit(label).alias("label"), "properties")
+    new_rows = body.select(gid.alias("id"), F.lit(label).alias("label"), "pv")
     graph.append_rows(vertices=new_rows)
     return n
 
@@ -71,7 +95,7 @@ def _gid_by_user_id(graph: Graph, label: str) -> DataFrame:
     return (
         graph.vertices_with_label(label)
         .select(
-            F.get_json_object("properties", "$.__id").alias("__key"),
+            F.try_variant_get("pv", "$.__id", "string").alias("__key"),
             F.col("id").alias("__gid"),
         )
     )
@@ -106,12 +130,12 @@ def load_edges(
         resolved.select(
             F.col("__src").alias("start_id"),
             F.col("__dst").alias("end_id"),
-            _props_json(resolved, cols, None).alias("properties"),
+            _props_pv(resolved, cols, None).alias("pv"),
         )
     )
     gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "edge"))
     new_rows = body.select(
-        gid.alias("id"), "start_id", "end_id", F.lit(label).alias("label"), "properties"
+        gid.alias("id"), "start_id", "end_id", F.lit(label).alias("label"), "pv"
     )
     graph.append_rows(edges=new_rows)
     return n

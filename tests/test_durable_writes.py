@@ -194,3 +194,46 @@ def test_reopen_fails_on_missing_table_dir(spark, root):
     assert reopened.fetch_values("MATCH ()-[r]->() RETURN count(r)") == [0]
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         reopened.execute("USE GRAPH torn")
+
+
+def test_stored_layout_holds_only_the_variant(spark, root):
+    """Each row stores one document, the pv VARIANT: the vertex and edge
+    files of a snapshot hold exactly the stored columns (label is the
+    partition directory), with no properties text."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+    eng.execute("CREATE GRAPH lay")
+    eng.execute("USE GRAPH lay")
+    eng.execute("CREATE (:p {x: 1.5})-[:r {w: 1}]->(:p)")
+    eng.execute("MATCH (a:p {x: 1.5}) SET a.y = 'b'")
+    for kind, cols in (("vertices", ["id", "pv"]), ("edges", ["id", "start_id", "end_id", "pv"])):
+        tdir = _table_dir(os.path.join(root, "lay"), kind)
+        files = glob.glob(os.path.join(tdir, "label=*", "*.parquet"))
+        assert files
+        for f in files:
+            assert pq.read_schema(f).names == cols, f
+        assert sorted(pq.read_table(tdir).column_names) == sorted([*cols, "label"])
+
+
+def test_reopen_refuses_the_properties_text_layout(spark, root):
+    """A directory in the older layout, tables of (id, label, properties
+    JSON text) and a catalog without a layout marker, fails the open with
+    an error that names the layout, instead of reading null documents."""
+    import json
+    import os
+
+    path = os.path.join(root, "old")
+    rows = spark.createDataFrame(
+        [(1 << 48 | 1, "p", '{"x": 1}')], "id long, label string, properties string"
+    )
+    rows.write.partitionBy("label").parquet(os.path.join(path, "snap-1", "vertices"))
+    os.makedirs(os.path.join(path, "snap-1", "edges"))
+    with open(os.path.join(path, "catalog.json"), "w") as f:
+        json.dump({"name": "old", "label_ids": {"p": 1}, "snapshot": "snap-1"}, f)
+    eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+    with pytest.raises(ValueError, match="'properties-text' layout"):
+        eng.execute("USE GRAPH old")

@@ -5,8 +5,7 @@ a typed read never disagrees with an untyped one.
 A seeded write sequence runs on a typed in-memory graph, where after each
 statement a fixed set of reads must return the same rows with the catalog
 as without it (``g.prop_types = {}``). On a durable graph reopened after
-every statement, and on a graph directory in the layout from before
-``pv`` was stored, the reads must return those same rows. A SET whose
+every statement, the reads must return those same rows. A SET whose
 table write fails after catalog.json is written must still read
 correctly after a reopen.
 """
@@ -16,7 +15,6 @@ import os
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from postgraph_spark import engine as engine_mod
 from postgraph_spark.engine import CypherEngine
@@ -139,34 +137,6 @@ def test_durable_catalog_survives_reopen(spark, tmp_path, expected):
         assert eng.graph.prop_types == writer.graph.prop_types, stmt
         assert_covers(eng.graph, stmt)
         assert reads(eng) == expected[step], stmt
-
-
-def _write_legacy_graph(spark, path: str) -> None:
-    """A graph directory as written before pv was stored: three-column
-    vertex tables, no property-type catalog in catalog.json."""
-    g = Graph.from_rows(spark, "pc_legacy", PEOPLE, KNOWS)
-    for kind in ("vertices", "edges"):
-        getattr(g, kind).drop("pv").write.partitionBy("label").parquet(
-            os.path.join(path, "snap-1", kind)
-        )
-    with open(os.path.join(path, "catalog.json"), "w") as f:
-        json.dump({"name": "pc_legacy", "label_ids": g.label_ids, "snapshot": "snap-1"}, f)
-
-
-def test_legacy_layout_reads_parsed_pv(spark, tmp_path, expected):
-    root = str(tmp_path)
-    _write_legacy_graph(spark, os.path.join(root, "pc_legacy"))
-    writer = reopen(spark, root, "pc_legacy")
-    assert writer.graph.prop_types is None  # stored without a catalog: unknown
-    assert reads(writer) == expected[0]
-    for step, stmt in enumerate(write_sequence(seed=12), 1):
-        writer.execute(stmt)
-        assert reads(writer) == expected[step], stmt
-    # the directory now mixes files without pv and files with it
-    eng = reopen(spark, root, "pc_legacy")
-    for tbl in (eng.graph.vertices, eng.graph.edges):
-        assert tbl.filter(F.col("pv").isNull()).count() == 0
-    assert reads(eng) == expected[-1]
 
 
 def test_set_fault_after_catalog_write(spark, tmp_path, monkeypatch):

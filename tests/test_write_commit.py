@@ -155,3 +155,48 @@ def test_created_batch_does_not_widen_table(spark):
         eng.execute(f"MATCH (m:y {{i: {i}}}) CREATE (m)-[:r]->(:z {{i: {i}}})")
     assert g.vertices.rdd.getNumPartitions() <= 8 + 3
     assert eng.fetch_values("MATCH (:y)-[:r]->(z:z) RETURN count(z)") == [3]
+
+
+@pytest.fixture(scope="module")
+def float_doc(spark, tmp_path_factory):
+    """A durable vertex created with a float, a list and a map, then SET
+    twice: the writing engine and a fresh one over the reopened graph."""
+    root = str(tmp_path_factory.mktemp("graphs"))
+    eng = _engine(spark, root, name="fd")
+    eng.execute("CREATE (:v {x: 1.0, e: [1.0, 2], o: {z: 1.5}})")
+    eng.execute("MATCH (n:v) SET n.y = 2")
+    eng.execute("MATCH (n:v) SET n += {w: 'a'}")
+    reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
+    reopened.execute("USE GRAPH fd")
+    return eng, reopened
+
+
+def test_set_keeps_float_properties(float_doc):
+    """SET edits the document inside its variant, so the untouched float
+    1.0 stays a float in n.x, properties(n) and RETURN n, in memory and
+    after a reopen, and the catalog keeps x a double. A round trip of the
+    document through JSON text turned 1.0 into the integer 1."""
+    for eng in float_doc:
+        ((x, props, n),) = eng.fetch("MATCH (n:v) RETURN n.x, properties(n), n")
+        for v in (x, props["x"], n["properties"]["x"]):
+            assert type(v) is float and v == 1.0
+        assert eng.graph.prop_atoms("v", "x") == frozenset({"double"})
+
+
+#: the rendering rule, as text: keys sorted, a top-level float renders as
+#: a float, and n.e reads what properties(n).e reads. A float nested in a
+#: list or map is a decimal, so the list's 1.0 renders as 1.
+RENDERED = {
+    "n": '{"e":[1,2],"o":{"z":1.5},"w":"a","x":1.0,"y":2}',
+    "properties(n)": '{"e":[1,2],"o":{"z":1.5},"w":"a","x":1.0,"y":2}',
+    "keys(n)": '["e","o","w","x","y"]',
+    "n.e": "[1,2]",
+    "properties(n).e": "[1,2]",
+}
+
+
+def test_document_rendering_golden(float_doc):
+    for eng in float_doc:
+        (row,) = eng.execute(f"MATCH (n:v) RETURN {', '.join(RENDERED)}").collect()
+        got = [row[0]["properties"]] + [row[i]["j"] for i in range(1, len(RENDERED))]
+        assert dict(zip(RENDERED, got)) == RENDERED
