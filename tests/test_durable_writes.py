@@ -237,3 +237,83 @@ def test_reopen_refuses_the_properties_text_layout(spark, root):
     eng = CypherEngine(spark, GraphCatalog(spark, root=root))
     with pytest.raises(ValueError, match="'properties-text' layout"):
         eng.execute("USE GRAPH old")
+
+
+# ---- entity values end to end: one golden fixture, in memory and reopened
+
+_A = {"id": 281474976710657, "label": "v", "properties": {"name": "a", "x": 1}}
+_B = {"id": 281474976710658, "label": "v", "properties": {"name": "b", "x": 2}}
+_C = {"id": 281474976710659, "label": "v", "properties": {"name": "c", "x": 1}}
+_AB = {"id": 562949953421313, "start_id": _A["id"], "end_id": _B["id"], "label": "r"}
+
+#: (statement, its rows in order; None = compare them sorted)
+_ENTITY_GOLDENS = [
+    ("MATCH (n:v)-[:r]->() WITH DISTINCT n RETURN n.x AS x, n ORDER BY x",
+     [(1, _A), (2, _B)]),
+    ("MATCH (n:v)-[:r]->() RETURN n, count(*) AS c ORDER BY c", [(_B, 1), (_A, 2)]),
+    ("MATCH (n:v) RETURN n ORDER BY n", [(_A,), (_B,), (_C,)]),
+    ("MATCH (n:v {x: 1}) RETURN n UNION MATCH (n:v)-[:r]->(:v {name: 'c'}) RETURN n",
+     None, [(_A,), (_B,), (_C,)]),
+    ("MATCH (n:v) RETURN n.name AS name, keys(n) AS k, properties(n) AS p, "
+     "n @> {x: 1} AS c ORDER BY name",
+     [("a", ["name", "x"], _A["properties"], True),
+      ("b", ["name", "x"], _B["properties"], False),
+      ("c", ["name", "x"], _C["properties"], True)]),
+    ("MATCH p = (:v {name: 'a'})-[:r]->(:v {name: 'b'}) RETURN p",
+     [({"nodes": [{**_A, "properties": '{"name":"a","x":1}'},
+                  {**_B, "properties": '{"name":"b","x":2}'}],
+        "edges": [{**_AB, "properties": '{"w":1}'}]},)]),
+    ("MATCH ()-[r:r {w: 3}]->() RETURN startNode(r) AS s", [(_B,)]),
+]
+
+
+def _plain(v):
+    """fetch()'s value with Spark Rows as dicts."""
+    if hasattr(v, "asDict"):
+        return {k: _plain(x) for k, x in v.asDict().items()}
+    if isinstance(v, (list, tuple)):
+        return type(v)(_plain(x) for x in v)
+    if isinstance(v, dict):
+        return {k: _plain(x) for k, x in v.items()}
+    return v
+
+
+@pytest.fixture(scope="module", params=["memory", "reopen"])
+def entity_graph(spark, tmp_path_factory, request):
+    """Three `v` vertices a -> b, a -> c, b -> c, built in a session
+    graph ("memory") or written to a root and read by a fresh catalog
+    ("reopen")."""
+    root = str(tmp_path_factory.mktemp("entities")) if request.param == "reopen" else None
+    eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+    eng.execute("CREATE GRAPH golden")
+    eng.execute("USE GRAPH golden")
+    eng.execute("CREATE (:v {x: 1, name: 'a'})-[:r {w: 1}]->(:v {x: 2, name: 'b'})")
+    eng.execute(
+        "MATCH (a:v {name: 'a'}), (b:v {name: 'b'}) "
+        "CREATE (a)-[:r {w: 2}]->(:v {x: 1, name: 'c'})<-[:r {w: 3}]-(b)"
+    )
+    if root is not None:
+        eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+        eng.execute("USE GRAPH golden")
+    return eng, root
+
+
+def test_entity_values_golden(spark, entity_graph):
+    """A bound vertex or edge keeps its identity and its whole document
+    through WITH, DISTINCT, grouping, ORDER BY, UNION, entity functions,
+    named paths, startNode and a SET on a projected entity, and leaves
+    the engine as (id, label, properties)."""
+    eng, root = entity_graph
+    for stmt, ordered, *unordered in _ENTITY_GOLDENS:
+        got = _plain(eng.fetch(stmt))
+        if ordered is None:
+            assert sorted(got, key=repr) == sorted(unordered[0], key=repr), stmt
+        else:
+            assert got == ordered, stmt
+    y5 = [{**n, "properties": {**n["properties"], "y": 5}} for n in (_A, _C)]
+    got = _plain(eng.fetch("MATCH (n:v) WITH n WHERE n.x = 1 SET n.y = 5 RETURN n"))
+    assert sorted(got, key=repr) == sorted([(n,) for n in y5], key=repr)
+    if root is not None:
+        eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+        eng.execute("USE GRAPH golden")
+    assert _plain(eng.fetch("MATCH (n:v) RETURN n ORDER BY n")) == [(y5[0],), (_B,), (y5[1],)]
