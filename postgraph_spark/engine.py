@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import re
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,9 +94,25 @@ _IVF_INDEX_RE = re.compile(
 #:   (*snapshot, shape) -> the _Shape of a statement shape: its first
 #:                         per-text plan and its verified plan templates.
 #: Each value also holds the keyed objects, so their ids are never
-#: recycled onto a new graph while the entry lives. Bounded: cleared
-#: wholesale past 256 entries, as correctness never depends on it.
-_PLAN_CACHE: dict = {}
+#: recycled onto a new graph while the entry lives. Bounded: past
+#: _PLAN_CACHE_SIZE entries the least recently used one is evicted (a
+#: hit makes an entry the newest), as correctness never depends on it.
+_PLAN_CACHE: OrderedDict = OrderedDict()
+_PLAN_CACHE_SIZE = 256
+
+
+def _cache_get(key):
+    hit = _PLAN_CACHE.get(key)
+    if hit is not None:
+        _PLAN_CACHE.move_to_end(key)
+    return hit
+
+
+def _cache_put(key, value) -> None:
+    _PLAN_CACHE[key] = value
+    _PLAN_CACHE.move_to_end(key)
+    while len(_PLAN_CACHE) > _PLAN_CACHE_SIZE:
+        _PLAN_CACHE.popitem(last=False)
 
 
 class _Template:
@@ -252,22 +269,20 @@ class CypherEngine:
         costs it saves."""
         g = self.graph
         snap = (id(self.spark), id(g), id(g.vertices), id(g.edges))
-        hit = _PLAN_CACHE.get((*snap, text))
+        hit = _cache_get((*snap, text))
         if hit is not None:
             return hit[0]
-        if len(_PLAN_CACHE) > 256:
-            _PLAN_CACHE.clear()
         held = (g, g.vertices, g.edges)
-        entry = _PLAN_CACHE.get((*snap, q.shape))
+        entry = _cache_get((*snap, q.shape))
         shape = entry[0] if entry is not None else None
         df = shape.plan(self.spark, g, q) if shape is not None else None
         if df is None:
             df = Compiler(self.spark, g).compile_query(q)
             if shape is None:
-                _PLAN_CACHE[(*snap, q.shape)] = (_Shape(q, df), *held)
+                _cache_put((*snap, q.shape), (_Shape(q, df), *held))
             else:
                 shape.first = (q, df)
-        _PLAN_CACHE[(*snap, text)] = (df, *held)
+        _cache_put((*snap, text), (df, *held))
         return df
 
     def _sync_sql_views(self) -> None:

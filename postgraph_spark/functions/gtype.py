@@ -449,22 +449,15 @@ def from_variant_atoms(x: Column, atoms, bind: bool = False) -> Column:
 
 
 def prop_access_variant(pv: Column, path: list[str], atoms=None) -> Column:
-    """properties VARIANT -> gval at $.a.b... — the fast path: every key
-    access is a binary variant_get instead of a parse of the rendered
-    text. ``atoms`` (a catalog
-    atom set, see from_variant_atoms) skips the runtime type dispatch."""
+    """properties VARIANT -> gval at $.a.b...; a missing key is a gtype
+    null (reference `->` semantics, gtype.c:1621-1832). Every key access
+    is a binary variant_get. ``atoms`` (a catalog atom set, see
+    from_variant_atoms) skips the runtime type dispatch."""
     p = "$." + ".".join(path)
     v = F.try_variant_get(pv, p, "variant")
     if atoms is not None:
         return from_variant_atoms(v, atoms, bind=True)
     return from_variant(v, bind=True)
-
-
-def prop_access(props_json: Column, path: list[str], atoms=None) -> Column:
-    """properties JSON -> gval at $.a.b...; missing key -> gtype null
-    (reference `->` semantics, gtype.c:1621-1832). Parses the JSON at
-    every call — prefer prop_access_variant over a materialized pv."""
-    return prop_access_variant(F.try_parse_json(props_json), path, atoms=atoms)
 
 
 def element_access(gv: Column, idx: Column) -> Column:

@@ -19,9 +19,12 @@ reference's binary ``properties gtype`` heap column,
 label_commands.c:690-712). It is built from typed values — never parsed
 from text — so a float stays a DOUBLE, and like gtype it keeps object keys
 sorted. Stored tables, in memory and on disk, have the shape (id, label,
-pv), edges adding start_id/end_id. ``Graph.vertices``/``Graph.edges``
-expose each table with ``properties``, the document's JSON text, rendered
-in one place (``rendered``, as ``to_json(pv)``); it is never stored.
+pv), edges adding start_id/end_id, and the Cypher compiler binds each
+vertex or edge as that row. The document's JSON text is never stored:
+it is rendered from pv where an entity leaves the engine — a Cypher
+RETURN column, path or list (plans/compiler.py ``render``) — and
+``Graph.vertices``/``Graph.edges`` expose each table with
+``properties`` (``rendered``, as ``to_json(pv)``) for SQL views.
 catalog.json names the storage ``layout``; a directory in another layout
 fails the open.
 """
@@ -42,11 +45,6 @@ from postgraph_spark.functions import gtype as G
 ENTRY_ID_BITS = 48
 ENTRY_ID_MASK = (1 << ENTRY_ID_BITS) - 1
 LABEL_ID_MAX = 0xFFFF
-
-#: the fields of an entity value (a bound vertex or edge): a table row
-#: with its rendered properties, without its pv
-VERTEX_FIELDS = ("id", "label", "properties")
-EDGE_FIELDS = ("id", "start_id", "end_id", "label", "properties")
 
 _PV_FIELD = T.StructField("pv", T.VariantType(), True)
 

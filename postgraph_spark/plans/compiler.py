@@ -8,14 +8,19 @@ shape as lazy lineage, optimized whole by Catalyst.
 
 Variable binding model: the working DataFrame has ONE column per bound
 Cypher variable —
-  vertex  -> struct(id, label, properties)
-  edge    -> struct(id, start_id, end_id, label, properties)
-  vle     -> struct(start_id, end_id, edge_ids, hops)
+  vertex  -> struct(id, label, pv)
+  edge    -> struct(id, start_id, end_id, label, pv)
+  vle     -> struct(start_id, end_id, edge_ids, node_ids, hops)
+  path    -> struct(nodes: array<vertex>, edges: array<edge>)
   value   -> gval struct (functions/gtype.py)
+An entity value is its table row, pv the stored properties VARIANT, from
+the scan to RETURN; the properties JSON text is rendered only where the
+entity leaves the engine (see render / entity_json).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import re
 from contextlib import contextmanager
@@ -88,8 +93,6 @@ class CompileError(ValueError):
 def _is_gval_type(dt) -> bool:
     """True when a column's Spark type is the gval struct (the flat
     t/b/i/d/s/j value representation gtype._mk builds)."""
-    from pyspark.sql import types as T
-
     return isinstance(dt, T.StructType) and [f.name for f in dt.fields] == [
         "t", "b", "i", "d", "s", "j"
     ]
@@ -119,70 +122,80 @@ def _const_int(e) -> int | None:
     return None
 
 
-def _analyze_full_vars(q) -> tuple[set[str], bool]:
-    """Statement-wide use analysis for entity-struct pruning (round-11,
-    guide-style project-before-the-exchange): a pattern variable whose
-    every reference is a property access (``n.prop`` — served by the
-    binary ``pv`` variant) never needs the raw ``properties`` JSON text
-    in its bound struct, so the scans can bind (id, label, pv) and the
-    pattern joins stop shuffling the JSON document per row.
-
-    Returns (names needing the FULL struct, narrowing_allowed).
-    Conservative by construction: ANY bare `Var` reference — projection
-    of the entity itself, function argument (id/label/properties/keys/
-    nodes/...), comparison operand, UNWIND source — marks the name FULL;
-    named paths mark every element var FULL (the traversal value renders
-    properties); `RETURN *`/`WITH *` and any write clause disable
-    narrowing for the whole statement. Declarations (NodePat.var /
-    RelPat.var are plain strings) do not mark."""
-    import dataclasses as _dc
-
-    full: set[str] = set()
-    ok = True
-
-    def walk(node):
-        nonlocal ok
-        if node is None or isinstance(node, (str, int, float, bool, bytes, A.Lit)):
-            return
-        if isinstance(node, A.Var):
-            full.add(node.name)
-            return
-        if isinstance(node, A.Prop) and isinstance(node.base, A.Var):
-            return  # pv-served access; path elements are strings
-        if isinstance(node, (A.CreateClause, A.SetClause, A.DeleteClause, A.MergeClause)):
-            ok = False
-            return
-        if isinstance(node, (A.WithClause, A.ReturnClause)) and node.star:
-            ok = False
-        if isinstance(node, A.Path) and node.var is not None:
-            for el in node.elements:
-                v = getattr(el, "var", None)
-                if v:
-                    full.add(v)
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                walk(x)
-            return
-        if isinstance(node, dict):
-            for x in node.values():
-                walk(x)
-            return
-        if _dc.is_dataclass(node):
-            for f in _dc.fields(node):
-                walk(getattr(node, f.name))
-
-    walk(q)
-    return full, ok
-
-
-class _Everything:
-    """Membership-always-true sentinel: narrowing disabled."""
-
-    def __contains__(self, _x) -> bool:
+def _has_star(node) -> bool:
+    """Does any WITH/RETURN of the statement, subqueries included,
+    project `*`? Such a statement keeps every VALUE binding in the full
+    gval shape (see Compiler._narrow_value)."""
+    if isinstance(node, (A.WithClause, A.ReturnClause)) and node.star:
         return True
+    if isinstance(node, A.Lit):  # reading a parameter's value would pin it
+        return False
+    if isinstance(node, (list, tuple)):
+        return any(_has_star(x) for x in node)
+    if isinstance(node, dict):
+        return any(_has_star(x) for x in node.values())
+    return dataclasses.is_dataclass(node) and any(
+        _has_star(getattr(node, f.name)) for f in dataclasses.fields(node)
+    )
 
 
-_EVERYTHING = _Everything()
+#: an entity value's fields besides its ``pv`` document
+_ENTITY_FIELDS = {VKIND_VERTEX: ("id", "label"), VKIND_EDGE: ("id", "start_id", "end_id", "label")}
+
+#: the type of a named path's empty edge array
+_EMPTY_EDGES = "array<struct<id:bigint,start_id:bigint,end_id:bigint,label:string,pv:variant>>"
+
+
+def _json_view(x: Column, kind: str) -> Column:
+    """Entity value `x` as the struct whose to_json is its JSON text:
+    the document nested as the ``properties`` object, keys sorted."""
+    return F.struct(*[x[f].alias(f) for f in _ENTITY_FIELDS[kind]], x["pv"].alias("properties"))
+
+
+def entity_json(x: Column, kind: str) -> Column:
+    """A vertex or edge value as JSON text, the way it leaves the engine
+    inside a list (collect(n), nodes(p))."""
+    return F.to_json(_json_view(x, kind))
+
+
+def _json_text(x: Column, kind: str) -> Column:
+    """A collect() element's JSON text, 'null' for a null value."""
+    if kind in _ENTITY_FIELDS:
+        return F.when(x.isNotNull(), entity_json(x, kind)).otherwise(F.lit("null"))
+    return F.when(x["t"] != G.T_NULL, G.to_json_text(x)).otherwise(F.lit("null"))
+
+
+def entity_array_json(arr: Column, kind: str) -> Column:
+    """An array of vertex or edge values as one JSON list text."""
+    return F.to_json(F.transform(arr, lambda x: _json_view(x, kind)))
+
+
+def render(x: Column, kind: str | None) -> Column:
+    """A RETURN column as it leaves the engine. A vertex or edge value is
+    (id, label, properties) [edges with start_id, end_id], properties
+    the document's JSON text as Graph.vertices renders it; a named path
+    renders its elements so. Every other value is itself."""
+    if kind == VKIND_PATH:
+        return F.struct(
+            F.transform(x["nodes"], lambda v: render(v, VKIND_VERTEX)).alias("nodes"),
+            F.transform(x["edges"], lambda e: render(e, VKIND_EDGE)).alias("edges"),
+        )
+    if kind not in _ENTITY_FIELDS:
+        return x
+    fields = [x[f].alias(f) for f in _ENTITY_FIELDS[kind]]
+    return F.when(x.isNotNull(), F.struct(*fields, F.to_json(x["pv"]).alias("properties")))
+
+
+def _entity_key(x: Column, kind: str | None) -> Column:
+    """What DISTINCT and grouping compare a binding by: a vertex or edge
+    by its id (vertex_btree_cmp compares ids; the pv VARIANT is not
+    comparable), a path by its element ids, any other value itself."""
+    if kind == VKIND_PATH:
+        return F.struct(
+            F.transform(x["nodes"], lambda v: v["id"]).alias("nodes"),
+            F.transform(x["edges"], lambda e: e["id"]).alias("edges"),
+        )
+    return x["id"] if kind in _ENTITY_FIELDS else x
 
 
 class Scope:
@@ -268,10 +281,10 @@ class Compiler:
         # let-binding buffer: None = disabled (write-path compiles and
         # standalone expression compiles), [] = collecting. See _let.
         self._lets: list[tuple[str, Column]] | None = None
-        # entity-struct pruning (see _analyze_full_vars): None = analysis
-        # not run (sub-compilers default to full structs — safe); a set =
-        # vars listed need the full struct, everything else binds narrow
-        self._full_vars: set[str] | None = None
+        # VALUE-struct narrowing (see _narrow_value): None until
+        # compile_query decides it for the statement; sub-compilers of
+        # sub-patterns and the write path never decide it (no narrowing)
+        self._narrow_values: bool | None = None
 
     # ------------------------------------------------------------ entry
 
@@ -290,13 +303,8 @@ class Compiler:
         return df, {p.slot: p.literal for p in q.params if p.pinned}
 
     def compile_query(self, q) -> DataFrame:
-        if self._full_vars is None:
-            full, ok = _analyze_full_vars(q)
-            self._full_vars = full if ok else None
-            if self._full_vars is None:
-                # narrowing disabled for this statement: bind everything
-                # full by making the "needs full" test always true
-                self._full_vars = _EVERYTHING
+        if self._narrow_values is None:
+            self._narrow_values = not _has_star(q)
         if isinstance(q, A.SetOp):
             left = self.compile_query(q.left)
             right = self.compile_query(q.right)
@@ -429,31 +437,15 @@ class Compiler:
 
     # ------------------------------------------------------------- MATCH
     #
-    # Entity structs carry a 4th field ``pv``: the table's stored
-    # properties VARIANT (parsed ONCE, when the row was committed). Every
-    # n.prop access downstream is a binary variant_get — never a re-parse
-    # of the JSON text. Projections (WITH/RETURN) strip pv so DISTINCT /
-    # set ops / grouping on entities stay comparable; accesses after a
-    # projection barrier fall back to parsing the JSON.
-
-    @staticmethod
-    def _var_pv(df: DataFrame | None, var: str) -> Column | None:
-        """F.col(var)['pv'] when the bound entity struct still carries it."""
-        if df is None:
-            return None
-        try:
-            dt = df.schema[var].dataType
-        except Exception:
-            return None
-        if isinstance(dt, T.StructType) and "pv" in dt.fieldNames():
-            return F.col(var)["pv"]
-        return None
-
-    def _needs_full(self, var: str) -> bool:
-        """Does `var`'s bound struct need the raw properties JSON text?
-        True when the statement analysis did not run (sub-compilers) or
-        marked the name as escaping (see _analyze_full_vars)."""
-        return self._full_vars is None or var in self._full_vars
+    # An entity value is a table row: (id, label, pv), edges with
+    # start_id/end_id, pv the stored properties VARIANT. The scan binds
+    # it and every clause carries it unchanged — WITH, grouping keys,
+    # SET/MERGE/DELETE inputs, sub-patterns — so every n.prop access is
+    # a binary variant_get, never a parse of JSON text. The VARIANT is
+    # not comparable: DISTINCT and grouping key an entity on its id
+    # (_entity_key). Its JSON text is rendered only where the entity
+    # leaves the engine: a RETURN column (render), a path's or
+    # collect()'s list (entity_json), properties(n), the @>/? operand.
 
     def _prop_atoms(self, scope: Scope | None, var: str, path: list[str]):
         """Property-type-catalog atom set for ``var.path`` (None =
@@ -463,30 +455,20 @@ class Compiler:
             return None
         return self.graph.prop_atoms(scope.labels.get(var), path[0])
 
-    def _may_narrow_values(self) -> bool:
-        """VALUE-struct narrowing fires only for read-only, star-free
-        statements whose statement-wide analysis ran — the same gate the
-        entity-struct pruning trusts. Sub-compilers and the write path
-        keep the full 6-field shape."""
-        return isinstance(self._full_vars, set)
-
     def _narrow_value(self, col: Column, kind: str) -> Column:
         """Materialize an INTERNAL projection column (WITH alias, group
         key) with only its statically-feasible gval fields. RETURN
         outputs and set-op branches are never narrowed (external shape
         contract); gv_col readers rebuild absent fields as typed nulls."""
-        if kind != VKIND_VALUE or not self._may_narrow_values():
+        if kind != VKIND_VALUE or not self._narrow_values:
             return col
         return G.narrow_gval(col)
 
-    def _vertex_scan(self, label: str | None, var: str, force_full: bool = False) -> DataFrame:
+    def _vertex_scan(self, label: str | None, var: str) -> DataFrame:
         v = self.graph.vertices_with_label(label)
-        fields = [F.col("id"), F.col("label")]
-        if force_full or self._needs_full(var):
-            fields.append(F.col("properties"))
-        return v.select(F.struct(*fields, F.col("pv")).alias(var))
+        return v.select(F.struct("id", "label", "pv").alias(var))
 
-    def _oriented_edges(self, rel: A.RelPat, var: str, force_full: bool = False) -> DataFrame:
+    def _oriented_edges(self, rel: A.RelPat, var: str) -> DataFrame:
         """Edge scan -> (var: edge_struct, __src, __dst) honoring direction
         (make_directed_edge_join_conditions, cypher_clause.c:3029-3060:
         undirected = OR of both orientations, expressed here as a union so
@@ -500,10 +482,7 @@ class Compiler:
                     e = e.filter(
                         self._prop_eq(G.prop_access_variant(pv, [k], atoms=atoms), vexpr)
                     )
-        fields = [F.col("id"), F.col("start_id"), F.col("end_id"), F.col("label")]
-        if force_full or self._needs_full(var):
-            fields.append(F.col("properties"))
-        struct = F.struct(*fields, pv).alias(var)
+        struct = F.struct("id", "start_id", "end_id", "label", "pv").alias(var)
         out_e = e.select(struct, F.col("start_id").alias("__src"), F.col("end_id").alias("__dst"))
         in_e = e.select(struct, F.col("end_id").alias("__src"), F.col("start_id").alias("__dst"))
         if rel.direction == "out":
@@ -556,16 +535,11 @@ class Compiler:
     def _node_filters(self, df: DataFrame, node: A.NodePat, var: str) -> DataFrame:
         if node.props:
             with self._no_lets():
-                pv = self._var_pv(df, var)
                 for k, vexpr in node.props.items.items():
                     atoms = (
                         self.graph.prop_atoms(node.label, k) if self.graph else None
                     )
-                    prop = (
-                        G.prop_access_variant(pv, [k], atoms=atoms)
-                        if pv is not None
-                        else G.prop_access(F.col(var)["properties"], [k], atoms=atoms)
-                    )
+                    prop = G.prop_access_variant(F.col(var)["pv"], [k], atoms=atoms)
                     df = df.filter(self._prop_eq(prop, vexpr))
         return df
 
@@ -578,9 +552,8 @@ class Compiler:
 
         if m.optional:
             pat = Compiler(self.spark, self.graph)
-            # the statement-wide use analysis covered this sub-pattern's
-            # AST too — propagate so OPTIONAL MATCH scans narrow as well
-            pat._full_vars = self._full_vars
+            # part of this statement: its WITH/RETURN narrowing holds here
+            pat._narrow_values = self._narrow_values
             with self._no_lets():  # sub-compile: outer binder must not leak in
                 pdf, pscope = pat.compile_match(
                     A.MatchClause(m.paths, m.where, False, []), None, Scope()
@@ -750,7 +723,7 @@ class Compiler:
                     side = "start_id" if e.name == "startnode" else "end_id"
                     vt = self.graph.vertices.select(
                         F.col("id").alias(f"__vid_{marker}"),
-                        F.struct("id", "label", "properties").alias(marker),
+                        F.struct("id", "label", "pv").alias(marker),
                     )
                     df = df.join(
                         vt,
@@ -892,12 +865,7 @@ class Compiler:
 
     def _compile_path(self, path: A.Path, df, scope: Scope, new_edge_vars, new_vle_vars):
         elements = path.elements
-        node0 = elements[0]
-        # a named path renders every element's properties into the
-        # traversal value — ANONYMOUS elements get generated var names
-        # the use analysis cannot see, so force full structs here
-        ff = path.var is not None
-        df, prev_var = self._bind_node(node0, df, scope, force_full=ff)
+        df, prev_var = self._bind_node(elements[0], df, scope)
         order: list[tuple[str, str]] = [("v", prev_var)]
 
         i = 1
@@ -910,16 +878,14 @@ class Compiler:
             node: A.NodePat = elements[i + 1]
             i += 2
             if rel.varlen is not None:
-                df, prev_var = self._bind_vle(
-                    rel, node, df, prev_var, scope, new_vle_vars, force_full=ff
-                )
+                df, prev_var = self._bind_vle(rel, node, df, prev_var, scope, new_vle_vars)
                 order.append(("vle", new_vle_vars[-1]))
                 order.append(("v", prev_var))
                 continue
             evar = rel.var or f"_e{next(self._anon)}"
             if rel.var and rel.var in scope.kinds:
                 raise CompileError(f"edge variable {rel.var!r} reused in pattern")
-            oriented = self._oriented_edges(rel, evar, force_full=ff)
+            oriented = self._oriented_edges(rel, evar)
             df = df.join(oriented, F.col(prev_var)["id"] == F.col("__src"))
             scope.kinds[evar] = VKIND_EDGE
             scope.labels[evar] = rel.label
@@ -934,7 +900,7 @@ class Compiler:
                 nvar = node.var
             else:
                 nvar = node.var or f"_n{next(self._anon)}"
-                nscan = self._vertex_scan(node.label, nvar, force_full=ff)
+                nscan = self._vertex_scan(node.label, nvar)
                 df = df.join(nscan, F.col("__dst") == F.col(nvar)["id"])
                 df = self._node_filters(df, node, nvar)
                 scope.kinds[nvar] = VKIND_VERTEX
@@ -951,30 +917,17 @@ class Compiler:
     #
     # p = (...) binds a traversal value (traversal.h:46-58; built by
     # build_traversal, src/backend/utils/adt/traversal.c:64): ordered
-    # vertex and edge arrays. Fixed-length patterns assemble the arrays
-    # from the already-bound entity columns (free); VLE segments resolve
-    # their ordered id chains to entity structs with one
-    # posexplode -> equi-join -> re-aggregate per segment — keyed on the
-    # deterministic (start_id, edge_ids) path identity, so the resolve
-    # is a pure shuffle plan (no checkpoint, no driver state).
-
-    @staticmethod
-    def _v_struct(var: str) -> Column:
-        c = F.col(var)
-        return F.struct(c["id"].alias("id"), c["label"].alias("label"), c["properties"].alias("properties"))
-
-    @staticmethod
-    def _e_struct(var: str) -> Column:
-        c = F.col(var)
-        return F.struct(
-            c["id"].alias("id"), c["start_id"].alias("start_id"), c["end_id"].alias("end_id"),
-            c["label"].alias("label"), c["properties"].alias("properties"),
-        )
+    # vertex and edge arrays of entity values. Fixed-length patterns
+    # assemble the arrays from the already-bound entity columns (free);
+    # VLE segments resolve their ordered id chains to entity values with
+    # one posexplode -> equi-join -> re-aggregate per segment — keyed on
+    # the deterministic (start_id, edge_ids) path identity, so the
+    # resolve is a pure shuffle plan (no checkpoint, no driver state).
 
     def _attach_vle_arrays(self, df, vvar: str):
         """Resolve a VLE binding's ordered edge/node id arrays to entity
-        structs: adds columns __pe_<vvar> (array<edge>) and __pn_<vvar>
-        (array<vertex>)."""
+        values: adds columns __pe_<vvar> (array<edge>) and __pn_<vvar>
+        (array<vertex>), each in traversal order."""
         g = self.graph
         paths = df.select(
             F.col(vvar)["start_id"].alias("__ps"),
@@ -982,9 +935,17 @@ class Compiler:
             F.col(vvar)["node_ids"].alias("__nids"),
         ).distinct()
 
+        def by_pos(value: str) -> Column:
+            # the collected values in __pos order: a VARIANT is not
+            # orderable, so the sort compares positions only
+            pairs = F.collect_list(F.struct("__pos", value))
+            return F.transform(
+                F.array_sort(pairs, lambda a, b: a["__pos"] - b["__pos"]), lambda x: x[value]
+            )
+
         es = g.edges.select(
             F.col("id").alias("__eid"),
-            F.struct("id", "start_id", "end_id", "label", "properties").alias("__es"),
+            F.struct("id", "start_id", "end_id", "label", "pv").alias("__es"),
         )
         ex = paths.select(
             "__ps", "__pids", F.posexplode("__pids").alias("__pos", "__eid")
@@ -992,15 +953,11 @@ class Compiler:
         earr = (
             ex.join(es, "__eid")
             .groupBy("__ps", "__pids")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__es"))), lambda x: x["__es"]
-                ).alias(f"__pe_{vvar}")
-            )
+            .agg(by_pos("__es").alias(f"__pe_{vvar}"))
         )
 
         vs = g.vertices.select(
-            F.col("id").alias("__vid"), F.struct("id", "label", "properties").alias("__vs")
+            F.col("id").alias("__vid"), F.struct("id", "label", "pv").alias("__vs")
         )
         nx = paths.select(
             "__ps", "__pids", F.posexplode("__nids").alias("__pos", "__vid")
@@ -1008,11 +965,7 @@ class Compiler:
         narr = (
             nx.join(vs, "__vid")
             .groupBy("__ps", "__pids")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__vs"))), lambda x: x["__vs"]
-                ).alias(f"__pn_{vvar}")
-            )
+            .agg(by_pos("__vs").alias(f"__pn_{vvar}"))
         )
         resolved = earr.join(narr, ["__ps", "__pids"], "full_outer")
         df = df.join(
@@ -1022,9 +975,7 @@ class Compiler:
             "left_outer",
         ).drop("__ps", "__pids")
         # zero-length paths have no edges -> no resolve row for __pe
-        empty_e = F.array().cast(
-            "array<struct<id:bigint,start_id:bigint,end_id:bigint,label:string,properties:string>>"
-        )
+        empty_e = F.array().cast(_EMPTY_EDGES)
         df = df.withColumn(f"__pe_{vvar}", F.coalesce(F.col(f"__pe_{vvar}"), empty_e))
         return df
 
@@ -1035,9 +986,9 @@ class Compiler:
         edge_segs: list[Column] = []
         for kind, var in order:
             if kind == "v":
-                node_segs.append(F.array(self._v_struct(var)))
+                node_segs.append(F.array(F.col(var)))
             elif kind == "e":
-                edge_segs.append(F.array(self._e_struct(var)))
+                edge_segs.append(F.array(F.col(var)))
             else:  # vle
                 df = self._attach_vle_arrays(df, var)
                 edge_segs.append(F.col(f"__pe_{var}"))
@@ -1048,9 +999,7 @@ class Compiler:
         edges_arr = (
             F.concat(*edge_segs)
             if len(edge_segs) > 1
-            else (edge_segs[0] if edge_segs else F.array().cast(
-                "array<struct<id:bigint,start_id:bigint,end_id:bigint,label:string,properties:string>>"
-            ))
+            else (edge_segs[0] if edge_segs else F.array().cast(_EMPTY_EDGES))
         )
         df = df.withColumn(pvar, F.struct(nodes_arr.alias("nodes"), edges_arr.alias("edges")))
         drops = [c for c in df.columns if c.startswith("__pe_") or c.startswith("__pn_")]
@@ -1058,14 +1007,14 @@ class Compiler:
         scope.kinds[pvar] = VKIND_PATH
         return df
 
-    def _bind_node(self, node: A.NodePat, df, scope: Scope, force_full: bool = False):
+    def _bind_node(self, node: A.NodePat, df, scope: Scope):
         if node.var and node.var in scope.kinds:
             if node.label:
                 df = df.filter(F.col(node.var)["label"] == node.label)
             df = self._node_filters(df, node, node.var)
             return df, node.var
         var = node.var or f"_n{next(self._anon)}"
-        scan = self._vertex_scan(node.label, var, force_full=force_full)
+        scan = self._vertex_scan(node.label, var)
         scan = self._node_filters(scan, node, var)
         if df is None:
             df = scan
@@ -1094,10 +1043,7 @@ class Compiler:
         scope.labels[var] = node.label
         return df, var
 
-    def _bind_vle(
-        self, rel: A.RelPat, node: A.NodePat, df, prev_var, scope: Scope,
-        new_vle_vars, force_full: bool = False,
-    ):
+    def _bind_vle(self, rel: A.RelPat, node: A.NodePat, df, prev_var, scope: Scope, new_vle_vars):
         from postgraph_spark.operators.vle import vle as vle_op
 
         lo, hi = rel.varlen
@@ -1147,7 +1093,7 @@ class Compiler:
             nvar = node.var
         else:
             nvar = node.var or f"_n{next(self._anon)}"
-            nscan = self._vertex_scan(node.label, nvar, force_full=force_full)
+            nscan = self._vertex_scan(node.label, nvar)
             df = df.join(nscan, F.col(vvar)["end_id"] == F.col(nvar)["id"])
             df = self._node_filters(df, node, nvar)
             scope.kinds[nvar] = VKIND_VERTEX
@@ -1338,18 +1284,22 @@ class Compiler:
             # group-key columns are computed under reserved temp names so a
             # user alias that matches an input column (RETURN n, count(*))
             # never produces an AMBIGUOUS_REFERENCE
-            key_cols = []
+            key_cols, carried = [], []
             for i, (name, e) in enumerate(group_items):
                 col, kind = self._compile_item(e, df, scope)
                 # group keys are internal __gk columns: narrowing drops
                 # always-null fields from the groupBy exchange; equality
-                # is unchanged (dropped fields are null on every row)
-                key_cols.append(self._narrow_value(col, kind).alias(f"__gk{i}"))
-                new_scope.kinds[name] = kind
+                # is unchanged (dropped fields are null on every row). An
+                # entity keys on its id and rides the aggregation as __ge
                 if kind == VKIND_VALUE:
+                    key_cols.append(self._narrow_value(col, kind).alias(f"__gk{i}"))
                     new_scope.vtypes[name] = G.gv_types(col)
+                else:
+                    key_cols.append(_entity_key(col, kind).alias(f"__gk{i}"))
+                    carried.append(F.first(col).alias(f"__ge{i}"))
+                new_scope.kinds[name] = kind
             agg_builders = [self._compile_agg(node, df, scope) for node in agg_nodes]
-            agg_cols = [b.alias(f"__agg{i}") for i, b in enumerate(agg_builders)]
+            agg_cols = [b.alias(f"__agg{i}") for i, b in enumerate(agg_builders)] + carried
             df, _letn = self._apply_lets(df)
             if key_cols:
                 pre = df.select(*key_cols, "*")
@@ -1377,7 +1327,9 @@ class Compiler:
                 else:
                     gki = key_pos[name]
                     kc: Column = F.col(f"__gk{gki}")
-                    if not is_with and new_scope.kinds[name] == VKIND_VALUE:
+                    if new_scope.kinds[name] != VKIND_VALUE:
+                        kc = F.col(f"__ge{gki}")
+                    elif not is_with:
                         # RETURN re-widens a narrowed key to the full
                         # external shape (null-safe rebuild in gv_col)
                         kc = G.gv_col(
@@ -1417,6 +1369,9 @@ class Compiler:
             out = out.offset(self._int_lit(clause.skip))
         if clause.limit is not None:
             out = out.limit(self._int_lit(clause.limit))
+        if not is_with and any(new_scope.kinds.get(c) in (VKIND_VERTEX, VKIND_EDGE, VKIND_PATH)
+                               for c in out.columns):
+            out = out.select(*[render(F.col(c), new_scope.kinds.get(c)).alias(c) for c in out.columns])
         return out, new_scope
 
     # ------------------------------------- explicit GROUP BY / HAVING
@@ -1462,19 +1417,34 @@ class Compiler:
             raise CompileError("GROUP BY requires at least one key")
 
         is_with = isinstance(clause, A.WithClause)
-        key_cols = []
+        key_cols, carried = [], []
         key_types: list[frozenset | None] = []
+        # what a key reads as after the aggregation: a VALUE key its
+        # __gk column; an entity keys on its id and rides along as __ge
+        # (null in a ROLLUP/CUBE row that rolled it up)
+        key_refs: list[str] = []
+        key_kinds: list[str] = []
         for i, ke in enumerate(key_exprs):
             col, _k = self._compile_item(ke, df, scope)
-            key_cols.append(self._narrow_value(col, _k).alias(f"__gk{i}"))
+            key_kinds.append(_k)
             key_types.append(G.gv_types(col) if _k == VKIND_VALUE else None)
+            if _k == VKIND_VALUE:
+                key_cols.append(self._narrow_value(col, _k).alias(f"__gk{i}"))
+                key_refs.append(f"__gk{i}")
+                continue
+            key_cols.append(_entity_key(col, _k).alias(f"__gk{i}"))
+            key_refs.append(f"__ge{i}")
+            ride = F.first(col)
+            if kind != "plain":
+                ride = F.when(F.grouping(f"__gk{i}") == 0, ride)
+            carried.append(ride.alias(f"__ge{i}"))
 
         def replace_keys(e):
-            """Swap subtrees equal to a grouping key for its __gk ref —
+            """Swap subtrees equal to a grouping key for its key ref —
             lets post-aggregation expressions mention the keys."""
             for i, ke in enumerate(key_exprs):
                 if e == ke:
-                    return A.Var(f"__gk{i}")
+                    return A.Var(key_refs[i])
             if isinstance(e, A.BinOp):
                 return A.BinOp(e.op, replace_keys(e.left), replace_keys(e.right))
             if isinstance(e, A.UnaryOp):
@@ -1518,7 +1488,7 @@ class Compiler:
         if having is not None:
             having_rewritten = replace_keys(self._extract_aggs(having, agg_nodes))
         agg_builders = [self._compile_agg(node, df, scope) for node in agg_nodes]
-        agg_cols = [b.alias(f"__agg{i}") for i, b in enumerate(agg_builders)]
+        agg_cols = [b.alias(f"__agg{i}") for i, b in enumerate(agg_builders)] + carried
         df, _letn = self._apply_lets(df)
         pre = df.select(*key_cols, "*")
         gcols = [F.col(f"__gk{i}") for i in range(len(key_exprs))]
@@ -1539,16 +1509,16 @@ class Compiler:
             out_scope.kinds[f"__agg{i}"] = VKIND_VALUE
             out_scope.vtypes[f"__agg{i}"] = G.gv_types(b)
         for i in range(len(key_exprs)):
-            out_scope.kinds[f"__gk{i}"] = VKIND_VALUE
+            out_scope.kinds[key_refs[i]] = key_kinds[i]
             if key_types[i] is not None:
-                out_scope.vtypes[f"__gk{i}"] = key_types[i]
+                out_scope.vtypes[key_refs[i]] = key_types[i]
         if having_rewritten is not None:
             # HAVING may also reference item aliases bound to keys
             hdf = agg_df
             for name, ref, is_agg in outer:
                 if not is_agg:
-                    hdf = hdf.withColumn(name, F.col(f"__gk{ref}"))
-                    out_scope.kinds[name] = VKIND_VALUE
+                    hdf = hdf.withColumn(name, F.col(key_refs[ref]))
+                    out_scope.kinds[name] = key_kinds[ref]
                     if key_types[ref] is not None:
                         out_scope.vtypes[name] = key_types[ref]
             hcond = G.truth(self.compile_expr(having_rewritten, hdf, out_scope))
@@ -1566,32 +1536,33 @@ class Compiler:
                 if _k == VKIND_VALUE:
                     new_scope.vtypes[name] = G.gv_types(col)
             else:
-                kc: Column = F.col(f"__gk{ref}")
+                _k = key_kinds[ref]
+                kc: Column = F.col(key_refs[ref])
                 if is_with:
                     if key_types[ref] is not None:
                         new_scope.vtypes[name] = key_types[ref]
                 elif key_types[ref] is not None:
                     # RETURN re-widens narrowed VALUE keys (null-safe:
                     # rollup/grouping-set super-aggregates stay struct-null)
-                    kc = G.gv_col(agg_df, f"__gk{ref}", types=key_types[ref])
+                    kc = G.gv_col(agg_df, key_refs[ref], types=key_types[ref])
                 final_cols.append(kc.alias(name))
-            new_scope.kinds[name] = VKIND_VALUE
+            new_scope.kinds[name] = _k
         agg_df, _letn = self._apply_lets(agg_df)
         return agg_df.select(*final_cols), new_scope
 
     def _distinct_rows(self, df: DataFrame, scope: Scope) -> DataFrame:
         """DISTINCT under gtype ORDERABILITY equality: gval columns
         deduplicate by their canonical key (1 and 1.0 collapse; arrays
-        by element keys — gtype_util.c:233-360), keeping the first
-        representative. Entity/path columns keep struct equality
-        (btree cmp compares ids). Same single-shuffle shape as a plain
+        by element keys — gtype_util.c:233-360), entity/path columns by
+        their ids (_entity_key; btree cmp compares ids), keeping the
+        first representative. Same single-shuffle shape as a plain
         distinct()."""
-        val_cols = [c for c in df.columns if scope.kinds.get(c) == VKIND_VALUE]
-        if not val_cols:
+        if not any(scope.kinds.get(c) not in (None, VKIND_VLE) for c in df.columns):
             return df.distinct()
         keys = []
         for c in df.columns:
-            if c in val_cols:
+            kind = scope.kinds.get(c)
+            if kind == VKIND_VALUE:
                 keys.append(
                     G.canon_key_text(
                         G.gv_col(df, c, types=scope.vtypes.get(c)),
@@ -1599,7 +1570,7 @@ class Compiler:
                     ).alias(f"__dk_{c}")
                 )
             else:
-                keys.append(F.col(c).alias(f"__dk_{c}"))
+                keys.append(_entity_key(F.col(c), kind).alias(f"__dk_{c}"))
         pre = df.select("*", *keys)
         grouped = pre.groupBy(*[F.col(f"__dk_{c}") for c in df.columns])
         return grouped.agg(*[F.first(c).alias(c) for c in df.columns]).select(*df.columns)
@@ -1644,21 +1615,10 @@ class Compiler:
         return col.desc() if si.descending else col.asc()
 
     def _compile_item(self, e, df, scope):
-        """Compile a projection item -> (Column, kind). Entity structs are
-        projected WITHOUT their pv variant field so the output supports
-        DISTINCT / set ops / grouping (variant is not comparable)."""
-        if isinstance(e, A.Var) and scope.kinds.get(e.name) == VKIND_PATH:
-            return F.col(e.name), VKIND_PATH
-        if isinstance(e, A.Var) and scope.kinds.get(e.name) in (VKIND_VERTEX, VKIND_EDGE, VKIND_VLE):
-            kind = scope.kinds[e.name]
-            col = F.col(e.name)
-            if self._var_pv(df, e.name) is not None:
-                try:
-                    fields = [f for f in df.schema[e.name].dataType.fieldNames() if f != "pv"]
-                    col = F.struct(*[col[f].alias(f) for f in fields])
-                except Exception:
-                    pass
-            return col, kind
+        """Compile a projection item -> (Column, kind). A bound entity,
+        VLE or path projects as itself."""
+        if isinstance(e, A.Var) and scope.kinds.get(e.name, VKIND_VALUE) != VKIND_VALUE:
+            return F.col(e.name), scope.kinds[e.name]
         return self.compile_expr(e, df, scope), VKIND_VALUE
 
     # ------------------------------------------------------- aggregates
@@ -1694,9 +1654,12 @@ class Compiler:
                 )
                 return G.gv_int(F.count_distinct(key))
             return G.gv_int(F.count(inner))
-        arg = self._maybe_let(self.compile_expr(e.args[0], df, scope), e.args[0], df)
+        arg, kind = self._compile_item(e.args[0], df, scope)
+        arg = self._maybe_let(arg, e.args[0], df)
         if fcond is not None:
-            arg = F.when(fcond, arg).otherwise(G.gv_null())
+            arg = F.when(fcond, arg)
+            if kind == VKIND_VALUE:
+                arg = arg.otherwise(G.gv_null())
         valid = arg["t"] != G.T_NULL
         d = arg["d"]
         if name == "sum":
@@ -1712,7 +1675,7 @@ class Compiler:
             picked = F.min_by(val, key) if name == "min" else F.max_by(val, key)
             return F.coalesce(picked, G.gv_null())
         if name == "collect":
-            texts = F.collect_list(F.when(valid, G.to_json_text(arg)).otherwise(F.lit("null")))
+            texts = F.collect_list(_json_text(arg, kind))
             if e.distinct:
                 # DISTINCT over gtype values = distinct canonical texts
                 texts = F.array_distinct(texts)
@@ -1811,12 +1774,7 @@ class Compiler:
                 kind = scope.kinds.get(base.name)
                 if kind in (VKIND_VERTEX, VKIND_EDGE):
                     atoms = self._prop_atoms(scope, base.name, e.path)
-                    pv = self._var_pv(df, base.name)
-                    if pv is not None:
-                        return G.prop_access_variant(pv, e.path, atoms=atoms)
-                    return G.prop_access(
-                        F.col(base.name)["properties"], e.path, atoms=atoms
-                    )
+                    return G.prop_access_variant(F.col(base.name)["pv"], e.path, atoms=atoms)
                 if kind == VKIND_VALUE:
                     gv = G.gv_col(df, base.name, types=scope.vtypes.get(base.name))
                     return G.from_variant(
@@ -2075,7 +2033,7 @@ class Compiler:
         if isinstance(node, A.Var) and scope.kinds.get(node.name) in (
             VKIND_VERTEX, VKIND_EDGE
         ):
-            return G.gv_object_json(F.col(node.name)["properties"])
+            return G.gv_object_json(F.to_json(F.col(node.name)["pv"]))
         return col
 
     @staticmethod
@@ -2354,7 +2312,7 @@ class Compiler:
                 return G.gv_int(F.count(F.lit(1)).over(w))
             arg = self.compile_expr(e.args[0], df, scope)
             return G.gv_int(F.count(F.when(arg["t"] != G.T_NULL, F.lit(1))).over(w))
-        arg = self.compile_expr(e.args[0], df, scope)
+        arg, kind = self._compile_item(e.args[0], df, scope)
         d = arg["d"]
         if name == "sum":
             all_int = F.min(F.when(arg["t"] == G.T_NUMBER, arg["i"].isNotNull())).over(w)
@@ -2380,10 +2338,7 @@ class Compiler:
         if name == "collect":
             # same surface as the group-agg collect (json-text list),
             # gathered in frame order
-            valid = arg["t"] != G.T_NULL
-            texts = F.collect_list(
-                F.when(valid, G.to_json_text(arg)).otherwise(F.lit("null"))
-            ).over(w)
+            texts = F.collect_list(_json_text(arg, kind)).over(w)
             if e.distinct:
                 texts = F.array_distinct(texts)
             if len(e.args) > 1:
@@ -2467,7 +2422,8 @@ class Compiler:
         Mirrors cypher_gram.y:17520-17565 over PG's windowagg."""
         kind, rn, pg = excl["kind"], excl["rn"], excl["pg"]
         name = e.name
-        arg = self._maybe_let(self.compile_expr(e.args[0], df, scope), e.args[0], df)
+        arg, akind = self._compile_item(e.args[0], df, scope)
+        arg = self._maybe_let(arg, e.args[0], df)
         if kind == "current":
             keep = lambda x: x["rn"] != rn
         elif kind == "group":
@@ -2477,13 +2433,8 @@ class Compiler:
         if name == "collect":
             # frame-ordered json-text list (the group-collect surface),
             # minus the excluded rows
-            valid = arg["t"] != G.T_NULL
             items = F.collect_list(
-                F.struct(
-                    rn.alias("rn"), pg.alias("pg"),
-                    F.when(valid, G.to_json_text(arg))
-                    .otherwise(F.lit("null")).alias("j"),
-                )
+                F.struct(rn.alias("rn"), pg.alias("pg"), _json_text(arg, akind).alias("j"))
             ).over(w)
             texts = F.transform(F.filter(items, keep), lambda x: x["j"])
             if e.distinct:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from postgraph_spark.functions import gtype as G
 from postgraph_spark.functions import temporal as TMP
 from postgraph_spark.plans import ast as A
+from postgraph_spark.plans.compiler import entity_array_json
 
 
 class _Ctx:
@@ -51,8 +52,8 @@ class _Ctx:
         return None, None
 
     def prop_variant(self, i: int) -> Column | None:
-        """When arg i is a direct property access on an entity carrying
-        a pv VARIANT, return the raw VARIANT at that path —
+        """When arg i is a direct property access on an entity, return
+        the raw VARIANT at that path of its pv document —
         temporal casts then read the native type in one variant_get
         instead of the full gval dispatch (a cast referenced k times
         after projection collapse would otherwise re-run the
@@ -63,10 +64,7 @@ class _Ctx:
         kind = self.scope.kinds.get(a.base.name)
         if kind not in ("vertex", "edge"):
             return None
-        pv = self.compiler._var_pv(self.df, a.base.name)
-        if pv is None:
-            return None
-        return F.try_variant_get(pv, "$." + ".".join(a.path), "variant")
+        return F.try_variant_get(F.col(a.base.name)["pv"], "$." + ".".join(a.path), "variant")
 
     @property
     def nargs(self) -> int:
@@ -87,40 +85,6 @@ def _num1(ctx: _Ctx, fn, as_int: bool = False) -> Column:
 def _str1(ctx: _Ctx, fn) -> Column:
     a = ctx.gv(0)
     return G.gv_str(F.when(a["t"] == G.T_STRING, fn(a["s"])))
-
-
-def _quote(s: Column) -> Column:
-    """JSON-quote a string column JVM-side (serialize-1-array trick)."""
-    arr = F.to_json(F.array(s))
-    return arr.substr(F.lit(2), F.length(arr) - 2)
-
-
-def _entity_json(x: Column, is_edge: bool) -> Column:
-    """vertex/edge struct -> its JSON rendering, with properties spliced
-    in as an OBJECT (a plain to_json would double-encode the JSON-text
-    properties column)."""
-    mid = (
-        F.concat(
-            F.lit(',"start_id":'), x["start_id"].cast("string"),
-            F.lit(',"end_id":'), x["end_id"].cast("string"),
-        )
-        if is_edge
-        else F.lit("")
-    )
-    return F.concat(
-        F.lit('{"id":'), x["id"].cast("string"),
-        mid,
-        F.lit(',"label":'), _quote(x["label"]),
-        F.lit(',"properties":'), F.coalesce(x["properties"], F.lit("{}")),
-        F.lit("}"),
-    )
-
-
-def _entity_array_json(arr: Column, is_edge: bool) -> Column:
-    texts = F.transform(arr, lambda x: _entity_json(x, is_edge))
-    return G.gv_array_json(
-        F.concat(F.lit("["), F.array_join(texts, ","), F.lit("]"))
-    )
 
 
 #: extended to* casts -> functions/casts.py implementations
@@ -171,7 +135,7 @@ def compile_scalar_function(compiler, e: A.FuncCall, df, scope) -> Column:
         if name in ("label", "type"):
             return G.gv_str(col["label"])
         if name == "properties":
-            return G.gv_object_json(col["properties"])
+            return G.gv_object_json(F.to_json(col["pv"]))
         raise ValueError(f"{name}() needs graph context; unsupported here")
 
     # ---- traversal / path functions (traversal.c:64+, old/regress/
@@ -187,14 +151,10 @@ def compile_scalar_function(compiler, e: A.FuncCall, df, scope) -> Column:
             pe, pn = f"__pe_{var}", f"__pn_{var}"
             if ctx.df is None or pe not in ctx.df.columns:
                 raise ValueError(f"{name}() on a VLE binding needs its resolved arrays")
-            if name == "nodes":
-                return _entity_array_json(F.col(pn), is_edge=False)
-            return _entity_array_json(F.col(pe), is_edge=True)
-        if name == "edges" and kind == "path":
-            return _entity_array_json(col["edges"], is_edge=True)
-        if name == "nodes":
-            return _entity_array_json(col["nodes"], is_edge=False)
-        return _entity_array_json(col["edges"], is_edge=True)
+            arr = F.col(pn) if name == "nodes" else F.col(pe)
+        else:
+            arr = col["nodes"] if name == "nodes" else col["edges"]
+        return G.gv_array_json(entity_array_json(arr, "vertex" if name == "nodes" else "edge"))
 
     # ---- list / general (gtype.c:2070-2914) ----
     if name == "head":
@@ -231,8 +191,10 @@ def compile_scalar_function(compiler, e: A.FuncCall, df, scope) -> Column:
         )
     if name == "keys":
         col, kind = ctx.entity(0)
-        src = col["properties"] if col is not None else ctx.gv(0)["j"]
-        keys = F.json_object_keys(src)
+        if col is not None:  # the document's keys, sorted as it stores them
+            keys = F.map_keys(F.try_variant_get(col["pv"], "$", "map<string,variant>"))
+        else:
+            keys = F.json_object_keys(ctx.gv(0)["j"])
         return G.gv_array_json(F.to_json(keys))
     if name == "range":
         lo = ctx.gv(0)["i"]

@@ -29,9 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import (
-    EDGE_FIELDS, EDGE_SCHEMA, ENTRY_ID_BITS, VERTEX_FIELDS, VERTEX_SCHEMA, Graph, stored
-)
+from postgraph_spark.graph import EDGE_SCHEMA, ENTRY_ID_BITS, VERTEX_SCHEMA, Graph, stored
 from postgraph_spark.plans import ast as A
 from postgraph_spark.plans.compiler import (
     Compiler,
@@ -91,15 +89,10 @@ def rowid_graphid(label_id: int, first_entry: int) -> Column:
     return F.lit(label_id << ENTRY_ID_BITS).cast("long") + F.lit(first_entry) + F.col("__rn")
 
 
-def _entity_struct(fields, pv: Column, base: Column | None = None, **given: Column) -> Column:
-    """An entity value as a scan binds it: the entity `fields` from
-    `given` or else the entity struct `base`, ``properties`` rendered
-    from `pv` as Graph.vertices renders it, and `pv` itself, which
-    property reads use."""
-    vals = {**given, "properties": F.to_json(pv)}
-    return F.struct(
-        *[(vals[f] if f in vals else base[f]).alias(f) for f in fields], pv.alias("pv")
-    )
+def _entity_struct(schema, base: Column | None = None, **given: Column) -> Column:
+    """An entity value as a scan binds it, a row of the `schema` table:
+    each field from `given`, else from the entity value `base`."""
+    return F.struct(*[(given[f] if f in given else base[f]).alias(f) for f in schema.fieldNames()])
 
 
 def _entity_rows(df: DataFrame, structs: list[Column], schema) -> DataFrame | None:
@@ -236,7 +229,7 @@ class WriteRunner:
             var = node.var or self._fresh("cv")
             df = df.withColumn(
                 var,
-                _entity_struct(VERTEX_FIELDS, F.col(props[id(node)]), id=gid, label=F.lit(label)),
+                _entity_struct(VERTEX_SCHEMA, id=gid, label=F.lit(label), pv=F.col(props[id(node)])),
             )
             scope.kinds[var] = VKIND_VERTEX
             created_v.append(var)
@@ -259,8 +252,8 @@ class WriteRunner:
                 df = df.withColumn(
                     evar,
                     _entity_struct(
-                        EDGE_FIELDS, F.col(props[id(rel)]), id=gid, start_id=F.col(src)["id"],
-                        end_id=F.col(dst)["id"], label=F.lit(label),
+                        EDGE_SCHEMA, id=gid, start_id=F.col(src)["id"], end_id=F.col(dst)["id"],
+                        label=F.lit(label), pv=F.col(props[id(rel)]),
                     ),
                 )
                 scope.kinds[evar] = VKIND_EDGE
@@ -288,7 +281,7 @@ class WriteRunner:
         value removes its key (cypher_set.c tuple update semantics)."""
         if df is None:
             raise CompileError("SET requires a preceding MATCH/CREATE")
-        tables = {VKIND_VERTEX: ("vertices", VERTEX_FIELDS), VKIND_EDGE: ("edges", EDGE_FIELDS)}
+        tables = {VKIND_VERTEX: ("vertices", VERTEX_SCHEMA), VKIND_EDGE: ("edges", EDGE_SCHEMA)}
         touched: dict[str, Column] = {}  # var -> its new document
         for item in c.items:
             tgt = item.target
@@ -301,12 +294,7 @@ class WriteRunner:
             if scope.kinds.get(var) not in tables:
                 raise CompileError(f"cannot SET on {var!r}")
             if var not in touched:
-                touched[var] = self.comp._var_pv(df, var)
-            if touched[var] is None:  # a projected entity: its stored row's document
-                tbl = getattr(self.graph, tables[scope.kinds[var]][0])
-                tbl = tbl.select(F.col("id").alias(f"__sid_{var}"), F.col("pv").alias(f"__spv_{var}"))
-                df = df.join(tbl, F.col(var)["id"] == F.col(f"__sid_{var}"), "left_outer")
-                touched[var] = F.col(f"__spv_{var}")
+                touched[var] = F.col(var)["pv"]
             # the delta: n.k = v is n += {k: v}; a non-map delta is empty
             if key is not None:
                 v = G.to_variant(self.comp.compile_expr(item.expr, df, scope))
@@ -322,9 +310,7 @@ class WriteRunner:
             new = F.map_filter(d, lambda _k, v: v.isNotNull() & ~F.is_variant_null(v))
             touched[var] = F.to_variant_object(F.map_concat(kept, new))
         for var, pv in touched.items():
-            fields = tables[scope.kinds[var]][1]
-            df = df.withColumn(var, _entity_struct(fields, pv, F.col(var)))
-        df = df.drop(*[f"__{c}_{v}" for v in touched for c in ("sid", "spv")])
+            df = df.withColumn(var, _entity_struct(tables[scope.kinds[var]][1], F.col(var), pv=pv))
         df = df.localCheckpoint(eager=True)
 
         g = self.graph
@@ -553,7 +539,7 @@ class WriteRunner:
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 vid_expr[idx] = F.col(f"__cid_{var}")
                 created_cols[var] = _entity_struct(
-                    VERTEX_FIELDS, F.col(f"__cp_{var}"), id=vid_expr[idx], label=F.lit(label)
+                    VERTEX_SCHEMA, id=vid_expr[idx], label=F.lit(label), pv=F.col(f"__cp_{var}")
                 )
             for idx, (kind, var, bound, el, *_r) in enumerate(elems):
                 if kind != "e":
@@ -563,8 +549,8 @@ class WriteRunner:
                 misses = misses.withColumn(f"__cid_{var}", gid)
                 src_i, dst_i = (idx - 1, idx + 1) if el.direction != "in" else (idx + 1, idx - 1)
                 created_cols[var] = _entity_struct(
-                    EDGE_FIELDS, F.col(f"__cp_{var}"), id=F.col(f"__cid_{var}"),
-                    start_id=vid_expr[src_i], end_id=vid_expr[dst_i], label=F.lit(label),
+                    EDGE_SCHEMA, id=F.col(f"__cid_{var}"), start_id=vid_expr[src_i],
+                    end_id=vid_expr[dst_i], label=F.lit(label), pv=F.col(f"__cp_{var}"),
                 )
             new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
             new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
@@ -604,10 +590,9 @@ class WriteRunner:
             if bound:
                 out = out.drop(f"__pm_{var}")
                 continue
-            pmc = F.col(f"__pm_{var}")
-            pm = _entity_struct(VERTEX_FIELDS if kind == "v" else EDGE_FIELDS, pmc["pv"], pmc)
+            pm = F.col(f"__pm_{var}")
             if n_miss and f"__cr_{var}" in out.columns:
-                bound_col = F.when(F.col(f"__pm_{var}").isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
+                bound_col = F.when(pm.isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
             else:
                 bound_col = pm
             anonymous = el.var is None

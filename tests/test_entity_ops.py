@@ -69,3 +69,31 @@ def test_edge_containment(engine):
     assert one(engine, "MATCH ()-[e:et]->() WHERE e @> {w: 5} RETURN count(*) AS c") == 1
     assert one(engine, "MATCH ()-[e:et]->() WHERE e ? 'w' RETURN count(*) AS c") == 1
     assert one(engine, "MATCH ()-[e:et]->() WHERE e @> {w: 4} RETURN count(*) AS c") == 0
+
+
+def test_group_by_entity_keeps_the_entity(engine):
+    """An explicit GROUP BY on an entity keys it on its id and keeps it
+    an entity, so its properties read after the grouping."""
+    rows = engine.fetch("MATCH (n:vt) WITH n, count(*) AS c GROUP BY n RETURN n.tag AS tag, c")
+    assert sorted(rows, key=repr) == sorted([("a", 1), (None, 1)], key=repr)
+    rows = engine.fetch("MATCH (n:vt) WITH n, count(*) AS c GROUP BY n RETURN n, c")
+    assert sorted(r[0]["properties"].get("tag", "") for r in rows) == ["", "a"]
+
+
+def test_collect_entities(engine):
+    """collect(n) and collect(DISTINCT n) over vertices and edges list
+    each entity rendered as nodes(p) renders it."""
+    [(ns, es)] = engine.fetch(
+        "MATCH p = (:vt)-[:et]->(:vt) RETURN nodes(p) AS ns, relationships(p) AS es"
+    )
+    assert sorted(n["properties"].get("tag", "") for n in ns) == ["", "a"]
+    assert [e["properties"] for e in es] == [{"w": 5}]
+    [(vs,)] = engine.fetch("MATCH (n:vt) RETURN collect(n) AS vs")
+    assert sorted(vs, key=repr) == sorted(ns, key=repr)
+    [(ds, cs)] = engine.fetch(
+        "MATCH (n:vt)-[e:et]-() RETURN collect(DISTINCT n) AS ds, collect(e) AS cs"
+    )
+    assert sorted(ds, key=repr) == sorted(ns, key=repr)
+    assert cs == es * 2
+    [(de,)] = engine.fetch("MATCH (n:vt)-[e:et]-() RETURN collect(DISTINCT e) AS de")
+    assert de == es

@@ -61,6 +61,16 @@ def test_values_and_results_match(engine):
     ) == [0]
 
 
+def test_entity_documents_are_read_from_the_variant(engine):
+    """keys(n) and a property read after WITH DISTINCT read the entity's
+    pv VARIANT: neither plan renders the document to JSON text or parses
+    text back."""
+    for q in ("MATCH (n:a) RETURN keys(n) AS k", "MATCH (n:a) WITH DISTINCT n RETURN n.x AS x"):
+        plan = optimized(engine, q)
+        for op in ("jsonObjectKeys", "parseJson", "StructsToJsonEvaluator(Map(),VariantType"):
+            assert op not in plan, (q, op, plan)
+
+
 # ------------------------- round-9 operator plan shapes (sf0.001 data)
 
 SF = "/root/testdata/sf0.001"

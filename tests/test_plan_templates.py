@@ -14,6 +14,7 @@ typed filters of those shapes compile to.
 from __future__ import annotations
 
 import random
+from collections import OrderedDict
 
 import pytest
 
@@ -167,6 +168,25 @@ def test_third_text_binds_without_compiling(tpch_engine, compiles):
     assert len(compiles) == before
     assert got == _per_text(tpch_engine, shape.format(k=13))
     assert len(got) == 1
+
+
+def test_full_cache_keeps_a_shapes_template(tpch_engine, compiles, monkeypatch):
+    """The plan cache evicts its least recently used entries: behind 256
+    unrelated entries, a shape's first text compiles, its second builds
+    the template, and its third binds it without compiling."""
+    filled = OrderedDict((("unrelated", i), (None,)) for i in range(256))
+    monkeypatch.setattr(engine_mod, "_PLAN_CACHE", filled)
+    shape = "MATCH (c:customer {{c_custkey: {k}}}) RETURN c.c_phone AS ph"
+    counts, got = [], []
+    for k in (41, 42, 43):
+        before = len(compiles)
+        got.append(_rows(tpch_engine.execute(shape.format(k=k))))
+        counts.append(len(compiles) - before)
+    assert counts == [1, 1, 0]
+    assert got == [_per_text(tpch_engine, shape.format(k=k)) for k in (41, 42, 43)]
+    st = _shape_state(tpch_engine, shape.format(k=0))
+    assert st.templates and not st.per_text
+    assert len(engine_mod._PLAN_CACHE) == 256
 
 
 @pytest.mark.parametrize(
