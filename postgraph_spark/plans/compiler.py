@@ -15,7 +15,7 @@ Cypher variable —
   value   -> gval struct (functions/gtype.py)
 An entity value is its table row, pv the stored properties VARIANT, from
 the scan to RETURN; the properties JSON text is rendered only where the
-entity leaves the engine (see render / entity_json).
+entity leaves the engine (see render / _json_view).
 """
 
 from __future__ import annotations
@@ -147,21 +147,16 @@ _EMPTY_EDGES = "array<struct<id:bigint,start_id:bigint,end_id:bigint,label:strin
 
 
 def _json_view(x: Column, kind: str) -> Column:
-    """Entity value `x` as the struct whose to_json is its JSON text:
-    the document nested as the ``properties`` object, keys sorted."""
+    """Entity value `x` as the struct whose to_json is its JSON text as
+    an element of a list (collect(n), nodes(p)): the document nested as
+    the ``properties`` object, keys sorted."""
     return F.struct(*[x[f].alias(f) for f in _ENTITY_FIELDS[kind]], x["pv"].alias("properties"))
-
-
-def entity_json(x: Column, kind: str) -> Column:
-    """A vertex or edge value as JSON text, the way it leaves the engine
-    inside a list (collect(n), nodes(p))."""
-    return F.to_json(_json_view(x, kind))
 
 
 def _json_text(x: Column, kind: str) -> Column:
     """A collect() element's JSON text, 'null' for a null value."""
     if kind in _ENTITY_FIELDS:
-        return F.when(x.isNotNull(), entity_json(x, kind)).otherwise(F.lit("null"))
+        return F.when(x.isNotNull(), F.to_json(_json_view(x, kind))).otherwise(F.lit("null"))
     return F.when(x["t"] != G.T_NULL, G.to_json_text(x)).otherwise(F.lit("null"))
 
 
@@ -445,7 +440,7 @@ class Compiler:
     # not comparable: DISTINCT and grouping key an entity on its id
     # (_entity_key). Its JSON text is rendered only where the entity
     # leaves the engine: a RETURN column (render), a path's or
-    # collect()'s list (entity_json), properties(n), the @>/? operand.
+    # collect()'s list (_json_view), properties(n), the @>/? operand.
 
     def _prop_atoms(self, scope: Scope | None, var: str, path: list[str]):
         """Property-type-catalog atom set for ``var.path`` (None =
