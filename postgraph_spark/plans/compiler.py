@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import Graph
+from postgraph_spark.graph import EDGE_SCHEMA, VERTEX_SCHEMA, Graph
 from postgraph_spark.plans import ast as A
 
 AGG_FNS = {
@@ -139,11 +139,16 @@ def _has_star(node) -> bool:
     )
 
 
-#: an entity value's fields besides its ``pv`` document
-_ENTITY_FIELDS = {VKIND_VERTEX: ("id", "label"), VKIND_EDGE: ("id", "start_id", "end_id", "label")}
+#: an entity value's fields besides its ``pv`` document: the stored row's
+_ENTITY_FIELDS = {
+    kind: tuple(f for f in schema.fieldNames() if f != "pv")
+    for kind, schema in ((VKIND_VERTEX, VERTEX_SCHEMA), (VKIND_EDGE, EDGE_SCHEMA))
+}
 
-#: the type of a named path's empty edge array
-_EMPTY_EDGES = "array<struct<id:bigint,start_id:bigint,end_id:bigint,label:string,pv:variant>>"
+
+def _row(schema: T.StructType) -> Column:
+    """A vertex or edge value: its stored row as one struct."""
+    return F.struct(*schema.fieldNames())
 
 
 def _json_view(x: Column, kind: str) -> Column:
@@ -171,10 +176,10 @@ def render(x: Column, kind: str | None) -> Column:
     the document's JSON text as Graph.vertices renders it; a named path
     renders its elements so. Every other value is itself."""
     if kind == VKIND_PATH:
-        return F.struct(
+        return F.when(x.isNotNull(), F.struct(
             F.transform(x["nodes"], lambda v: render(v, VKIND_VERTEX)).alias("nodes"),
             F.transform(x["edges"], lambda e: render(e, VKIND_EDGE)).alias("edges"),
-        )
+        ))
     if kind not in _ENTITY_FIELDS:
         return x
     fields = [x[f].alias(f) for f in _ENTITY_FIELDS[kind]]
@@ -461,7 +466,7 @@ class Compiler:
 
     def _vertex_scan(self, label: str | None, var: str) -> DataFrame:
         v = self.graph.vertices_with_label(label)
-        return v.select(F.struct("id", "label", "pv").alias(var))
+        return v.select(_row(VERTEX_SCHEMA).alias(var))
 
     def _oriented_edges(self, rel: A.RelPat, var: str) -> DataFrame:
         """Edge scan -> (var: edge_struct, __src, __dst) honoring direction
@@ -477,7 +482,7 @@ class Compiler:
                     e = e.filter(
                         self._prop_eq(G.prop_access_variant(pv, [k], atoms=atoms), vexpr)
                     )
-        struct = F.struct("id", "start_id", "end_id", "label", "pv").alias(var)
+        struct = _row(EDGE_SCHEMA).alias(var)
         out_e = e.select(struct, F.col("start_id").alias("__src"), F.col("end_id").alias("__dst"))
         in_e = e.select(struct, F.col("end_id").alias("__src"), F.col("start_id").alias("__dst"))
         if rel.direction == "out":
@@ -547,8 +552,6 @@ class Compiler:
 
         if m.optional:
             pat = Compiler(self.spark, self.graph)
-            # part of this statement: its WITH/RETURN narrowing holds here
-            pat._narrow_values = self._narrow_values
             with self._no_lets():  # sub-compile: outer binder must not leak in
                 pdf, pscope = pat.compile_match(
                     A.MatchClause(m.paths, m.where, False, []), None, Scope()
@@ -718,7 +721,7 @@ class Compiler:
                     side = "start_id" if e.name == "startnode" else "end_id"
                     vt = self.graph.vertices.select(
                         F.col("id").alias(f"__vid_{marker}"),
-                        F.struct("id", "label", "pv").alias(marker),
+                        _row(VERTEX_SCHEMA).alias(marker),
                     )
                     df = df.join(
                         vt,
@@ -940,7 +943,7 @@ class Compiler:
 
         es = g.edges.select(
             F.col("id").alias("__eid"),
-            F.struct("id", "start_id", "end_id", "label", "pv").alias("__es"),
+            _row(EDGE_SCHEMA).alias("__es"),
         )
         ex = paths.select(
             "__ps", "__pids", F.posexplode("__pids").alias("__pos", "__eid")
@@ -952,7 +955,7 @@ class Compiler:
         )
 
         vs = g.vertices.select(
-            F.col("id").alias("__vid"), F.struct("id", "label", "pv").alias("__vs")
+            F.col("id").alias("__vid"), _row(VERTEX_SCHEMA).alias("__vs")
         )
         nx = paths.select(
             "__ps", "__pids", F.posexplode("__nids").alias("__pos", "__vid")
@@ -970,7 +973,7 @@ class Compiler:
             "left_outer",
         ).drop("__ps", "__pids")
         # zero-length paths have no edges -> no resolve row for __pe
-        empty_e = F.array().cast(_EMPTY_EDGES)
+        empty_e = F.array().cast(T.ArrayType(EDGE_SCHEMA))
         df = df.withColumn(f"__pe_{vvar}", F.coalesce(F.col(f"__pe_{vvar}"), empty_e))
         return df
 
@@ -994,7 +997,7 @@ class Compiler:
         edges_arr = (
             F.concat(*edge_segs)
             if len(edge_segs) > 1
-            else (edge_segs[0] if edge_segs else F.array().cast(_EMPTY_EDGES))
+            else (edge_segs[0] if edge_segs else F.array().cast(T.ArrayType(EDGE_SCHEMA)))
         )
         df = df.withColumn(pvar, F.struct(nodes_arr.alias("nodes"), edges_arr.alias("edges")))
         drops = [c for c in df.columns if c.startswith("__pe_") or c.startswith("__pn_")]

@@ -78,6 +78,23 @@ def test_group_by_entity_keeps_the_entity(engine):
     assert sorted(rows, key=repr) == sorted([("a", 1), (None, 1)], key=repr)
     rows = engine.fetch("MATCH (n:vt) WITH n, count(*) AS c GROUP BY n RETURN n, c")
     assert sorted(r[0]["properties"].get("tag", "") for r in rows) == ["", "a"]
+    # ROLLUP: the total row rolled the entity up and reads null; the
+    # per-entity rows keep their properties
+    rows = engine.fetch("MATCH (n:vt) WITH n, count(*) AS c GROUP BY ROLLUP(n) RETURN n, c")
+    assert [c for n, c in rows if n is None] == [2]
+    assert sorted(n["properties"].get("tag", "") for n, c in rows if n is not None) == ["", "a"]
+
+
+def test_unmatched_optional_path_is_null(engine):
+    """A named path an OPTIONAL MATCH did not match is null, not a path
+    of null element lists."""
+    rows = engine.fetch(
+        "MATCH (n:vt) OPTIONAL MATCH p = (n)-[:et]->(:vt) RETURN n.tag AS tag, p"
+    )
+    by_tag = dict(rows)
+    assert by_tag[None] is None
+    assert [v["label"] for v in by_tag["a"]["nodes"]] == ["vt", "vt"]
+    assert [e["label"] for e in by_tag["a"]["edges"]] == ["et"]
 
 
 def test_collect_entities(engine):
