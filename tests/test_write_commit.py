@@ -4,6 +4,10 @@ guarantees — the property-type catalog is extended with the types the
 rows store, unique constraints are checked on the vertex AND edge batch
 before either table changes, and a declared label kind is enforced."""
 
+import json
+import os
+from urllib.parse import unquote
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,3 +204,90 @@ def test_document_rendering_golden(float_doc):
         (row,) = eng.execute(f"MATCH (n:v) RETURN {', '.join(RENDERED)}").collect()
         got = [row[0]["properties"]] + [row[i]["j"] for i in range(1, len(RENDERED))]
         assert dict(zip(RENDERED, got)) == RENDERED
+
+
+def _graph_state(eng) -> tuple[set, set]:
+    """Every vertex as `label{document}` and every edge as
+    `label(a)a.i-label(r){document}->label(b)b.i`."""
+
+    def doc(d):
+        return json.dumps(d, sort_keys=True, separators=(",", ":"))
+
+    vertices = {
+        f"{label}{doc(props)}"
+        for label, props in eng.fetch("MATCH (n) RETURN label(n), properties(n)")
+    }
+    edges = {
+        f"{la}{ia}-{lr}{doc(pr)}->{lb}{ib}"
+        for la, ia, lr, pr, lb, ib in eng.fetch(
+            "MATCH (a)-[r]->(b) RETURN label(a), a.i, label(r), properties(r), label(b), b.i"
+        )
+    }
+    return vertices, edges
+
+
+def _label_dirs(graph_path: str, kind: str) -> set:
+    """The label partitions of a table on disk, unescaped."""
+    with open(os.path.join(graph_path, "catalog.json")) as f:
+        table = os.path.join(graph_path, json.load(f)["snapshot"], kind)
+    return {unquote(e[len("label="):]) for e in os.listdir(table) if e.startswith("label=")}
+
+
+#: (statement, vertices added, vertices removed, edges added, edges
+#: removed); a statement whose entry is an exception type must raise it
+#: and change nothing
+WRITE_SEQUENCE = [
+    ("CREATE (:v {i: 1, x: 100})-[:r {w: 1}]->(:w {i: 100})",
+     {'v{"i":1,"x":100}', 'w{"i":100}'}, set(), {'v1-r{"w":1}->w100'}, set()),
+    ("UNWIND [2, 3] AS i CREATE (:v {i: i, x: i * 10, z: i})",
+     {'v{"i":2,"x":20,"z":2}', 'v{"i":3,"x":30,"z":3}'}, set(), set(), set()),
+    ("CREATE (:u {i: 1})-[:s {w: 2}]->(:u {i: 2}), (:`a b` {i: 1}), (:`a b` {i: 2})",
+     {'u{"i":1}', 'u{"i":2}', 'a b{"i":1}', 'a b{"i":2}'}, set(), {'u1-s{"w":2}->u2'}, set()),
+    ("MATCH (n:v {i: 1}) SET n.k = 'a'",
+     {'v{"i":1,"k":"a","x":100}'}, {'v{"i":1,"x":100}'}, set(), set()),
+    ("MATCH (n:v {i: 2}) SET n += {k: 'b', z: null}",
+     {'v{"i":2,"k":"b","x":20}'}, {'v{"i":2,"x":20,"z":2}'}, set(), set()),
+    ("MERGE (:v {i: 3})", set(), set(), set(), set()),
+    ("MATCH (a:v) MERGE (a)-[:r]->(:w {i: a.x})",
+     {'w{"i":20}', 'w{"i":30}'}, set(), {"v2-r{}->w20", "v3-r{}->w30"}, set()),
+    ("MATCH (:v {i: 3})-[e:r]->() DELETE e", set(), set(), set(), {"v3-r{}->w30"}),
+    ("MATCH (n:v {i: 2}) DELETE n", ValueError),
+    ("MATCH (n:v {i: 2}) DETACH DELETE n",
+     set(), {'v{"i":2,"k":"b","x":20}'}, set(), {"v2-r{}->w20"}),
+    ("MATCH (a:v {i: 1}) OPTIONAL MATCH (a)-[:nope]->(m) SET m.k = 1",
+     set(), set(), set(), set()),
+    ("MATCH (a:v {i: 1}) OPTIONAL MATCH (a)-[:nope]->(m) DETACH DELETE m",
+     set(), set(), set(), set()),
+    ("MATCH (n:`a b`) SET n.s = 1",
+     {'a b{"i":1,"s":1}', 'a b{"i":2,"s":1}'}, {'a b{"i":1}', 'a b{"i":2}'}, set(), set()),
+    ("MATCH (n:`a b`) DETACH DELETE n",
+     set(), {'a b{"i":1,"s":1}', 'a b{"i":2,"s":1}'}, set(), set()),
+    ("DROP LABEL s", set(), set(), set(), {'u1-s{"w":2}->u2'}),
+    ("DROP LABEL u", set(), {'u{"i":1}', 'u{"i":2}'}, set(), set()),
+]
+
+
+def test_durable_write_sequence_golden(spark, tmp_path):
+    """Every write clause against one durable graph: after each
+    statement the writing engine and a reopen of the directory hold the
+    same vertices and edges, and each table on disk has a label partition
+    exactly for the labels that still have rows."""
+    root = str(tmp_path / "graphs")
+    eng = _engine(spark, root, name="seq")
+    vertices, edges = set(), set()
+    for stmt, *change in WRITE_SEQUENCE:
+        if len(change) == 1:
+            with pytest.raises(change[0]):
+                eng.execute(stmt)
+        else:
+            eng.execute(stmt)
+            v_add, v_del, e_add, e_del = change
+            vertices, edges = (vertices - v_del) | v_add, (edges - e_del) | e_add
+        reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
+        reopened.execute("USE GRAPH seq")
+        for e in (eng, reopened):
+            assert _graph_state(e) == (vertices, edges), stmt
+        path = os.path.join(root, "seq")
+        assert _label_dirs(path, "vertices") == {v[: v.index("{")] for v in vertices}, stmt
+        assert _label_dirs(path, "edges") == {e.split("-")[1].split("{")[0] for e in edges}, stmt
+
