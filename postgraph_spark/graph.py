@@ -35,6 +35,7 @@ import json
 import os
 import shutil
 from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,6 +107,11 @@ def _spark_atom(dt) -> str | None:
     return None
 
 
+#: a table's entity kind (label_kinds' values), and back
+_KIND = {"vertices": "vertex", "edges": "edge"}
+_TABLE = {v: k for k, v in _KIND.items()}
+
+
 def make_graphid(label_id: int, entry_id: int) -> int:
     """Pack (label_id, entry_id) -> graphid (graphid.c:195-217)."""
     if not 0 <= label_id <= LABEL_ID_MAX:
@@ -167,9 +173,9 @@ class Graph:
         #: philosophy's answer to storing an assignment column
         self.vector_indexes: list[dict] = []
         #: when set, every committed write persists here (the analog of
-        #: the reference's heap-table durability): created rows through
-        #: append_rows -> persist_append, SET/DELETE through
-        #: persist_partitions
+        #: the reference's heap-table durability): Graph.commit appends a
+        #: table's new rows (persist_append) or rewrites its touched label
+        #: partitions (persist_partitions); persist writes a full snapshot
         self.durable_path: str | None = None
         #: current snapshot subdirectory (``snap-N``) under durable_path
         self._snapshot: str | None = None
@@ -199,24 +205,27 @@ class Graph:
 
     def extend_prop_types(self, rows: DataFrame) -> list[str]:
         """Fold the atoms of rows about to be committed — (label, pv)
-        pairs — into the catalog, and return their distinct labels. ONE
-        aggregation job: (label, key) -> the set of schema_of_variant
-        texts over variant_explode_outer(pv). A JSON null adds no atom;
-        a type from_variant does not dispatch pins the key untyped. A
-        label absent from a catalog that covers the whole graph is new
-        and gets cataloged from these rows alone; without a catalog
-        nothing is learned. Deleting rows never calls this: a superset
-        stays sound."""
+        pairs — into the catalog, and return their distinct labels. A row
+        without a document (pv null) stands for a removed row: it only
+        names its label, as deleting rows teaches nothing (a superset
+        stays sound). ONE aggregation job: (label, key) -> the set of
+        schema_of_variant texts over variant_explode_outer(pv). A JSON
+        null adds no atom; a type from_variant does not dispatch pins the
+        key untyped. A label absent from a catalog that covers the whole
+        graph is new and gets cataloged from these rows alone; without a
+        catalog nothing is learned."""
         found = (
             rows.select("label", "pv")
             .lateralJoin(rows.sparkSession.tvf.variant_explode_outer(F.col("pv").outer()))
             .groupBy("label", "key")
-            .agg(F.collect_set(F.schema_of_variant("value")).alias("schemas"))
+            .agg(
+                F.collect_set(F.schema_of_variant("value")).alias("schemas"),
+                F.max(F.col("pv").isNotNull()).alias("documented"),
+            )
             .collect()
         )
-        found = [r for r in found if r["label"] is not None]  # SET on a null entity
         for r in found:
-            if self.prop_types is None:
+            if self.prop_types is None or not r["documented"]:
                 continue
             cat = self.prop_types.setdefault(r["label"], {})
             if r["key"] is None:  # an empty document
@@ -271,12 +280,6 @@ class Graph:
                 df = df.repartitionByRange(par, F.col("label"), F.col("id"))
             setattr(self, attr, rendered(df.cache()))
         return self
-
-    def pin(self, kind: str, rows: DataFrame) -> None:
-        """Make `rows` the `kind` table: its stored columns are pinned
-        (localCheckpoint), so later jobs never re-run the plan that made
-        them, and the properties text is rendered on top."""
-        setattr(self, kind, rendered(stored(rows, kind).localCheckpoint(eager=True)))
 
     # -- construction helpers -------------------------------------------
 
@@ -438,16 +441,16 @@ class Graph:
         new-vertices/old-edges mix). Superseded snapshot directories are
         garbage-collected after the commit (and opportunistically on the
         next persist if that cleanup itself was interrupted).
-        Incremental commits (the per-statement path) use append_rows /
-        persist_partitions instead; a lakehouse deployment swaps all of
-        this for Delta append/MERGE, which versions instead of swapping.
+        Statements commit incrementally through Graph.commit instead; a
+        lakehouse deployment swaps all of this for Delta append/MERGE,
+        which versions instead of swapping.
         Both tables are pinned (localCheckpoint) first — removing files a
         table's lineage still reads would otherwise invalidate it
         (classic parquet overwrite-while-reading hazard)."""
         if not self.durable_path:
             return
-        self.pin("vertices", self.vertices)
-        self.pin("edges", self.edges)
+        for kind in ("vertices", "edges"):
+            setattr(self, kind, rendered(stored(getattr(self, kind), kind).localCheckpoint(eager=True)))
         os.makedirs(self.durable_path, exist_ok=True)
         prev = self._snapshot
         epoch = int(prev.rsplit("-", 1)[1]) + 1 if prev else 1
@@ -469,85 +472,130 @@ class Graph:
             if entry.startswith("snap-") and entry != new_rel and os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
 
-    def append_rows(
-        self, vertices: DataFrame | None = None, edges: DataFrame | None = None
+    def commit(
+        self,
+        removed: dict[str, DataFrame] | None = None,
+        added: dict[str, DataFrame] | None = None,
     ) -> None:
-        """Commit one statement's created rows — the single insert path of
-        CREATE, MERGE and the bulk loader (the reference's per-label heap
-        insert, cypher_create.c:332-540). The unique check runs on BOTH
-        batches before either table changes, so a violation anywhere
-        leaves the graph untouched (PG statement atomicity; allocated
-        sequence values are consumed either way, like nextval under
-        rollback). The property-type catalog is then extended with the
-        atoms of both batches, each table is unioned and pinned, and the
-        durable path appends only the new rows. Callers pass stored rows
-        derived from a pinned input (plans.writes.with_rowid), so no step
-        re-runs id allocation."""
-        batches = [(k, r) for k, r in (("vertices", vertices), ("edges", edges)) if r is not None]
-        if not batches:
+        """Commit one statement's changes: the only code that changes a
+        table (the reference's heap insert/update/delete,
+        cypher_create.c:332-540, cypher_set.c:100-188,
+        cypher_delete.c:246-480). `removed` maps a table ("vertices",
+        "edges") to the ids it loses, `added` to the stored rows it gains;
+        an update is both. Each changed table becomes its stored rows
+        minus the removed ids plus the added rows. In order:
+
+        1. the touched labels come back from the catalog extension, one
+           job over the added rows and the removed ids: a removed id's
+           label id is its top 16 bits (every builder packs it), so
+           nothing joins the table; an id of an unknown label fails the
+           statement;
+        2. the candidate tables are built and pinned, and ONE unique check
+           runs over the candidate rows of the constrained touched labels:
+           a violation fails the statement before either table changes
+           (PG statement atomicity; allocated sequence values are consumed
+           either way, like nextval under rollback);
+        3. the tables are replaced, catalog.json is written once (it
+           describes the rows about to be persisted, so a crash leaves at
+           worst a wider type set or an unused label id), and each table is
+           persisted: only its new rows when it only gained rows
+           (persist_append), else its touched label partitions
+           (persist_partitions).
+
+        Callers pass rows derived from a pinned input
+        (plans.writes.with_rowid), so no step re-runs id allocation."""
+        removed = {k: r for k, r in (removed or {}).items() if r is not None}
+        added = {k: r for k, r in (added or {}).items() if r is not None}
+        kinds = [k for k in ("vertices", "edges") if k in removed or k in added]
+        if not kinds:
             return
-        for kind, rows in batches:
-            self.enforce_unique(kind, rows)
-        self.extend_prop_types(
-            reduce(DataFrame.unionByName, [rows.select("label", "pv") for _k, rows in batches])
-        )
-        for kind, rows in batches:
-            self.pin(kind, stored(getattr(self, kind), kind).unionByName(rows))
-        for kind, rows in batches:
-            self.persist_append(kind, rows)
+        lid = F.shiftrightunsigned("id", ENTRY_ID_BITS)
+        names = F.create_map(*[F.lit(x) for lbl, i in self.label_ids.items() for x in (i, lbl)])
+        label = F.coalesce(F.try_element_at(names, lid), F.raise_error(
+            F.concat(F.lit("graphid of an unknown label id "), lid.cast("string"))
+        ))
+        labels = self.extend_prop_types(reduce(DataFrame.unionByName, [
+            *[rows.select("label", "pv") for rows in added.values()],
+            *[ids.select(label.alias("label"), F.lit(None).cast(T.VariantType()).alias("pv"))
+              for ids in removed.values()],
+        ]))
+        # a label of unknown kind may be in either table
+        touched = {
+            kind: {lbl for lbl in labels if self.label_kinds.get(lbl, _KIND[kind]) == _KIND[kind]}
+            for kind in kinds
+        }
+        tables = {}
+        for kind in kinds:
+            rows = stored(getattr(self, kind), kind)
+            if kind in removed:
+                rows = rows.join(removed[kind].select("id"), "id", "left_anti")
+            if kind in added:
+                rows = rows.unionByName(stored(added[kind], kind))
+            tables[kind] = rows.localCheckpoint(eager=True)
+        bad = self._duplicated([
+            (c, tables[k].filter(F.col("label") == c["label"]))
+            for c in self.constraints for k in kinds if c["label"] in touched[k]
+        ])
+        if bad is not None:
+            raise ValueError(
+                "duplicate key value violates unique constraint on"
+                f' {bad["label"]}.{bad["property"] or "properties"}'
+            )
+        for kind in kinds:
+            setattr(self, kind, rendered(tables[kind]))
+        self._write_catalog()
+        for kind in kinds:
+            if kind in removed:
+                self.persist_partitions(kind, sorted(touched[kind]))
+            else:
+                self.persist_append(kind, added[kind])
 
     def persist_append(self, kind: str, new_rows: DataFrame) -> None:
-        """Durable half of append_rows: append ONLY the new rows into the
-        live snapshot's label partitions — O(new rows) I/O, not an
-        O(table) rewrite (round-4 verdict's write-path scale-killer).
-        The catalog (which may have interned new labels and extended the
-        property types) is committed FIRST: a crash between the two steps
-        then leaves at worst an unused label id or a wider type set, never
-        durable rows under a label or a type missing from the reloaded
-        catalog. Parquet appends are crash-safe at job
-        granularity: the output committer moves files into place at job
-        commit, so an interrupted append leaves only ignorable staging
-        trash."""
+        """Durable half of a commit that only adds rows: append ONLY the
+        new rows into the live snapshot's label partitions — O(new rows)
+        I/O, not an O(table) rewrite (round-4 verdict's write-path
+        scale-killer). Parquet appends are crash-safe at job granularity:
+        the output committer moves files into place at job commit, so an
+        interrupted append leaves only ignorable staging trash."""
         if not self.durable_path:
             return
-        self._write_catalog()
         self._table_writer(new_rows, kind).mode("append").partitionBy(
             "label"
         ).parquet(self._table_dir(kind))
 
     def persist_partitions(self, kind: str, labels: list[str]) -> None:
-        """Durable SET/DELETE commit: rewrite ONLY the touched label
-        partitions (dynamic partition overwrite) from the pinned
-        in-memory table — O(touched partitions), not O(table). A label
-        whose partition became empty writes no files under dynamic
-        overwrite, so its stale directory is removed explicitly —
-        matching on the UNESCAPED partition value, since Spark
-        percent-escapes special characters (space, ':', '/') in
-        partition directory names. The catalog is committed first, as
-        in persist_append: it describes the rewritten rows' types."""
+        """Durable half of a commit that removes rows (SET, DELETE, DROP
+        LABEL): rewrite ONLY the touched label partitions (dynamic
+        partition overwrite) from the pinned in-memory table —
+        O(touched partitions), not O(table) — as one file per label,
+        however the in-memory rows are spread. A label left without rows
+        writes no files under dynamic overwrite, so its directory keeps
+        exactly its stale files: such a directory is removed. Directory
+        names are matched on the UNESCAPED partition value, since Spark
+        percent-escapes special characters (space, ':', '/') in them."""
         if not self.durable_path or not labels:
             return
-        self._write_catalog()
         sub = self._table_dir(kind)
+
+        def listing() -> dict[str, tuple[str, set]]:
+            return {
+                unquote(e[len("label="):]): (e, set(os.listdir(os.path.join(sub, e))))
+                for e in os.listdir(sub)
+                if e.startswith("label=") and unquote(e[len("label="):]) in labels
+            }
+
+        before = listing()
         remaining = getattr(self, kind).filter(F.col("label").isin(labels))
         (
-            self._table_writer(remaining, kind)
+            self._table_writer(remaining.repartition("label"), kind)
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("label")
             .parquet(sub)
         )
-        present = {
-            r["label"]
-            for r in remaining.select("label").distinct().collect()
-        }
-        from urllib.parse import unquote
-
-        gone = {label for label in labels if label not in present}
-        if gone:
-            for entry in os.listdir(sub):
-                if entry.startswith("label=") and unquote(entry[6:]) in gone:
-                    shutil.rmtree(os.path.join(sub, entry), ignore_errors=True)
+        for label, (entry, files) in listing().items():
+            if before.get(label, (entry, None))[1] == files:
+                shutil.rmtree(os.path.join(sub, entry), ignore_errors=True)
 
     # -- label DDL + constraints ----------------------------------------
 
@@ -579,17 +627,10 @@ class Graph:
         only `force` is gated and unsupported)."""
         if label not in self.label_ids:
             raise ValueError(f'label "{label}" does not exist')
-        kind = self.label_kinds.get(label)
-        tables = ("vertices", "edges") if kind is None else (
-            ("vertices",) if kind == "vertex" else ("edges",)
-        )
-        for attr in tables:
-            kept = getattr(self, attr).filter(F.col("label") != label)
-            if self.durable_path:
-                self.pin(attr, kept)
-                self.persist_partitions(attr, [label])
-            else:
-                setattr(self, attr, kept)
+        self.commit(removed={
+            kind: getattr(self, kind).filter(F.col("label") == label).select("id")
+            for kind in self._tables_of(label)
+        })
         del self.label_ids[label]
         self.label_kinds.pop(label, None)
         if self.prop_types is not None:  # no rows left: a later label of this name is new
@@ -620,75 +661,42 @@ class Graph:
         """
         if label not in self.label_ids:
             raise ValueError(f'label "{label}" does not exist')
-        kind = self.label_kinds.get(label)
-        tables = ("vertices", "edges") if kind is None else (
-            ("vertices",) if kind == "vertex" else ("edges",)
-        )
-        key = None
-        for attr in tables:
-            tbl = getattr(self, attr).filter(F.col("label") == label)
-            # the canonical-key dup plan is expensive to even COMPILE
-            # (codegen over the variant canon expressions); the common
-            # DDL-then-load order hits an empty label — probe that with
-            # a trivial plan first
-            if tbl.limit(1).isEmpty():
-                continue
-            if key is None:
-                key = self._unique_key_col(prop)
-            dup = (
-                tbl.select(key.alias("__k"))
-                .filter(F.col("__k").isNotNull())
-                .groupBy("__k").count().filter(F.col("count") > 1)
+        c = {"label": label, "property": prop}
+        rows = [getattr(self, kind).filter(F.col("label") == label) for kind in self._tables_of(label)]
+        # the canonical-key dup plan is expensive to even COMPILE (codegen
+        # over the variant canon expressions); the common DDL-then-load
+        # order hits an empty label — probe that with a trivial plan first
+        if self._duplicated([(c, r) for r in rows if not r.limit(1).isEmpty()]) is not None:
+            what = f'property "{prop}"' if prop else "properties"
+            raise ValueError(
+                f'cannot add unique constraint on {label}.{what}: existing duplicate values'
             )
-            if not dup.isEmpty():
-                what = f'property "{prop}"' if prop else "properties"
-                raise ValueError(
-                    f'cannot add unique constraint on {label}.{what}: existing duplicate values'
-                )
-        self.constraints.append({"label": label, "property": prop})
+        self.constraints.append(c)
         self._write_catalog()
 
-    def enforce_unique(self, kind: str, new_rows: DataFrame) -> None:
-        """Pre-commit unique check for a write batch (the distributed
-        analog of the btree uniqueness probe each reference insert
-        performs): for every constrained label present in the batch,
-        (1) no two batch rows share a key, (2) no batch key exists in
-        the stored label partition — one partial-agg job + one
-        semi-join per constrained label, both label-partition-pruned,
-        nothing beyond a yes/no reaches the driver."""
-        if not self.constraints:
-            return
-        batch_labels = {r["label"] for r in new_rows.select("label").distinct().collect()}
-        table = self.vertices if kind == "vertices" else self.edges
-        for c in self.constraints:
-            if c["label"] not in batch_labels:
-                continue
-            key = self._unique_key_col(c["property"])
-            newk = (
-                new_rows.filter(F.col("label") == c["label"])
-                .select(key.alias("__k"))
-                .filter(F.col("__k").isNotNull())
-            )
-            what = f'{c["label"]}.{c["property"]}' if c["property"] else f'{c["label"]}.properties'
-            existing = table.filter(F.col("label") == c["label"]).select(key.alias("__k"))
-            # both checks in ONE job: a key violates if the batch carries
-            # it twice, or once while the stored partition already has it
-            # (stored nulls group under the null key, where the batch
-            # contributes nothing — nulls never violate, PG btree
-            # semantics)
-            viol = (
-                newk.withColumn("__n", F.lit(1)).withColumn("__o", F.lit(0))
-                .unionByName(
-                    existing.withColumn("__n", F.lit(0)).withColumn("__o", F.lit(1))
-                )
-                .groupBy("__k")
-                .agg(F.sum("__n").alias("__nn"), F.sum("__o").alias("__oo"))
-                .filter(
-                    (F.col("__nn") > 1) | ((F.col("__nn") >= 1) & (F.col("__oo") >= 1))
-                )
-            )
-            if not viol.isEmpty():
-                raise ValueError(f"duplicate key value violates unique constraint on {what}")
+    def _duplicated(self, checks: list[tuple[dict, DataFrame]]) -> dict | None:
+        """The first unique constraint whose key two of its rows share,
+        of (constraint, rows of its label) pairs, else None: ONE
+        partial-agg job over all of them, nothing beyond the answer
+        reaching the driver. A null key never collides (PG btree
+        semantics)."""
+        if not checks:
+            return None
+        keys = reduce(DataFrame.unionByName, [
+            rows.select(F.lit(i).alias("__c"), self._unique_key_col(c["property"]).alias("__k"))
+            for i, (c, rows) in enumerate(checks)
+        ])
+        dup = (
+            keys.filter(F.col("__k").isNotNull())
+            .groupBy("__c", "__k").count().filter(F.col("count") > 1)
+            .select("__c").limit(1).collect()
+        )
+        return checks[dup[0]["__c"]][0] if dup else None
+
+    def _tables_of(self, label: str) -> tuple[str, ...]:
+        """The tables a label's rows live in: both when its kind is unknown."""
+        kind = self.label_kinds.get(label)
+        return ("vertices", "edges") if kind is None else (_TABLE[kind],)
 
     def _vector_prop_col(self, prop: str) -> F.Column:
         """A vector property (a number array) as array<double>."""
@@ -771,26 +779,6 @@ class Graph:
             .orderBy(F.col("dist").asc(), F.col("id"))
             .limit(k)
         )
-
-    def enforce_unique_post_update(self, table: DataFrame, labels: list[str]) -> None:
-        """Post-UPDATE unique check (the btree index also rejects
-        UPDATEs that create duplicates — old/regress/index.sql Test 3):
-        given the candidate post-update table, any constrained label
-        among the touched `labels` must hold no duplicate keys. One
-        label-pruned partial-agg job per constrained touched label."""
-        for c in self.constraints:
-            if c["label"] not in labels:
-                continue
-            key = self._unique_key_col(c["property"])
-            dup = (
-                table.filter(F.col("label") == c["label"])
-                .select(key.alias("__k"))
-                .filter(F.col("__k").isNotNull())
-                .groupBy("__k").count().filter(F.col("count") > 1)
-            )
-            what = f'{c["label"]}.{c["property"]}' if c["property"] else f'{c["label"]}.properties'
-            if not dup.isEmpty():
-                raise ValueError(f"duplicate key value violates unique constraint on {what}")
 
     def alloc_entry_ids(self, label: str, n: int, kind: str | None = None) -> tuple[int, int]:
         """Reserve n per-label sequence values -> (label_id,

@@ -187,9 +187,10 @@ def render(x: Column, kind: str | None) -> Column:
 
 
 def _entity_key(x: Column, kind: str | None) -> Column:
-    """What DISTINCT and grouping compare a binding by: a vertex or edge
-    by its id (vertex_btree_cmp compares ids; the pv VARIANT is not
-    comparable), a path by its element ids, any other value itself."""
+    """What DISTINCT, grouping and ORDER BY compare a binding by: a
+    vertex or edge by its id (vertex_btree_cmp compares ids; the pv
+    VARIANT is not comparable), a path by its element ids, any other
+    value (a VLE binding's ids) itself."""
     if kind == VKIND_PATH:
         return F.struct(
             F.transform(x["nodes"], lambda v: v["id"]).alias("nodes"),
@@ -1595,7 +1596,7 @@ class Compiler:
                 gv = G.gv_col(df, e.name, types=scope.vtypes.get(e.name))
                 col = G.sort_key(gv, exact_containers=True, narrow=True)
             else:
-                col = F.col(e.name)["id"]
+                col = _entity_key(F.col(e.name), kind)
         else:
             gv = self.compile_expr(e, df, scope)
             col = G.sort_key(gv, exact_containers=True, narrow=True)
@@ -1748,8 +1749,11 @@ class Compiler:
                 # fields of a narrowed materialization read as null
                 # literals; the recorded static types keep pruning live
                 return G.gv_col(df, e.name, types=scope.vtypes.get(e.name))
-            if kind == VKIND_VERTEX or kind == VKIND_EDGE:
-                return F.col(e.name)  # entity struct; callers handle
+            if kind in _ENTITY_FIELDS:
+                # an entity as a value (n IS NULL, coalesce(m, n)): its
+                # JSON object, as collect(n) lists it
+                x = F.col(e.name)
+                return G.gv_object_json(F.when(x.isNotNull(), F.to_json(_json_view(x, kind))))
             return F.col(e.name)
         if isinstance(e, A.Prop):
             base = e.base

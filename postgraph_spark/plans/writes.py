@@ -9,11 +9,12 @@ later clauses of the same statement.
 Spark design: the clause pipeline stays a DataFrame; a write clause
   1. computes the new/updated/deleted entity rows AS COLUMNS of the pipeline
      DataFrame (so later clauses including RETURN see the post-write state),
-  2. applies the delta to the graph's backing tables as a distributed
-     union / join-update / anti-join (the in-memory analog of Delta
-     append / MERGE INTO / DELETE). Created rows — every CREATE, MERGE
-     miss and bulk load (sources/loader.py) — commit through the one
-     Graph.append_rows,
+  2. hands the delta to Graph.commit, the one code that changes the
+     graph's tables: the ids each table loses and the rows it gains (an
+     update is both), applied as an anti-join plus a union (the
+     in-memory analog of Delta DELETE / append). CREATE and the bulk
+     loader (sources/loader.py) add rows; a MERGE miss creates through
+     CREATE; SET replaces the rows it updates; DELETE removes ids,
   3. numbers the rows it creates from a pinned copy of its input
      (with_rowid), so lineage replay never re-allocates an id.
 
@@ -25,22 +26,28 @@ driver-side loop.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgraph_spark.functions import gtype as G
-from postgraph_spark.graph import EDGE_SCHEMA, ENTRY_ID_BITS, VERTEX_SCHEMA, Graph, stored
+from postgraph_spark.graph import EDGE_SCHEMA, ENTRY_ID_BITS, VERTEX_SCHEMA, Graph
 from postgraph_spark.plans import ast as A
 from postgraph_spark.plans.compiler import (
     Compiler,
     CompileError,
     Scope,
     VKIND_EDGE,
+    VKIND_VALUE,
     VKIND_VERTEX,
 )
 
 DEFAULT_VLABEL = "_ag_label_vertex"
 DEFAULT_ELABEL = "_ag_label_edge"
+
+#: the table and stored row of each entity kind
+_TABLES = {VKIND_VERTEX: ("vertices", VERTEX_SCHEMA), VKIND_EDGE: ("edges", EDGE_SCHEMA)}
 
 #: monotonically_increasing_id keeps the row within its partition in
 #: the low 33 bits, the partition index above them
@@ -152,7 +159,7 @@ class WriteRunner:
         result: DataFrame | None = None
         for clause in q.clauses:
             if isinstance(clause, A.CreateClause):
-                df, scope = self.do_create(clause, df, scope)
+                df, scope, _n = self.do_create(clause, df, scope)
             elif isinstance(clause, A.SetClause):
                 df = self.do_set(clause, df, scope)
             elif isinstance(clause, A.DeleteClause):
@@ -171,16 +178,14 @@ class WriteRunner:
         self._anon += 1
         return f"__{prefix}{self._anon}"
 
-    def _props_variant(self, props: A.MapLit | None, df, scope, given=None) -> Column:
+    def _props_variant(self, props: A.MapLit | None, df, scope) -> Column:
         """A property map -> its VARIANT document, each value a typed
-        variant (G.to_variant) — the one builder of the documents CREATE,
-        MERGE and `SET +=` write. `given` adds keys whose variants are
-        already built (MERGE's correlated values)."""
-        values = {
+        variant (G.to_variant) — the one builder of the documents CREATE
+        (and so MERGE) and `SET +=` write."""
+        return G.variant_object({
             k: G.to_variant(self.comp.compile_expr(vexpr, df, scope))
             for k, vexpr in (props.items.items() if props else ())
-        }
-        return G.variant_object({**values, **(given or {})})
+        })
 
     # ------------------------------------------------------------- CREATE
 
@@ -192,7 +197,9 @@ class WriteRunner:
         Property maps are evaluated over the clause's input, before the
         rows are numbered and pinned, so RETURN, the in-memory table and
         the durable append all read one value of each: a property may
-        not reference an entity this clause creates (Neo4j's rule)."""
+        not reference an entity this clause creates (Neo4j's rule).
+        Returns (df, scope, number of input rows); an input without rows
+        allocates and commits nothing."""
         scope = scope.copy()
         opens = df is None
         if opens:
@@ -218,6 +225,11 @@ class WriteRunner:
         created_v: list[str] = []
         created_e: list[str] = []
 
+        def new_ids(label: str, kind: str) -> Column:
+            if not n_rows:  # nothing to number
+                return F.lit(None).cast("long")
+            return rowid_graphid(*self.graph.alloc_entry_ids(label, n_rows, kind))
+
         def bind_node(node: A.NodePat) -> str:
             nonlocal df
             if node.var and node.var in scope.kinds:
@@ -225,7 +237,7 @@ class WriteRunner:
                     raise CompileError(f"{node.var!r} is not a vertex")
                 return node.var
             label = node.label or DEFAULT_VLABEL
-            gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_rows, "vertex"))
+            gid = new_ids(label, "vertex")
             var = node.var or self._fresh("cv")
             df = df.withColumn(
                 var,
@@ -247,7 +259,7 @@ class WriteRunner:
                     raise CompileError("CREATE requires a directed relationship")
                 src, dst = (nxt, prev) if rel.direction == "in" else (prev, nxt)
                 label = rel.label or DEFAULT_ELABEL
-                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_rows, "edge"))
+                gid = new_ids(label, "edge")
                 evar = rel.var or self._fresh("ce")
                 df = df.withColumn(
                     evar,
@@ -260,17 +272,18 @@ class WriteRunner:
                 created_e.append(evar)
                 prev = nxt
 
-        self.graph.append_rows(
-            _entity_rows(df, [F.col(v) for v in created_v], VERTEX_SCHEMA),
-            _entity_rows(df, [F.col(v) for v in created_e], EDGE_SCHEMA),
-        )
+        if n_rows:
+            self.graph.commit(added={
+                "vertices": _entity_rows(df, [F.col(v) for v in created_v], VERTEX_SCHEMA),
+                "edges": _entity_rows(df, [F.col(v) for v in created_e], EDGE_SCHEMA),
+            })
         df = df.drop("__rn", *props.values())
         # anonymous entities drop out of the visible scope
         for var in created_v + created_e:
             if var.startswith("__"):
                 df = df.drop(var)
                 scope.kinds.pop(var, None)
-        return df, scope
+        return df, scope, n_rows
 
     # ---------------------------------------------------------------- SET
 
@@ -281,7 +294,6 @@ class WriteRunner:
         value removes its key (cypher_set.c tuple update semantics)."""
         if df is None:
             raise CompileError("SET requires a preceding MATCH/CREATE")
-        tables = {VKIND_VERTEX: ("vertices", VERTEX_SCHEMA), VKIND_EDGE: ("edges", EDGE_SCHEMA)}
         touched: dict[str, Column] = {}  # var -> its new document
         for item in c.items:
             tgt = item.target
@@ -291,7 +303,7 @@ class WriteRunner:
                 var, key = tgt.name, None
             else:
                 raise CompileError("SET target must be var.prop or var += map")
-            if scope.kinds.get(var) not in tables:
+            if scope.kinds.get(var) not in _TABLES:
                 raise CompileError(f"cannot SET on {var!r}")
             if var not in touched:
                 touched[var] = F.col(var)["pv"]
@@ -310,99 +322,69 @@ class WriteRunner:
             new = F.map_filter(d, lambda _k, v: v.isNotNull() & ~F.is_variant_null(v))
             touched[var] = F.to_variant_object(F.map_concat(kept, new))
         for var, pv in touched.items():
-            df = df.withColumn(var, _entity_struct(tables[scope.kinds[var]][1], F.col(var), pv=pv))
+            schema = _TABLES[scope.kinds[var]][1]
+            # a null entity (an unmatched OPTIONAL MATCH) stays null
+            df = df.withColumn(
+                var, F.when(F.col(var).isNotNull(), _entity_struct(schema, F.col(var), pv=pv))
+            )
         df = df.localCheckpoint(eager=True)
 
-        g = self.graph
-        for var in touched:
-            kind = tables[scope.kinds[var]][0]
-            written = df.select(
-                F.col(var)["id"].alias("__uid"),
-                F.col(var)["label"].alias("label"),
-                F.col(var)["pv"].alias("pv"),
-            )
-            # one job: the catalog learns every candidate document's
-            # atoms, and the touched label partitions come back for the
-            # durable partition-scoped rewrite
-            upd_labels = g.extend_prop_types(written)
-            updates = written.groupBy("__uid").agg(F.last("pv").alias("__upv"))
-            upd = (
-                stored(getattr(g, kind), kind)
-                .join(updates, F.col("id") == F.col("__uid"), "left_outer")
-                .withColumn("pv", F.coalesce(F.col("__upv"), F.col("pv")))
-                .drop("__uid", "__upv")
-            )
-            g.enforce_unique_post_update(upd, upd_labels)
-            g.pin(kind, upd)
-            g.persist_partitions(kind, upd_labels)
+        # an entity set by several rows (or items) keeps the last one's
+        # document: order by position in the pinned rows, then item
+        pos = F.monotonically_increasing_id() * len(touched)
+        parts: dict[str, list[DataFrame]] = {}
+        for i, var in enumerate(touched):
+            kind, schema = _TABLES[scope.kinds[var]]
+            parts.setdefault(kind, []).append(df.select(
+                *[F.col(var)[f].alias(f) for f in schema.fieldNames()], (pos + i).alias("__pos")
+            ).filter(F.col("id").isNotNull()))
+        removed, updated = {}, {}
+        for kind, rows in parts.items():
+            rows = reduce(DataFrame.unionByName, rows)
+            removed[kind] = rows.select("id")
+            updated[kind] = rows.groupBy("id").agg(*[
+                F.max_by(f, "__pos").alias(f) for f in rows.columns if f not in ("id", "__pos")
+            ])
+        self.graph.commit(removed=removed, added=updated)
         return df
 
     # ------------------------------------------------------------- DELETE
 
     def do_delete(self, c: A.DeleteClause, df, scope: Scope) -> None:
+        """DELETE / DETACH DELETE (cypher_delete.c:246-480): the ids of
+        the deleted entities leave their tables; DETACH DELETE removes a
+        deleted vertex's edges too, plain DELETE fails while any remains
+        (find_connected_edges). A null entity deletes nothing."""
         if df is None:
             raise CompileError("DELETE requires a preceding MATCH")
-        g = self.graph
-        v_ids: DataFrame | None = None
-        e_ids: DataFrame | None = None
+        parts: dict[str, list[DataFrame]] = {}
         for e in c.exprs:
             if not isinstance(e, A.Var):
                 raise CompileError("DELETE takes entity variables")
-            kind = scope.kinds.get(e.name)
-            ids = df.select(F.col(e.name)["id"].alias("id")).distinct()
-            if kind == VKIND_VERTEX:
-                v_ids = ids if v_ids is None else v_ids.union(ids).distinct()
-            elif kind == VKIND_EDGE:
-                e_ids = ids if e_ids is None else e_ids.union(ids).distinct()
-            else:
+            if scope.kinds.get(e.name) not in _TABLES:
                 raise CompileError(f"cannot DELETE {e.name!r}")
-
-        edges = g.edges
-        # touched label partitions (durable path only): collected from
-        # the DELETED rows so the backing-store rewrite stays partition-
-        # scoped (persist_partitions) instead of a full-table flush
-        e_label_dfs = []
-        v_labels: list[str] = []
-        if e_ids is not None:
-            if g.durable_path:
-                e_label_dfs.append(
-                    edges.join(e_ids, edges["id"] == e_ids["id"], "left_semi").select("label")
-                )
-            edges = edges.join(e_ids, edges["id"] == e_ids["id"], "left_anti")
-        if v_ids is not None:
-            incident = edges.join(
-                v_ids,
-                (edges["start_id"] == v_ids["id"]) | (edges["end_id"] == v_ids["id"]),
-                "left_semi",
+            parts.setdefault(_TABLES[scope.kinds[e.name]][0], []).append(
+                df.select(F.col(e.name)["id"].alias("id"))
             )
+        removed = {
+            kind: reduce(DataFrame.union, ids).filter(F.col("id").isNotNull())
+            for kind, ids in parts.items()
+        }
+        if "vertices" in removed:
+            v_ids = removed["vertices"].select(F.col("id").alias("__vid"))
+            edges = self.graph.edges
+            if "edges" in removed:
+                edges = edges.join(removed["edges"], "id", "left_anti")
+            incident = edges.join(
+                v_ids, (edges["start_id"] == v_ids["__vid"]) | (edges["end_id"] == v_ids["__vid"]),
+                "left_semi",
+            ).select("id")
             if not c.detach:
-                # error when non-deleted edges remain attached
-                # (find_connected_edges, cypher_delete.c:405-480)
-                if incident.limit(1).count() > 0:
+                if not incident.isEmpty():
                     raise ValueError("Cannot delete a vertex that still has edges (use DETACH DELETE)")
             else:
-                if g.durable_path:
-                    e_label_dfs.append(incident.select("label"))
-                edges = edges.join(
-                    v_ids,
-                    (edges["start_id"] == v_ids["id"]) | (edges["end_id"] == v_ids["id"]),
-                    "left_anti",
-                )
-            if g.durable_path:
-                v_labels = [
-                    r[0]
-                    for r in g.vertices.join(
-                        v_ids, g.vertices["id"] == v_ids["id"], "left_semi"
-                    ).select("label").distinct().collect()
-                ]
-            g.pin("vertices", g.vertices.join(v_ids, g.vertices["id"] == v_ids["id"], "left_anti"))
-        g.pin("edges", edges)
-        if g.durable_path:
-            e_labels: set[str] = set()
-            for ldf in e_label_dfs:
-                e_labels.update(r[0] for r in ldf.distinct().collect())
-            g.persist_partitions("vertices", v_labels)
-            g.persist_partitions("edges", sorted(e_labels))
+                removed["edges"] = incident.union(removed["edges"]) if "edges" in removed else incident
+        self.graph.commit(removed=removed)
 
     # -------------------------------------------------------------- MERGE
     def do_merge(self, c: A.MergeClause, df, scope: Scope):
@@ -412,9 +394,11 @@ class WriteRunner:
         (old/regress/cypher_merge.sql tests 8-13). Probe is an equi
         left-outer join of the pipeline against the standalone-compiled
         pattern, correlated on outer-bound vertex ids plus canonical key
-        text of correlated property expressions ({i: n.i} — test 3);
-        misses create ALL unbound entities once per distinct correlation
-        key, so created paths are visible to every probe row."""
+        text of correlated property expressions ({i: n.i} — test 3).
+        The misses are grouped by those keys and CREATE makes the pattern
+        once per distinct key (do_create), with each bound vertex and each
+        correlated value as a binding of its input, so created paths are
+        visible to every probe row of the key."""
         scope = scope.copy()
         els = c.path.elements
         if df is None:
@@ -461,152 +445,84 @@ class WriteRunner:
         for kind, var, *_rest in elems:
             pdf = pdf.withColumnRenamed(var, f"__pm_{var}")
 
-        # ---- correlated prop key columns on both sides
+        # ---- correlated prop key columns on both sides; the outer side
+        # also keeps each value (__mv_), which a miss creates with
         corr_list = []  # (tag, elem_idx, key, expr)
         for idx, (kind, var, bound, el, const_items, corr_items) in enumerate(elems):
             for k, vexpr in corr_items:
                 corr_list.append((f"{idx}_{k}", idx, k, vexpr))
         for tag, idx, k, vexpr in corr_list:
-            kind, var = elems[idx][0], elems[idx][1]
-            pmv = F.col(f"__pm_{var}")
-            ppv = pmv["pv"]
+            ppv = F.col(f"__pm_{elems[idx][1]}")["pv"]
             pdf = pdf.withColumn(
                 f"__pc_{tag}", G.canon_key_text(G.from_variant(F.try_variant_get(ppv, f"$.{k}", "variant")))
             )
-        oc_cols, ov_cols = [], []
+        oc_cols = []
+        mscope = Scope()  # the bindings of the misses
         for tag, idx, k, vexpr in corr_list:
             val = self.comp.compile_expr(vexpr, df, scope)
             df = df.withColumn(f"__oc_{tag}", G.canon_key_text(val, null_as_sentinel=True))
-            df = df.withColumn(f"__ov_{tag}", G.to_variant(val))
+            df = df.withColumn(f"__mv_{tag}", val)
             oc_cols.append(f"__oc_{tag}")
-            ov_cols.append(f"__ov_{tag}")
+            mscope.kinds[f"__mv_{tag}"] = VKIND_VALUE
+            mscope.vtypes[f"__mv_{tag}"] = G.gv_types(val)
 
         # ---- probe join: bound ids + correlated prop keys (pure equi)
-        bound_vars = [var for kind, var, bound, *_ in elems if bound]
+        bound_vars = list(dict.fromkeys(var for kind, var, bound, *_ in elems if bound))
         cond = F.lit(True)
-        for var in dict.fromkeys(bound_vars):
+        for var in bound_vars:
             cond = cond & (F.col(var)["id"] == F.col(f"__pm_{var}")["id"])
-        for tag, *_ in [(t,) for t, *_r in corr_list]:
-            cond = cond & (F.col(f"__oc_{tag}") == F.col(f"__pc_{tag}"))
-        joined = df.join(pdf, cond, "left_outer").drop(
-            *[f"__pc_{t}" for t, *_r in corr_list]
-        )
-        first_unmatched = elems[0][1]
-        matched = F.col(f"__pm_{first_unmatched}").isNotNull()
+        for oc in oc_cols:
+            cond = cond & (F.col(oc) == F.col(f"__pc_{oc[5:]}"))
+        joined = df.join(pdf, cond, "left_outer").drop(*[f"__pc_{oc[5:]}" for oc in oc_cols])
+        joined = joined.withColumns({f"__bk_{v}": F.col(v)["id"] for v in bound_vars})
+        matched = F.col(f"__pm_{elems[0][1]}").isNotNull()
 
-        # ---- create whole path for distinct miss keys
-        key_cols = [F.col(v)["id"].alias(f"__bk_{v}") for v in dict.fromkeys(bound_vars)]
-        key_names = [f"__bk_{v}" for v in dict.fromkeys(bound_vars)] + oc_cols
+        # ---- the misses, one row per distinct key, carrying each bound
+        # vertex and correlated value
+        key_names = [f"__bk_{v}" for v in bound_vars] + oc_cols
         miss_rows = joined.filter(~matched)
-        if key_cols or oc_cols:
-            misses = (
-                miss_rows.select(*key_cols, *oc_cols, *ov_cols)
-                .groupBy(*key_names)
-                .agg(*[F.first(cv).alias(cv) for cv in ov_cols])
-                if ov_cols
-                else miss_rows.select(*key_cols, *oc_cols).distinct()
-            )
+        if key_names:
+            carried = [*bound_vars, *[f"__mv_{oc[5:]}" for oc in oc_cols]]
+            misses = miss_rows.groupBy(*key_names).agg(*[F.first(v).alias(v) for v in carried])
         else:
             misses = miss_rows.select(F.lit(1).alias("__mk")).distinct()
             key_names = ["__mk"]
             joined = joined.withColumn("__mk", F.lit(1))
-        def props_variant(idx) -> Column:
-            _k, _v, _b, _el, const_items, corr_items = elems[idx]
-            return self._props_variant(
-                A.MapLit(const_items), None, Scope(),
-                given={k: F.col(f"__ov_{idx}_{k}") for k, _e in corr_items},
-            )
 
-        # properties of the entities a miss creates are evaluated before
-        # the misses are numbered and pinned, so every read sees one value
-        misses = misses.withColumns({
-            f"__cp_{var}": props_variant(idx) for idx, (_k, var, b, *_r) in enumerate(elems) if not b
-        })
-        misses, n_miss = with_rowid(misses)
+        # ---- CREATE the pattern over the misses: a bound vertex is
+        # itself, a correlated value reads its binding
+        create_els = []
+        for idx, (kind, var, bound, el, const_items, corr_items) in enumerate(elems):
+            props = {**const_items, **{k: A.Var(f"__mv_{idx}_{k}") for k, _e in corr_items}}
+            props = A.MapLit(props) if props else None
+            if kind == "e":
+                create_els.append(A.RelPat(var, el.label, props, el.direction, None))
+            else:
+                create_els.append(A.NodePat(var, None, None) if bound else A.NodePat(var, el.label, props))
+        mscope.kinds.update({v: VKIND_VERTEX for v in bound_vars})
+        created, _s, n_miss = self.do_create(
+            A.CreateClause([A.Path(None, create_els)]), misses, mscope
+        )
 
-        created_cols: dict[str, Column] = {}
+        # ---- join the named created entities back to every row of their key
+        new_vars = list(dict.fromkeys(v for _k, v, b, el, *_r in elems if not b and el.var))
         if n_miss:
-            # vertices first (edges need their ids)
-            vid_expr: dict[int, Column] = {}
-            for idx, (kind, var, bound, el, *_r) in enumerate(elems):
-                if kind != "v":
-                    continue
-                if bound:
-                    vid_expr[idx] = F.col(f"__bk_{var}")
-                    continue
-                label = el.label or DEFAULT_VLABEL
-                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "vertex"))
-                misses = misses.withColumn(f"__cid_{var}", gid)
-                vid_expr[idx] = F.col(f"__cid_{var}")
-                created_cols[var] = _entity_struct(
-                    VERTEX_SCHEMA, id=vid_expr[idx], label=F.lit(label), pv=F.col(f"__cp_{var}")
-                )
-            for idx, (kind, var, bound, el, *_r) in enumerate(elems):
-                if kind != "e":
-                    continue
-                label = el.label or DEFAULT_ELABEL
-                gid = rowid_graphid(*self.graph.alloc_entry_ids(label, n_miss, "edge"))
-                misses = misses.withColumn(f"__cid_{var}", gid)
-                src_i, dst_i = (idx - 1, idx + 1) if el.direction != "in" else (idx + 1, idx - 1)
-                created_cols[var] = _entity_struct(
-                    EDGE_SCHEMA, id=F.col(f"__cid_{var}"), start_id=vid_expr[src_i],
-                    end_id=vid_expr[dst_i], label=F.lit(label), pv=F.col(f"__cp_{var}"),
-                )
-            new_v = [created_cols[v] for k, v, b, *_r in elems if k == "v" and not b]
-            new_e = [created_cols[v] for k, v, *_r in elems if k == "e"]
-            self.graph.append_rows(
-                _entity_rows(misses, new_v, VERTEX_SCHEMA),
-                _entity_rows(misses, new_e, EDGE_SCHEMA),
-            )
-            # join created entities back to ALL rows on the same keys
-            cstructs = misses.select(
-                *[F.col(kn) for kn in key_names],
-                *[
-                    created_cols[var].alias(f"__cr_{var}")
-                    for kind, var, bound, *_r in elems
-                    if not bound
-                ],
-            )
-            # outer side key name alignment: bound ids live in entity structs
-            jcond = F.lit(True)
-            for v in dict.fromkeys(bound_vars):
-                jcond = jcond & (F.col(v)["id"] == cstructs[f"__bk_{v}"])
-            for ocn in oc_cols:
-                jcond = jcond & (joined[ocn] == cstructs[ocn])
-            if not bound_vars and not oc_cols:
-                jcond = joined["__mk"] == cstructs["__mk"]
-            joined = joined.join(
-                cstructs,
-                jcond,
-                "left_outer",
-            )
-            # cstructs carries duplicate key columns — drop its copies
-            for kn in key_names:
-                joined = joined.drop(cstructs[kn])
+            cstructs = created.select(*key_names, *[F.col(v).alias(f"__cr_{v}") for v in new_vars])
+            joined = joined.join(cstructs, key_names, "left_outer")
 
         # ---- bind each pattern var: matched struct else created
         out = joined
         for kind, var, bound, el, *_r in elems:
-            if bound:
+            if var in scope.kinds or not el.var:  # bound, bound already or anonymous
                 out = out.drop(f"__pm_{var}")
                 continue
             pm = F.col(f"__pm_{var}")
-            if n_miss and f"__cr_{var}" in out.columns:
-                bound_col = F.when(pm.isNotNull(), pm).otherwise(F.col(f"__cr_{var}"))
-            else:
-                bound_col = pm
-            anonymous = el.var is None
-            out = out.withColumn(var, bound_col).drop(f"__pm_{var}", f"__cr_{var}")
-            if anonymous:
-                out = out.drop(var)
-            else:
-                scope.kinds[var] = VKIND_VERTEX if kind == "v" else VKIND_EDGE
-        drops = [c0 for c0 in out.columns if c0.startswith("__oc_") or c0.startswith("__ov_")
-                 or c0 == "__mk" or c0 == "__one" or c0.startswith("__rn")]
-        out = out.drop(*drops)
-        # pin the pipeline only when this MERGE created entities: the
-        # created ids come from the already-checkpointed `misses`, but the
-        # surrounding join tree is cheap insurance to pin too. A fully
+            out = out.withColumn(var, F.coalesce(pm, F.col(f"__cr_{var}")) if n_miss else pm)
+            out = out.drop(f"__pm_{var}", f"__cr_{var}")
+            scope.kinds[var] = VKIND_VERTEX if kind == "v" else VKIND_EDGE
+        out = out.drop(*[c0 for c0 in out.columns if c0.startswith(("__oc_", "__mv_", "__bk_"))],
+                       "__mk", "__one")
+        # pin the pipeline only when this MERGE created entities: a fully
         # MATCHED merge allocated nothing and committed nothing — its
         # output is a deterministic function of stable inputs, so the
         # eager checkpoint would only add a no-op materialization job

@@ -628,8 +628,9 @@ def graph_reach_pairs(spark, sf_dir):
 def cypher_write_roundtrip(spark, sf_dir):
     """The WRITE path under the external oracle (round-6 verdict #9):
     label DDL + unique property constraint, batched CREATE, idempotent
-    MERGE, SET, DELETE — all committed durably (snap-N pointer +
-    O(rows) appends, graph.py persist/persist_append) — then the graph
+    MERGE, SET, DELETE — each committed durably by graph.py
+    Graph.commit (new rows appended, touched label partitions
+    rewritten; catalog.json names the live snap-N) — then the graph
     is REOPENED from disk by a second catalog and aggregated through the
     Cypher read path. The oracle recomputes the post-write state
     directly from nation.parquet. Driver-side content is the 25-row

@@ -10,10 +10,10 @@ endpoints by those user ids. This is the Spark-native re-design:
   document, graphids are assigned with the same distributed
   per-partition scheme as CREATE (plans/writes.py with_rowid — no
   single-partition window, no collect of data), and the rows commit
-  through Graph.append_rows, the insert path CREATE and MERGE use: the
-  label's declared kind and unique constraints are enforced, the
-  property-type catalog is extended with the loaded rows' types, and a
-  durable graph appends only the new rows.
+  through Graph.commit, as every write does: the label's declared kind
+  and unique constraints are enforced, the property-type catalog is
+  extended with the loaded rows' types, and a durable graph appends
+  only the new rows.
 - The user id column is kept as the ``__id`` property (AGE convention),
   so edge loads resolve endpoints with two equi-joins on
   ``pv.__id`` — shuffle on the join key, broadcast when a side
@@ -85,7 +85,7 @@ def load_vertices(
     body, n = with_rowid(df.select(_props_pv(df, cols, id_col).alias("pv")))
     gid = rowid_graphid(*graph.alloc_entry_ids(label, n, "vertex"))
     new_rows = body.select(gid.alias("id"), F.lit(label).alias("label"), "pv")
-    graph.append_rows(vertices=new_rows)
+    graph.commit(added={"vertices": new_rows})
     return n
 
 
@@ -137,7 +137,7 @@ def load_edges(
     new_rows = body.select(
         gid.alias("id"), "start_id", "end_id", F.lit(label).alias("label"), "pv"
     )
-    graph.append_rows(edges=new_rows)
+    graph.commit(added={"edges": new_rows})
     return n
 
 

@@ -20,9 +20,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 #: the driver-facing `core` gate (round-11 verdict #2; see pytest.ini):
 #: the oracle-parity sweep over EVERY registered query, the plan-shape
 #: pins, the driver schema contract, the guard-invariant suites, and the
-#: durable write path with its one commit for created rows, the
-#: soundness of the property-type catalog the write path extends, and
-#: the read path's plan templates.
+#: durable write path with its one commit (Graph.commit), the unique
+#: constraints, label DDL and multi-hop/correlated MERGE that commit
+#: serves, the soundness of the property-type catalog the write path
+#: extends, and the read path's plan templates.
 #: Everything else is marked `full` (builder's pre-commit gate).
 _CORE_FILES = {
     "test_oracle_parity.py",
@@ -32,6 +33,8 @@ _CORE_FILES = {
     "test_round12_fixes.py",
     "test_durable_writes.py",
     "test_write_commit.py",
+    "test_label_ddl.py",
+    "test_merge_paths.py",
     "test_prop_catalog.py",
     "test_plan_templates.py",
 }

@@ -114,3 +114,28 @@ def test_collect_entities(engine):
     assert cs == es * 2
     [(de,)] = engine.fetch("MATCH (n:vt)-[e:et]-() RETURN collect(DISTINCT e) AS de")
     assert de == es
+
+
+def test_entity_as_a_value(engine):
+    """An entity where a value is expected (IS NULL, coalesce) is its
+    JSON object as collect(n) lists it; an unmatched one is null."""
+    rows = engine.fetch(
+        "MATCH (n:vt) OPTIONAL MATCH (n)-[:et]->(m) RETURN n.tag, n IS NULL, m IS NULL"
+    )
+    assert sorted(rows, key=repr) == sorted([("a", False, False), (None, False, True)], key=repr)
+    [(vs,)] = engine.fetch("MATCH (n:vt) RETURN collect(n)")
+    untagged = [v for v in vs if v["properties"] == {}]
+    # a's m is the untagged vertex; the untagged vertex has no m
+    got = engine.fetch_values("MATCH (n:vt) OPTIONAL MATCH (n)-[:et]->(m) RETURN coalesce(m, n)")
+    assert got == untagged * 2
+
+
+def test_order_by_path_and_vle(engine):
+    """ORDER BY a named path or a variable-length binding orders by its
+    element ids."""
+    for order in ("", " DESC"):
+        paths = engine.fetch_values(f"MATCH p = (:vt)-[:et]-(:vt) RETURN p ORDER BY p{order}")
+        ids = [[v["id"] for v in p["nodes"]] for p in paths]
+        assert len(ids) == 2 and ids == sorted(ids, reverse=bool(order))
+        rows = engine.fetch(f"MATCH (a:vt)-[e:et*1..1]-(:vt) RETURN a.tag, e ORDER BY e{order}")
+        assert [tag for tag, _e in rows] == (["a", None] if not order else [None, "a"])

@@ -1,8 +1,10 @@
-"""One commit for created rows: CREATE (literal or row-wise), MERGE and
-the bulk loader all append through Graph.append_rows, so they share its
-guarantees — the property-type catalog is extended with the types the
-rows store, unique constraints are checked on the vertex AND edge batch
-before either table changes, and a declared label kind is enforced."""
+"""One commit for every write: CREATE (literal or row-wise), MERGE (which
+creates through CREATE), SET, DELETE, DROP LABEL and the bulk loader all
+change the tables through Graph.commit, so they share its guarantees —
+the property-type catalog is extended with the types the rows store,
+unique constraints are checked on the vertex AND edge candidates before
+either table changes, a declared label kind is enforced, and a durable
+graph reopens to what the writing engine holds."""
 
 import json
 import os
@@ -291,3 +293,18 @@ def test_durable_write_sequence_golden(spark, tmp_path):
         assert _label_dirs(path, "vertices") == {v[: v.index("{")] for v in vertices}, stmt
         assert _label_dirs(path, "edges") == {e.split("-")[1].split("{")[0] for e in edges}, stmt
 
+
+def test_merge_repeated_variable_creates_one_vertex(spark, tmp_path):
+    """A variable named twice in a MERGE pattern is one entity: a miss
+    creates one vertex and a self-loop on it, and a second MERGE of the
+    pattern matches it."""
+    root = str(tmp_path / "graphs")
+    eng = _engine(spark, root)
+    for _ in range(2):
+        eng.execute("MERGE (a:x {k: 1})-[:r]->(a)")
+        reopened = CypherEngine(spark, GraphCatalog(spark, root=root))
+        reopened.execute("USE GRAPH wc")
+        for e in (eng, reopened):
+            assert e.fetch("MATCH (n) RETURN label(n), n.k") == [("x", 1)]
+            ((a, r, b),) = e.fetch("MATCH (a)-[r]->(b) RETURN id(a), id(r), id(b)")
+            assert a == b != r
