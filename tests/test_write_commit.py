@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from postgraph_spark.engine import CypherEngine
-from postgraph_spark.graph import Graph, GraphCatalog
+from postgraph_spark.graph import Graph, GraphCatalog, make_graphid
 from postgraph_spark.plans.writes import with_rowid
 from postgraph_spark.sources import loader as L
 
@@ -308,3 +308,15 @@ def test_merge_repeated_variable_creates_one_vertex(spark, tmp_path):
             assert e.fetch("MATCH (n) RETURN label(n), n.k") == [("x", 1)]
             ((a, r, b),) = e.fetch("MATCH (a)-[r]->(b) RETURN id(a), id(r), id(b)")
             assert a == b != r
+
+
+def test_commit_refuses_an_id_of_an_unknown_label(spark):
+    """A removed id names its label in its top 16 bits: an id whose label
+    the graph does not know fails the commit, and the tables keep their
+    rows."""
+    g = Graph.from_rows(spark, "wc_ids", [("p", {"i": 1})], [])
+    before = g.vertices
+    ids = spark.createDataFrame([(make_graphid(99, 1),)], "id bigint")
+    with pytest.raises(Exception, match="unknown label id 99"):
+        g.commit(removed={"vertices": ids})
+    assert g.vertices is before and g.vertices.count() == 1
