@@ -15,6 +15,14 @@ gval = struct<t:int, b:boolean, i:long, d:double, s:string, j:string>
       gtype_util.c:1763-1900: int/float/numeric compare numerically).
   j — JSON text for containers (heterogeneous arrays/objects).
 
+Native payload: a gval whose static type is ONE scalar class also
+carries that value as a plain typed Spark column (long, double, string
+or boolean), SQL-null exactly when the gval is a gtype null — an int or
+float literal, a string literal, a boolean, a catalog-typed property
+(from_variant_atoms) and numeric `+`/`-` of two such values. Comparing
+two native operands is one SQL comparison (_native_cmp); every other
+operand takes the gval field path.
+
 Orderability: sort_key() returns struct(t, d, s, bi, j) — Spark's struct
 ordering compares fields left-to-right, nulls-first within a field, and
 treats NaN as equal-to-NaN and greater than all doubles, which is the
@@ -25,6 +33,7 @@ gtype_util.c:1546-1560).
 from __future__ import annotations
 
 import json
+import operator
 import re
 from typing import Any
 
@@ -144,7 +153,11 @@ def _tag_types(gv: Column, *types: int) -> Column:
     return gv
 
 
-def gv_ref(c: Column | str, types: frozenset | None = None) -> Column:
+#: the gval field that holds each native payload kind's value
+_NATIVE_FIELD = {"long": "i", "double": "d", "string": "s", "bool": "b"}
+
+
+def gv_ref(c: Column | str, types: frozenset | None = None, native_kind: str | None = None) -> Column:
     """gval struct reference to a REAL column (e.g. a let-bound hidden
     projection column, plans/compiler.py Compiler._let). Field access
     goes through the GVal cache as a cheap ExtractValue-on-attribute
@@ -152,7 +165,9 @@ def gv_ref(c: Column | str, types: frozenset | None = None) -> Column:
     expression-size discipline above: composed temporal expressions
     share sub-trees as a JVM DAG, but Catalyst analysis walks them as a
     TREE, so path counts (and analysis time) multiply without a
-    physical projection boundary between producer and consumer."""
+    physical projection boundary between producer and consumer.
+    ``native_kind`` (the bound gval's native payload kind) keeps the
+    payload: the one field that holds it."""
     col = F.col(c) if isinstance(c, str) else c
     fields = {f: col[f] for f in ("t", "b", "i", "d", "s", "j")}
     if _ClassicColumn is not None and isinstance(col, _ClassicColumn):
@@ -160,6 +175,8 @@ def gv_ref(c: Column | str, types: frozenset | None = None) -> Column:
         gv._gval_fields = fields
         if types is not None:
             gv._gval_types = frozenset(types)
+        if native_kind is not None:
+            _with_native(gv, native_kind, fields[_NATIVE_FIELD[native_kind]])
         return gv
     return col
 
@@ -200,6 +217,19 @@ def let_scalar(col: Column) -> Column:
     return _SCALAR_BINDER(col)
 
 
+def _with_native(gv: Column, kind: str, c: Column) -> Column:
+    """Record gv's native payload: `c`, of native class `kind` (long,
+    double, string, bool), SQL-null exactly when gv is a gtype null."""
+    if isinstance(gv, GVal):
+        gv._gval_native = (kind, c)
+    return gv
+
+
+def native(gv: Column) -> tuple[str, Column] | None:
+    """(kind, payload) of a gval that carries a native payload, else None."""
+    return gv.__dict__.get("_gval_native") if isinstance(gv, GVal) else None
+
+
 def _t_or_null(c: Column, t: int) -> Column:
     """type tag: T_NULL when the payload is SQL-null, else t."""
     return F.when(c.isNull(), F.lit(T_NULL)).otherwise(F.lit(t))
@@ -210,18 +240,19 @@ def gv_null() -> Column:
 
 
 def gv_bool(c: Column | bool) -> Column:
-    c = F.lit(c) if isinstance(c, bool) else c
-    return _tag_types(_mk(_t_or_null(c, T_BOOL), b=c), T_BOOL)
+    c = (F.lit(c) if isinstance(c, bool) else c).cast("boolean")
+    return _with_native(_tag_types(_mk(_t_or_null(c, T_BOOL), b=c), T_BOOL), "bool", c)
 
 
 def gv_int(c: Column | int) -> Column:
-    c = F.lit(c) if isinstance(c, int) else c
-    return _tag_types(_mk(_t_or_null(c, T_NUMBER), i=c, d=c.cast("double")), T_NUMBER)
+    c = (F.lit(c) if isinstance(c, int) else c).cast("long")
+    out = _mk(_t_or_null(c, T_NUMBER), i=c, d=c.cast("double"))
+    return _with_native(_tag_types(out, T_NUMBER), "long", c)
 
 
 def gv_float(c: Column | float) -> Column:
-    c = F.lit(c) if isinstance(c, float) else c
-    return _tag_types(_mk(_t_or_null(c, T_NUMBER), d=c), T_NUMBER)
+    c = (F.lit(c) if isinstance(c, float) else c).cast("double")
+    return _with_native(_tag_types(_mk(_t_or_null(c, T_NUMBER), d=c), T_NUMBER), "double", c)
 
 
 def gv_num(i: Column, d: Column) -> Column:
@@ -231,8 +262,8 @@ def gv_num(i: Column, d: Column) -> Column:
 
 
 def gv_str(c: Column | str) -> Column:
-    c = F.lit(c) if isinstance(c, str) else c
-    return _tag_types(_mk(_t_or_null(c, T_STRING), s=c), T_STRING)
+    c = (F.lit(c) if isinstance(c, str) else c).cast("string")
+    return _with_native(_tag_types(_mk(_t_or_null(c, T_STRING), s=c), T_STRING), "string", c)
 
 
 def gv_timestamp(us: Column) -> Column:
@@ -401,51 +432,50 @@ def variant_atom(schema: str) -> str | None:
     return next((a for p, a in _PREFIX_ATOMS if schema.startswith(p)), None)
 
 
-def from_variant_atoms(x: Column, atoms, bind: bool = False) -> Column:
-    """VARIANT -> gval when the value's runtime type is STATICALLY known
-    to be among `atoms` (or missing / JSON null) — the knowledge comes
-    from the graph's property-type catalog, a superset of the atoms its
-    stored documents hold.
+#: Spark type each single-scalar catalog atom is extracted as
+_ATOM_SQL = {
+    "long": "bigint", "double": "double", "string": "string", "bool": "boolean",
+    "timestamp": "timestamp", "date": "date",
+}
+
+
+def from_variant_atoms(doc: Column, atoms, bind: bool = False, path: str = "$") -> Column:
+    """The value at `path` of VARIANT `doc` as a gval, when its runtime
+    type is STATICALLY known to be among `atoms` (or missing / JSON
+    null) — the knowledge comes from the graph's property-type catalog,
+    a superset of the atoms its stored documents hold.
 
     Produces exactly from_variant()'s result for those runtime types. A
-    SINGLE known atom needs no schema_of_variant dispatch at all: the
-    gval is a direct typed variant_get — the per-row CASE tower (9 type
-    probes x 6 fields) collapses to one extraction. Multiple atoms keep
-    the runtime dispatch but still tag the static type set so sort-key
-    and value-struct narrowing fire downstream. An EMPTY atom set means
-    the property never occurs on this label: the access is a constant
-    gtype null."""
+    SINGLE scalar atom needs no schema_of_variant dispatch at all: the
+    value is ONE typed extraction, try_variant_get(doc, path, <type>),
+    SQL-null exactly when the key is missing or JSON null, and every
+    gval field derives from it. For long, double, string and bool that
+    extraction is the gval's native payload, so a comparison with
+    another native operand is one SQL comparison (_native_cmp). Multiple
+    atoms keep the runtime dispatch but still tag the static type set so
+    sort-key and value-struct narrowing fire downstream. An EMPTY atom
+    set means the property never occurs on this label: the access is a
+    constant gtype null."""
     atoms = frozenset(a for a in atoms if a in ATOM_TAGS)
     if not atoms:
         return gv_null()
     if len(atoms) > 1:
         # mixed-type property: full runtime dispatch, static tags only
+        x = F.try_variant_get(doc, path, "variant")
         return _tag_types(from_variant(x, bind=bind), *(ATOM_TAGS[a] for a in atoms))
-    if bind:
-        x = let_scalar(x)
     a = next(iter(atoms))
-    tag = ATOM_TAGS[a]
-    isn = x.isNull() | F.is_variant_null(x)
-    t = F.when(isn, F.lit(T_NULL)).otherwise(F.lit(tag))
-    ok = ~isn
-    if a == "long":
-        i = F.when(ok, F.variant_get(x, "$", "bigint"))
-        out = _mk(t, i=i, d=i.cast("double"))
-    elif a == "double":
-        out = _mk(t, d=F.when(ok, F.variant_get(x, "$", "double")))
-    elif a == "string":
-        out = _mk(t, s=F.when(ok, F.variant_get(x, "$", "string")))
-    elif a == "bool":
-        out = _mk(t, b=F.when(ok, F.variant_get(x, "$", "boolean")))
-    elif a == "timestamp":
-        us = F.when(ok, F.unix_micros(F.variant_get(x, "$", "timestamp")))
-        out = _mk(t, i=us, d=us.cast("double"))
-    elif a == "date":
-        days = F.when(ok, F.unix_date(F.variant_get(x, "$", "date")).cast("long"))
-        out = _mk(t, i=days, d=days.cast("double") * US_PER_DAY)
-    else:  # array / object — container JSON text, exactly as from_variant
-        out = _mk(t, j=F.when(ok, x.cast("string")))
-    return _tag_types(out, tag)
+    v = F.try_variant_get(doc, path, _ATOM_SQL.get(a, "variant"))
+    if bind:
+        v = let_scalar(v)
+    if a == "timestamp":
+        return gv_timestamp(F.unix_micros(v))
+    if a == "date":
+        return gv_date(F.unix_date(v).cast("long"))
+    if a in _ATOM_SQL:
+        return {"long": gv_int, "double": gv_float, "string": gv_str, "bool": gv_bool}[a](v)
+    # array / object: container JSON text, exactly as from_variant
+    j = F.when(~(v.isNull() | F.is_variant_null(v)), v.cast("string"))
+    return _tag_types(_mk(_t_or_null(j, ATOM_TAGS[a]), j=j), ATOM_TAGS[a])
 
 
 def prop_access_variant(pv: Column, path: list[str], atoms=None) -> Column:
@@ -454,10 +484,9 @@ def prop_access_variant(pv: Column, path: list[str], atoms=None) -> Column:
     is a binary variant_get. ``atoms`` (a catalog atom set, see
     from_variant_atoms) skips the runtime type dispatch."""
     p = "$." + ".".join(path)
-    v = F.try_variant_get(pv, p, "variant")
     if atoms is not None:
-        return from_variant_atoms(v, atoms, bind=True)
-    return from_variant(v, bind=True)
+        return from_variant_atoms(pv, atoms, bind=True, path=p)
+    return from_variant(F.try_variant_get(pv, p, "variant"), bind=True)
 
 
 def element_access(gv: Column, idx: Column) -> Column:
@@ -966,14 +995,54 @@ def cmp_lt(a: Column, b: Column) -> Column:
 
 
 def _num_eq(a: Column, b: Column) -> Column:
-    # NaN = NaN true under orderability (compare_two_floats_orderability)
-    return (a.d == b.d) | (F.isnan(a.d) & F.isnan(b.d))
+    """Two integers compare as int64, any float pair through the double
+    image; NaN = NaN true under orderability
+    (compare_two_floats_orderability)."""
+    return F.when(a.i.isNotNull() & b.i.isNotNull(), a.i == b.i).otherwise(
+        (a.d == b.d) | (F.isnan(a.d) & F.isnan(b.d))
+    )
+
+
+#: gtype class of each native payload kind: `=` across classes is false
+_NATIVE_CLASS = {"long": T_NUMBER, "double": T_NUMBER, "string": T_STRING, "bool": T_BOOL}
+
+_SQL_CMP = {
+    "=": operator.eq, "<>": operator.ne, "<": operator.lt,
+    "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _native_cmp(a: Column, b: Column, op: str) -> Column | None:
+    """Comparison `op` of two operands that both carry a native payload,
+    as ONE SQL comparison of the payloads (SQL-null when either is a
+    gtype null): int with int as long, int with float as double, string
+    with string, and bool `=`/`<>` bool. `=`/`<>` of two different
+    scalar classes is a constant false/true for non-null operands.
+    Spark's double comparison is the reference's float orderability
+    (NaN equals NaN and sorts above every number, -0.0 = 0.0). None for
+    any other pair: the caller takes the gval field path."""
+    na, nb = native(a), native(b)
+    if na is None or nb is None:
+        return None
+    (ka, x), (kb, y) = na, nb
+    if ka != kb and {ka, kb} == {"long", "double"}:
+        x, y = x.cast("double"), y.cast("double")
+    elif _NATIVE_CLASS[ka] != _NATIVE_CLASS[kb]:
+        if op not in ("=", "<>"):
+            return None
+        return F.when(x.isNotNull() & y.isNotNull(), F.lit(op == "<>"))
+    elif ka == "bool" and op not in ("=", "<>"):
+        return None
+    return _SQL_CMP[op](x, y)
 
 
 def cmp_eq(a: Column, b: Column) -> Column:
     """Orderability equality (btree semantics: cross-type -> false, same
     type -> value compare; null = null -> true under orderability but the
     expression layer routes through 3VL wrappers where Cypher requires).
+
+    Two operands with native payloads compare as their payloads
+    (_native_cmp), with null = null true and null = value false.
 
     Arrays compare ELEMENT-WISE with numeric cross-type equality
     ([1] = [1.0] is true — compare_gtype_containers_orderability,
@@ -989,6 +1058,9 @@ def cmp_eq(a: Column, b: Column) -> Column:
     number branch alone — no string/bool/temporal/JSON comparisons of
     two null-literal fields (each of which Spark logs as a trivially
     true equals predicate)."""
+    eq = _native_cmp(a, b, "=")
+    if eq is not None:
+        return F.coalesce(eq, native(a)[1].isNull() & native(b)[1].isNull())
     ta, tb = gv_types(a), gv_types(b)
     shared = ta & tb
     ts_or_date = {T_TIMESTAMP, T_DATE}
@@ -1038,12 +1110,20 @@ def _cmp3vl(a: Column, b: Column, res: Column) -> Column:
     return gv_bool(F.when((a.t != T_NULL) & (b.t != T_NULL), res))
 
 
+def _compare(a: Column, b: Column, op: str, general) -> Column:
+    """Cypher comparison `op`: one SQL comparison of two native payloads
+    when _native_cmp has one (its SQL null is the gtype null), else
+    general() — the orderability result — under the 3VL wrapper."""
+    res = _native_cmp(a, b, op)
+    return gv_bool(res) if res is not None else _cmp3vl(a, b, general())
+
+
 def op_eq(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, cmp_eq(a, b))
+    return _compare(a, b, "=", lambda: cmp_eq(a, b))
 
 
 def op_neq(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, ~cmp_eq(a, b))
+    return _compare(a, b, "<>", lambda: ~cmp_eq(a, b))
 
 
 #: ranks whose payload rides the d axis in sort_key's k1
@@ -1073,8 +1153,20 @@ def _ord_cmp(a: Column, b: Column, pyop) -> Column:
     BY's total order at any nesting depth (gtype_util.c:233-360). The
     deep branch is only BUILT when both operands' static type sets
     admit containers, and the Arrow batch passes NULL for non-container
-    rows (no per-row python work for them)."""
+    rows (no per-row python work for them).
+
+    Two integers compare as int64: after the double image k1 ties (2^53
+    and 2^53 + 1 share one), the ki axis — set only when both sides are
+    integers — decides. An integer and a float compare as doubles.
+
+    Operands that both carry a native payload never get here from the
+    op_* operators when _native_cmp decides the pair (see _compare)."""
     shared = _rank_set(gv_types(a)) & _rank_set(gv_types(b))
+    both_int = (
+        (a.t == T_NUMBER) & (b.t == T_NUMBER) & a.i.isNotNull() & b.i.isNotNull()
+        if T_NUMBER in shared
+        else None
+    )
 
     def key(gv: Column) -> Column:
         fields = [
@@ -1082,6 +1174,8 @@ def _ord_cmp(a: Column, b: Column, pyop) -> Column:
         ]
         if shared & _D_AXIS_RANKS:
             fields.append(gv.d.alias("k1"))
+        if both_int is not None:
+            fields.append(F.when(both_int, gv.i).alias("ki"))
         if T_STRING in shared:
             fields.append(gv.s.alias("k2"))
         if T_BOOL in shared:
@@ -1103,19 +1197,19 @@ def _ord_cmp(a: Column, b: Column, pyop) -> Column:
 
 
 def op_lt(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, _ord_cmp(a, b, lambda x, y: x < y))
+    return _compare(a, b, "<", lambda: _ord_cmp(a, b, _SQL_CMP["<"]))
 
 
 def op_le(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, _ord_cmp(a, b, lambda x, y: x <= y))
+    return _compare(a, b, "<=", lambda: _ord_cmp(a, b, _SQL_CMP["<="]))
 
 
 def op_gt(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, _ord_cmp(a, b, lambda x, y: x > y))
+    return _compare(a, b, ">", lambda: _ord_cmp(a, b, _SQL_CMP[">"]))
 
 
 def op_ge(a: Column, b: Column) -> Column:
-    return _cmp3vl(a, b, _ord_cmp(a, b, lambda x, y: x >= y))
+    return _compare(a, b, ">=", lambda: _ord_cmp(a, b, _SQL_CMP[">="]))
 
 
 # ----------------------------------------------------------------- arithmetic
@@ -1160,6 +1254,19 @@ def _iv_json(m: Column, d: Column, u: Column) -> Column:
     )
 
 
+def _native_arith(a: Column, b: Column, op) -> Column | None:
+    """`+`/`-` of two native numbers, carrying the native payload: an int
+    when both are ints, computed as the general int branch computes it,
+    op(a.i, b.i) (so overflow behaves the same), else a float op(a.d,
+    b.d). None for any other pair."""
+    na, nb = native(a), native(b)
+    if na is None or nb is None or not {na[0], nb[0]} <= {"long", "double"}:
+        return None
+    if na[0] == nb[0] == "long":
+        return gv_int(op(a.i, b.i))
+    return gv_float(op(a.d, b.d))
+
+
 def op_add(a: Column, b: Column) -> Column:
     """`+` dispatch (gtype_ops.c:153-280): int+int->int, any float ->
     float, string + stringy -> concat, array concat (JSON splice).
@@ -1170,6 +1277,9 @@ def op_add(a: Column, b: Column) -> Column:
     combos interval+timestamp/date/time follow PG SQL semantics here;
     the reference's gtype operators only dispatch rhs==INTERVAL and
     error otherwise (gtype_ops.c)."""
+    nat = _native_arith(a, b, operator.add)
+    if nat is not None:
+        return nat
     ta, tb = gv_types(a), gv_types(b)
     nul = (a.t == T_NULL) | (b.t == T_NULL)
     f_num = T_NUMBER in ta and T_NUMBER in tb
@@ -1287,7 +1397,9 @@ def op_add(a: Column, b: Column) -> Column:
     # d references the i chain once (temporal payloads ride the µs axis)
     d_pairs = []
     if f_num:
-        d_pairs.append((~nul & bothnum, a.d + b.d))
+        # an int sum's d is the double image of the exact sum (the i
+        # branch, via otherwise), as _native_arith's gv_int result has
+        d_pairs.append((~nul & bothnum & ~is_int, a.d + b.d))
     if f_date_int or f_int_date:
         d_pairs.append((~nul & (date_int | int_date), (a.i + b.i).cast("double") * US_PER_DAY))
     d = _whens(d_pairs, otherwise=(i.cast("double") if i is not None else None))
@@ -1351,6 +1463,9 @@ def op_sub(a: Column, b: Column) -> Column:
     KNOWN DIVERGENCE (intentional superset): ts-ts, date-date, date±int
     and time-time follow PG SQL semantics; the reference's gtype `-`
     only dispatches rhs==INTERVAL and errors on the rest."""
+    nat = _native_arith(a, b, operator.sub)
+    if nat is not None:
+        return nat
     ta, tb = gv_types(a), gv_types(b)
     nul = (a.t == T_NULL) | (b.t == T_NULL)
     f_num = T_NUMBER in ta and T_NUMBER in tb
@@ -1472,7 +1587,7 @@ def op_sub(a: Column, b: Column) -> Column:
     # re-derived from the operands directly (cheap refs)
     d_pairs = []
     if f_num:
-        d_pairs.append((~nul & bothnum, a.d - b.d))
+        d_pairs.append((~nul & bothnum & ~is_int, a.d - b.d))
     if f_date_int:
         d_pairs.append((~nul & date_int, (a.i - b.i).cast("double") * US_PER_DAY))
     if f_date_date:
@@ -1640,6 +1755,11 @@ def op_pow(a: Column, b: Column) -> Column:
 
 
 def op_neg(a: Column) -> Column:
+    nat = native(a)
+    if nat is not None and nat[0] == "long":
+        return gv_int(-a.i)
+    if nat is not None and nat[0] == "double":
+        return gv_float(-a.d)
     isnum = a.t == T_NUMBER
     isiv = a.t == T_INTERVAL
     pa = interval_parts(a)
@@ -1655,12 +1775,21 @@ def op_neg(a: Column) -> Column:
 # -------------------------------------------------------------- boolean logic
 
 def truth(gv: Column) -> Column:
-    """gval -> SQL boolean for WHERE (null/non-bool -> false)."""
+    """gval -> SQL boolean for WHERE (null/non-bool -> false). A boolean
+    with a native payload (a comparison _native_cmp decided, AND/OR/NOT
+    of such) is coalesce(payload, false): the comparison itself."""
+    nat = native(gv)
+    if nat is not None and nat[0] == "bool":
+        return F.coalesce(nat[1], F.lit(False))
     return F.coalesce((gv.t == T_BOOL) & gv.b, F.lit(False))
 
 
 def _b3(gv: Column) -> Column:
-    """gval -> three-valued SQL boolean (gtype null -> SQL null)."""
+    """gval -> three-valued SQL boolean (gtype null -> SQL null); the
+    payload itself for a native boolean."""
+    nat = native(gv)
+    if nat is not None and nat[0] == "bool":
+        return nat[1]
     return F.when(gv.t == T_NULL, F.lit(None).cast("boolean")).otherwise(gv.t == T_BOOL).cast("boolean") & gv.b
 
 

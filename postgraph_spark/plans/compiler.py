@@ -379,9 +379,11 @@ class Compiler:
     def _let(self, col: Column) -> Column:
         name = f"__let{next(self._anon)}"
         self._lets.append((name, col))
-        # the ref keeps the bound value's statically-known type set so
-        # downstream operator dispatch can still prune branches
-        return G.gv_ref(name, types=G.gv_types(col))
+        # the ref keeps the bound value's statically-known type set and
+        # native payload so downstream operator dispatch can still prune
+        # branches and compare natively
+        nat = G.native(col)
+        return G.gv_ref(name, types=G.gv_types(col), native_kind=nat[0] if nat else None)
 
     def _let_scalar(self, col: Column) -> Column:
         """Function-kernel-internal let (G.let_scalar binder): binds a

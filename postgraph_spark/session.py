@@ -68,6 +68,11 @@ def get_spark(app_name: str = "postgraph_spark", *, cpus: int | None = None) -> 
         # VARIANT through the table schema, and parquet readers that
         # predate the VARIANT logical type can still open the files
         .config("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
+        # for the same readers: every file of a label stores pv as that
+        # one unshredded group. Shredding inferred per file from its own
+        # rows gives two appends with different documents two physical
+        # schemas in one label directory, which pyarrow refuses to read
+        .config("spark.sql.variant.inferShreddingSchema", "false")
         # per-Column-op call-site capture (error-message sugar) walks the
         # Python stack on EVERY F.* call — measurable driver overhead for
         # this engine's large generated expression trees

@@ -23,7 +23,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 #: durable write path with its one commit (Graph.commit), the unique
 #: constraints, label DDL and multi-hop/correlated MERGE that commit
 #: serves, the soundness of the property-type catalog the write path
-#: extends, and the read path's plan templates.
+#: extends, the read path's plan templates, and the agreement of native
+#: (catalog-typed) comparisons with the general gval path.
 #: Everything else is marked `full` (builder's pre-commit gate).
 _CORE_FILES = {
     "test_oracle_parity.py",
@@ -37,6 +38,7 @@ _CORE_FILES = {
     "test_merge_paths.py",
     "test_prop_catalog.py",
     "test_plan_templates.py",
+    "test_native_compare.py",
 }
 
 

@@ -317,3 +317,21 @@ def test_entity_values_golden(spark, entity_graph):
         eng = CypherEngine(spark, GraphCatalog(spark, root=root))
         eng.execute("USE GRAPH golden")
     assert _plain(eng.fetch("MATCH (n:v) RETURN n ORDER BY n")) == [(y5[0],), (_B,), (y5[1],)]
+
+
+def test_label_files_share_one_variant_schema(spark, root):
+    """Two appends to one label with different documents leave files that
+    any parquet reader can read as one table: pv is stored unshredded in
+    every file, not with a shredding schema inferred per file from its
+    own rows (pyarrow refuses a directory whose files disagree)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    eng = CypherEngine(spark, GraphCatalog(spark, root=root))
+    eng.execute("CREATE GRAPH shred")
+    eng.execute("USE GRAPH shred")
+    eng.execute("CREATE (:p {x: 1.5})")
+    eng.execute("CREATE (:p {})")
+    label_dir = os.path.join(_table_dir(os.path.join(root, "shred"), "vertices"), "label=p")
+    assert pq.read_table(label_dir).num_rows == 2

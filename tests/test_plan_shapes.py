@@ -310,6 +310,50 @@ def test_durable_point_lookup_parses_nothing_and_codegens(spark, tmp_path):
     assert "*(" in _physical(df), _physical(df)  # *(n) marks a codegen stage
 
 
+def _filters_reading(df, key: str) -> list[str]:
+    """The optimized plan's Filter conditions that read property `key`."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if "Filter " in ln and f"$.{key}" in ln]
+
+
+def test_typed_property_predicates_compare_natively(spark, tmp_path):
+    """A catalog-typed property compared with a literal reads the
+    property once, as one typed try_variant_get compared as a plain SQL
+    value: no variant-typed extraction and no CASE over the gval tag.
+    Both bounds of a range (the second an int `+` of two literals) read
+    it that way."""
+    from pyspark.sql import functions as F
+
+    from postgraph_spark.graph import GraphCatalog
+    from postgraph_spark.sources.loader import load_edges, load_vertices
+
+    eng = CypherEngine(spark, GraphCatalog(spark, root=str(tmp_path)))
+    eng.execute("CREATE GRAPH native_shapes")
+    eng.execute("USE GRAPH native_shapes")
+    g = eng.graph
+    customers = spark.range(1, 41).select(F.col("id").alias("c_custkey"))
+    orders = spark.range(1, 81).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 40 + 1).alias("o_custkey")
+    )
+    load_vertices(g, "customer", customers, id_col="c_custkey")
+    load_vertices(g, "orders", orders, id_col="o_orderkey", props_cols=["o_orderkey"])
+    load_edges(g, "placed", orders, "o_custkey", "o_orderkey", "customer", "orders", props_cols=[])
+
+    point = "MATCH (c:customer {c_custkey: 7}) RETURN count(c)"
+    ranged = (
+        "MATCH (c:customer)-[:placed]->(o:orders) "
+        "WHERE c.c_custkey >= 7 AND c.c_custkey < 7 + 25 "
+        "WITH c.c_custkey AS key, count(o) AS n ORDER BY n DESC, key LIMIT 5 RETURN key, n"
+    )
+    for text, reads in ((point, 1), (ranged, 2)):
+        (cond,) = _filters_reading(eng.execute(text), "c_custkey")
+        assert cond.count("$.c_custkey") == reads, cond
+        assert cond.count("$.c_custkey, LongType") == reads, cond
+        assert "CASE WHEN" not in cond and "VariantType" not in cond, cond
+    assert eng.fetch(point) == [(1,)]
+    assert eng.fetch(ranged) == [(k, 2) for k in range(7, 12)]
+
+
 def test_unwind_ends_selective_broadcast(engine):
     """The broadcast hint for a property-filtered comma-pattern side only
     holds while the accumulated rows ARE that filtered scan: after an
