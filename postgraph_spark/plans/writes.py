@@ -338,14 +338,14 @@ class WriteRunner:
             parts.setdefault(kind, []).append(df.select(
                 *[F.col(var)[f].alias(f) for f in schema.fieldNames()], (pos + i).alias("__pos")
             ).filter(F.col("id").isNotNull()))
-        removed, updated = {}, {}
+        # pinned: the commit's catalog job and candidate table both read them
+        updated = {}
         for kind, rows in parts.items():
             rows = reduce(DataFrame.unionByName, rows)
-            removed[kind] = rows.select("id")
             updated[kind] = rows.groupBy("id").agg(*[
                 F.max_by(f, "__pos").alias(f) for f in rows.columns if f not in ("id", "__pos")
-            ])
-        self.graph.commit(removed=removed, added=updated)
+            ]).localCheckpoint(eager=True)
+        self.graph.commit(removed={k: u.select("id") for k, u in updated.items()}, added=updated)
         return df
 
     # ------------------------------------------------------------- DELETE

@@ -629,8 +629,8 @@ def cypher_write_roundtrip(spark, sf_dir):
     """The WRITE path under the external oracle (round-6 verdict #9):
     label DDL + unique property constraint, batched CREATE, idempotent
     MERGE, SET, DELETE — each committed durably by graph.py
-    Graph.commit (new rows appended, touched label partitions
-    rewritten; catalog.json names the live snap-N) — then the graph
+    Graph.commit (each statement one new snap-N of its changed labels,
+    the rest hard-linked, published by one catalog.json rename) — then the graph
     is REOPENED from disk by a second catalog and aggregated through the
     Cypher read path. The oracle recomputes the post-write state
     directly from nation.parquet. Driver-side content is the 25-row

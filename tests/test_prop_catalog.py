@@ -6,8 +6,8 @@ A seeded write sequence runs on a typed in-memory graph, where after each
 statement a fixed set of reads must return the same rows with the catalog
 as without it (``g.prop_types = {}``). On a durable graph reopened after
 every statement, the reads must return those same rows. A SET whose
-table write fails after catalog.json is written must still read
-correctly after a reopen.
+table write fails after the catalog is extended in memory leaves the
+durable graph as it was before the statement.
 """
 
 import json
@@ -140,15 +140,18 @@ def test_durable_catalog_survives_reopen(spark, tmp_path, expected):
 
 
 def test_set_fault_after_catalog_write(spark, tmp_path, monkeypatch):
-    """SET commits catalog.json before it rewrites the table. When the
-    table write fails, the reopened graph holds the old rows under the
-    wider catalog — still a superset, so reads stay correct."""
+    """SET extends the in-memory catalog before it stages the table.
+    When the table write fails, nothing is published: catalog.json and
+    the reopened reads are those from before the SET. The writing
+    graph keeps its wider catalog, still a superset of what it stores."""
     root = str(tmp_path)
     g = Graph.from_rows(spark, "pc_fault", PEOPLE, KNOWS)
     g.durable_path = os.path.join(root, "pc_fault")
     g.persist()
     eng = reopen(spark, root, "pc_fault")
     before = checked_reads(eng, "initial")
+    with open(os.path.join(root, "pc_fault", "catalog.json")) as f:
+        stored = json.load(f)
 
     def failing_writer(df, schema):
         raise OSError("table write failed")
@@ -158,8 +161,10 @@ def test_set_fault_after_catalog_write(spark, tmp_path, monkeypatch):
         eng.execute("MATCH (p:person {name: 'bob'}) SET p.age = 'unknown'")
     monkeypatch.undo()
 
+    assert eng.graph.prop_atoms("person", "age") == frozenset({"long", "string"})
+    assert checked_reads(eng, "after the failed SET, writing engine") == before
     with open(os.path.join(root, "pc_fault", "catalog.json")) as f:
-        assert sorted(json.load(f)["prop_types"]["person"]["age"]) == ["long", "string"]
+        assert json.load(f) == stored
     reopened = reopen(spark, root, "pc_fault")
-    assert reopened.graph.prop_atoms("person", "age") == frozenset({"long", "string"})
+    assert reopened.graph.prop_atoms("person", "age") == frozenset({"long"})
     assert checked_reads(reopened, "after the failed SET") == before
